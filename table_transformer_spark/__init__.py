@@ -6,9 +6,10 @@ Layers:
 
 * :mod:`~table_transformer_spark.geometry` — box algebra (fitz.Rect
   semantics) usable both as numpy batch kernels and column expressions.
-* :mod:`~table_transformer_spark.kernels` — per-table deterministic
-  kernels (structure canonicalization, GriTS, text assembly) that run
-  inside ``applyInPandas`` groups.
+* :mod:`~table_transformer_spark.kernels` — deterministic kernels
+  (structure canonicalization, GriTS, text assembly) that run inside
+  the Arrow-batched pandas stages; structure canonicalization runs once
+  per batch over all of its tables.
 * :mod:`~table_transformer_spark.operators` — DataFrame-native operator
   algebra (iob theta-joins, argmax slotting windows, dedup, similarity
   search, text analysis) — the scalable path.

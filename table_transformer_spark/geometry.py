@@ -32,6 +32,10 @@ __all__ = [
     "np_pairwise_intersection",
     "np_iob_matrix",
     "np_iou_matrix",
+    "np_pair_iob",
+    "np_fitz_intersect",
+    "np_segment_hull",
+    "np_run_starts",
 ]
 
 _EMPTY = (0.0, 0.0, 0.0, 0.0)
@@ -216,6 +220,56 @@ def np_iob_matrix(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     out = np.zeros_like(inter)
     nz = areas > 0.0
     out[nz, :] = inter[nz, :] / areas[nz, None]
+    return out
+
+
+def np_pair_iob(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """iob(a_i, b_i) for two aligned (N, 4) arrays — intersection over
+    the area of a_i, 0 where a_i has no area."""
+    x0 = np.maximum(a[:, 0], b[:, 0])
+    y0 = np.maximum(a[:, 1], b[:, 1])
+    x1 = np.minimum(a[:, 2], b[:, 2])
+    y1 = np.minimum(a[:, 3], b[:, 3])
+    inter = np.maximum(x1 - x0, 0.0) * np.maximum(y1 - y0, 0.0)
+    areas = np_box_area(a)
+    return np.divide(inter, areas, out=np.zeros_like(inter),
+                     where=areas > 0.0)
+
+
+def _np_is_empty(boxes: np.ndarray) -> np.ndarray:
+    return (boxes[:, 0] >= boxes[:, 2]) | (boxes[:, 1] >= boxes[:, 3])
+
+
+def np_fitz_intersect(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Row-wise ``Box(a_i).intersect(b_i)``: an empty *b* replaces *a*,
+    an empty *a* is kept, otherwise componentwise max/min."""
+    out = np.concatenate([np.maximum(a[:, :2], b[:, :2]),
+                          np.minimum(a[:, 2:], b[:, 2:])], axis=1)
+    out = np.where(_np_is_empty(a)[:, None], a, out)
+    return np.where(_np_is_empty(b)[:, None], b, out)
+
+
+def np_run_starts(groups: np.ndarray) -> np.ndarray:
+    """Index of the first element of each run of equal values."""
+    if groups.size == 0:
+        return np.zeros(0, dtype=np.intp)
+    return np.concatenate(([0], np.flatnonzero(groups[1:] != groups[:-1]) + 1))
+
+
+def np_segment_hull(boxes: np.ndarray, groups: np.ndarray,
+                    n_groups: int) -> np.ndarray:
+    """(n_groups, 4) hulls of the boxes of each group with fitz
+    ``include_rect`` semantics: starting from the empty box, empty
+    members are skipped, so a group without a non-empty member gets
+    (0, 0, 0, 0).  *groups* must be non-decreasing."""
+    out = np.zeros((n_groups, 4))
+    keep = ~_np_is_empty(boxes)
+    boxes, groups = boxes[keep], groups[keep]
+    if groups.size:
+        starts = np_run_starts(groups)
+        ids = groups[starts]
+        out[ids, :2] = np.minimum.reduceat(boxes[:, :2], starts, axis=0)
+        out[ids, 2:] = np.maximum.reduceat(boxes[:, 2:], starts, axis=0)
     return out
 
 

@@ -1,12 +1,10 @@
-"""Per-table deterministic kernels (run inside applyInPandas groups)."""
+"""Deterministic kernels that run inside the Arrow-batched pandas stages
+(the fused ``mapInPandas`` page kernel, grouped ``applyInPandas``)."""
 
 from .slotting import (
-    filter_by_score,
     greedy_nms,
     nms_by_containment,
     order_by_score,
-    order_left_to_right,
-    order_top_to_bottom,
     slot_into_containers,
 )
 from .structure import objects_to_cells
@@ -15,12 +13,9 @@ from .text import assemble_text, text_inside_bbox
 __all__ = [
     "assemble_text",
     "text_inside_bbox",
-    "filter_by_score",
     "greedy_nms",
     "nms_by_containment",
     "order_by_score",
-    "order_left_to_right",
-    "order_top_to_bottom",
     "slot_into_containers",
     "objects_to_cells",
 ]

@@ -1,39 +1,48 @@
-"""Containment assignment + greedy suppression micro-kernels.
+"""Containment assignment + greedy suppression primitives.
 
-These are the order-sensitive per-table primitives of the reference
-pipeline (``src/postprocess.py:183-259,443-485``).  They run on tiny
-inputs (≤125 structure objects per table — the DETR query budget,
-``src/structure_config.json:23``) inside an ``applyInPandas`` group, so
-the O(n²) greedy scans are deliberate: greedy *order* is semantics
-(a hash-join reformulation would change results).
+These are the order-sensitive primitives of the reference pipeline
+(``src/postprocess.py:183-270,443-485``).  The table-structure chain
+(``kernels/structure.py``) runs them inside the fused ``mapInPandas``
+page kernel (``pipeline/fused.py``), once per pass over a chunk of an
+Arrow batch: the boxes of every table in the chunk sit in flat arrays
+tagged with the table's segment id, and :func:`segment_pairs`
+enumerates each table's (package, container) pairs, so one numpy pass
+serves all tables.
+Greedy *order* is semantics (a hash-join reformulation would change
+results): the segmented passes keep the per-table tie orders, and the
+inherently sequential greedy scan (:func:`greedy_nms`) stays a Python
+loop over tiny inputs (≤125 structure objects per table — the DETR
+query budget, ``src/structure_config.json:23``).
 
-The scalable DataFrame twins of the assignment step live in
-``table_transformer_spark.operators.slotting`` (argmax window over an
-iob theta-join).
+The dict-based one-table helpers (:func:`slot_into_containers`,
+:func:`nms_by_containment`) run on the same primitives.  The DataFrame
+twin of the assignment step is the argmax window over an iob
+theta-join in ``driver_queries.q_argmax_slot_assignment``.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from ..geometry import Box, np_box_area, np_iob_matrix, np_pairwise_intersection
-from .text import assemble_text
+from ..geometry import (
+    np_box_area,
+    np_pair_iob,
+    np_pairwise_intersection,
+    np_run_starts,
+)
 
 __all__ = [
     "order_by_score",
-    "order_left_to_right",
-    "order_top_to_bottom",
+    "segment_pairs",
+    "first_max",
+    "containment_pairs",
+    "best_containers",
     "slot_into_containers",
+    "greedy_nms_keep",
     "greedy_nms",
     "nms_by_containment",
     "drop_containers_without_text",
-    "filter_by_score",
 ]
-
-
-def filter_by_score(objects, threshold):
-    """Keep objects with score ≥ threshold (``src/postprocess.py:9-13``)."""
-    return [o for o in objects if o["score"] >= threshold]
 
 
 def order_by_score(objects, descending: bool = True):
@@ -46,101 +55,84 @@ def order_by_score(objects, descending: bool = True):
     return sorted(objects, key=lambda o: sign * o["score"])
 
 
-def order_left_to_right(objects):
-    """Sort by x-center ×2 (``src/postprocess.py:358-362``)."""
-    return sorted(objects, key=lambda o: o["bbox"][0] + o["bbox"][2])
+# --------------------------------------------------------------------------
+# segmented passes
+# --------------------------------------------------------------------------
+
+def segment_pairs(seg_a: np.ndarray, seg_b: np.ndarray, n_seg: int):
+    """All index pairs ``(i, j)`` with ``seg_a[i] == seg_b[j]``, ordered
+    by ``i`` and then ``j``.  *seg_b* must be non-decreasing (each
+    segment's b-rows contiguous); *seg_a* may be in any order."""
+    counts_b = np.bincount(seg_b, minlength=n_seg)
+    start_b = np.cumsum(counts_b) - counts_b
+    per_a = counts_b[seg_a]
+    first = np.cumsum(per_a) - per_a
+    ia = np.repeat(np.arange(len(seg_a)), per_a)
+    jb = np.repeat(start_b[seg_a] - first, per_a) + np.arange(ia.size)
+    return ia, jb
 
 
-def order_top_to_bottom(objects):
-    """Sort by y-center ×2 (``src/postprocess.py:365-369``)."""
-    return sorted(objects, key=lambda o: o["bbox"][1] + o["bbox"][3])
+def first_max(groups: np.ndarray, values: np.ndarray):
+    """Segment-wise ``np.argmax`` over pairs ordered by *groups*: for
+    each run of equal group ids, ``(group id, position of the run's
+    first maximum, the maximum)``.  The first occurrence is the
+    reference's stable ``sorted(key=-score)`` tie-break."""
+    if groups.size == 0:
+        empty = np.zeros(0, dtype=np.intp)
+        return empty, empty, np.zeros(0)
+    starts = np_run_starts(groups)
+    best = np.maximum.reduceat(values, starts)
+    counts = np.diff(starts, append=groups.size)
+    pos = np.where(values == np.repeat(best, counts),
+                   np.arange(groups.size), groups.size)
+    return groups[starts], np.minimum.reduceat(pos, starts), best
 
 
-def slot_into_containers(containers, packages, overlap_threshold: float = 0.5,
-                         unique_assignment: bool = True,
-                         forced_assignment: bool = False):
-    """Assign each package to the container(s) holding the largest
-    fraction of its area (``src/postprocess.py:208-248``).
-
-    Returns ``(per_container_package_indices, per_package_container_indices,
-    best_fraction_per_package)``.  Tie-break: ties in overlap fraction go
-    to the lower container index (the reference sorts candidates with a
-    stable descending sort, ``src/postprocess.py:232-238``).
-    """
-    by_container = [[] for _ in containers]
-    by_package = [[] for _ in packages]
-    best_scores = []
-
-    if not containers or not packages:
-        return by_container, by_package, best_scores
-
-    pkg_boxes = np.asarray([p["bbox"] for p in packages], dtype=float)
-    con_boxes = np.asarray([c["bbox"] for c in containers], dtype=float)
-    inter = np_pairwise_intersection(pkg_boxes, con_boxes)  # (P, C)
-    pkg_areas = np_box_area(pkg_boxes)
-    # reference divides unconditionally (tokens always have positive
-    # area there); guard degenerate packages to fraction 0 instead of
-    # crashing.
-    fractions = np.divide(
-        inter,
-        pkg_areas[:, None],
-        out=np.zeros_like(inter),
-        where=pkg_areas[:, None] > 0.0,
-    )
-
-    if unique_assignment:
-        # fully vectorized: np.argmax returns the FIRST maximum — the
-        # exact stable tie-break of the reference's sorted(key=-score)
-        bests = np.argmax(fractions, axis=1)
-        scores = fractions[np.arange(fractions.shape[0]), bests]
-        best_scores = scores.tolist()
-        take = (scores >= overlap_threshold) if not forced_assignment \
-            else np.ones_like(scores, dtype=bool)
-        for p in np.nonzero(take)[0]:
-            c = int(bests[p])
-            by_container[c].append(int(p))
-            by_package[p].append(c)
-        return by_container, by_package, best_scores
-
-    for p in range(fractions.shape[0]):
-        row = fractions[p]
-        # stable descending argsort == the reference's stable
-        # sorted(key=-score): ties keep container order
-        order = np.argsort(-row, kind="stable")
-        best = int(order[0])
-        best_scores.append(float(row[best]))
-        if forced_assignment or row[best] >= overlap_threshold:
-            by_container[best].append(p)
-            by_package[p].append(best)
-        for c in order[1:]:
-            if row[c] >= overlap_threshold:
-                by_container[int(c)].append(p)
-                by_package[p].append(int(c))
-            else:
-                break
-
-    return by_container, by_package, best_scores
+def containment_pairs(pkg_boxes, pkg_seg, con_boxes, con_seg, n_seg):
+    """Within-segment (package, container) pairs and the fraction of
+    each package's area inside the container.  The reference divides
+    unconditionally (tokens always have positive area there); zero-area
+    packages get fraction 0 instead of a crash."""
+    ip, jc = segment_pairs(pkg_seg, con_seg, n_seg)
+    return ip, jc, np_pair_iob(pkg_boxes[ip], con_boxes[jc])
 
 
-def greedy_nms(objects, match_criteria: str = "object2_overlap",
-               match_threshold: float = 0.05, keep_higher: bool = True):
-    """Greedy pairwise non-maxima suppression
-    (``src/postprocess.py:443-485``).
+def best_containers(ip, jc, frac, n_pkg: int):
+    """Per package: the container holding the largest fraction of it
+    (ties → the earlier container of the pair order) and that
+    fraction; ``(-1, 0.0)`` for a package without containers.  *ip*
+    must be grouped (the order :func:`segment_pairs` returns)."""
+    best_c = np.full(n_pkg, -1, dtype=np.intp)
+    best_f = np.zeros(n_pkg)
+    pkg, first, best = first_max(ip, frac)
+    best_c[pkg] = jc[first]
+    best_f[pkg] = best
+    return best_c, best_f
 
-    A later (lower-score) object is suppressed as soon as its overlap
-    metric against any earlier surviving object reaches the threshold.
+
+def drop_containers_without_text(ip, jc, frac, has_text, n_con: int):
+    """Keep-mask of the containers whose contained text is non-empty
+    (``src/postprocess.py:262-270``): a span is contained at iob ≥ 0.5.
+    Assembled text is empty exactly when every contained span is blank
+    or an integer superscript, so *has_text* (per package) settles it
+    without assembling any string."""
+    hit = (frac >= 0.5) & has_text[ip]
+    return np.bincount(jc[hit], minlength=n_con) > 0
+
+
+def greedy_nms_keep(boxes: np.ndarray, match_criteria: str = "object2_overlap",
+                    match_threshold: float = 0.05) -> list:
+    """Keep flags of greedy pairwise non-maxima suppression over boxes
+    already in score order (``src/postprocess.py:443-485``).
+
+    A later (lower-score) box is suppressed as soon as its overlap
+    metric against any earlier surviving box reaches the threshold.
     Division-by-zero pairs are skipped, matching the reference's
     swallow-and-continue ``except`` (``src/postprocess.py:481-483``).
     """
-    if not objects:
-        return []
-
-    objs = order_by_score(objects, descending=keep_higher)
-    boxes = np.asarray([o["bbox"] for o in objs], dtype=float)
     areas = np_box_area(boxes)
     inter = np_pairwise_intersection(boxes, boxes)
-
-    n = len(objs)
+    n = len(boxes)
     suppressed = [False] * n
     for j in range(1, n):
         for i in range(j):
@@ -159,8 +151,67 @@ def greedy_nms(objects, match_criteria: str = "object2_overlap",
             if inter[i, j] / denom >= match_threshold:
                 suppressed[j] = True
                 break
+    return [not s for s in suppressed]
 
-    return [o for o, s in zip(objs, suppressed) if not s]
+
+# --------------------------------------------------------------------------
+# one-table helpers over object dicts
+# --------------------------------------------------------------------------
+
+def _boxes(objects) -> np.ndarray:
+    return np.asarray([o["bbox"] for o in objects], dtype=float).reshape(-1, 4)
+
+
+def slot_into_containers(containers, packages, overlap_threshold: float = 0.5,
+                         unique_assignment: bool = True,
+                         forced_assignment: bool = False):
+    """Assign each package to the container(s) holding the largest
+    fraction of its area (``src/postprocess.py:208-248``).
+
+    Returns ``(per_container_package_indices, per_package_container_indices,
+    best_fraction_per_package)``.  Tie-break: ties in overlap fraction go
+    to the lower container index (the reference sorts candidates with a
+    stable descending sort, ``src/postprocess.py:232-238``).
+    """
+    by_container = [[] for _ in containers]
+    by_package = [[] for _ in packages]
+    if not containers or not packages:
+        return by_container, by_package, []
+
+    ip, jc, frac = containment_pairs(
+        _boxes(packages), np.zeros(len(packages), dtype=np.intp),
+        _boxes(containers), np.zeros(len(containers), dtype=np.intp), 1)
+    best_c, best_f = best_containers(ip, jc, frac, len(packages))
+    take = (best_f >= overlap_threshold) | forced_assignment
+    if unique_assignment:
+        for p in np.flatnonzero(take).tolist():
+            c = int(best_c[p])
+            by_container[c].append(p)
+            by_package[p].append(c)
+        return by_container, by_package, best_f.tolist()
+
+    # every further container at ≥ threshold, in the reference's stable
+    # descending order (the first one below the threshold ends the scan)
+    order = np.lexsort((jc, -frac, ip))
+    rank = np.arange(order.size) - np.repeat(
+        np.arange(0, order.size, len(containers)), len(containers))
+    for p, c, f, r in zip(ip[order].tolist(), jc[order].tolist(),
+                          frac[order].tolist(), rank.tolist()):
+        if (r == 0 and take[p]) or (r > 0 and f >= overlap_threshold):
+            by_container[c].append(p)
+            by_package[p].append(c)
+    return by_container, by_package, best_f.tolist()
+
+
+def greedy_nms(objects, match_criteria: str = "object2_overlap",
+               match_threshold: float = 0.05, keep_higher: bool = True):
+    """Greedy pairwise non-maxima suppression over object dicts
+    (``src/postprocess.py:443-485``); see :func:`greedy_nms_keep`."""
+    if not objects:
+        return []
+    objs = order_by_score(objects, descending=keep_higher)
+    keep = greedy_nms_keep(_boxes(objs), match_criteria, match_threshold)
+    return [o for o, k in zip(objs, keep) if k]
 
 
 def nms_by_containment(containers, packages, overlap_threshold: float = 0.5):
@@ -168,43 +219,15 @@ def nms_by_containment(containers, packages, overlap_threshold: float = 0.5):
     any of its packages, or when it owns none
     (``src/postprocess.py:183-205``).
 
-    Quirk preserved: the top-score container is never suppressed, even
-    when it contains no packages (the scan starts at index 1).
+    Each package has at most one owner (unique assignment), so no
+    container shares a package with an earlier one: the reference's
+    pairwise scan reduces to suppressing every container that owns no
+    package.  Quirk preserved: the top-score container is never
+    suppressed, even when it contains no packages (the scan starts at
+    index 1).
     """
     ordered = order_by_score(containers)
     owned, _, _ = slot_into_containers(
-        ordered, packages, overlap_threshold=overlap_threshold,
-        unique_assignment=True, forced_assignment=False)
-
-    n = len(ordered)
-    suppressed = [False] * n
-    for j in range(1, n):
-        mine = set(owned[j])
-        if not mine:
-            suppressed[j] = True
-        for i in range(j):
-            if not suppressed[i] and mine & set(owned[i]):
-                suppressed[j] = True
-    return [o for o, s in zip(ordered, suppressed) if not s]
-
-
-def drop_containers_without_text(spans, objects):
-    """Remove objects whose contained text is empty, in place
-    (``src/postprocess.py:262-270``).
-
-    The span→object containment test is batched into one iob matrix
-    (identical arithmetic to the scalar ``overlaps`` predicate)."""
-    if not objects:
-        return
-    if not spans:
-        # no spans ⇒ every object's text is empty ⇒ all removed
-        objects.clear()
-        return
-
-    span_boxes = np.asarray([s["bbox"] for s in spans], dtype=float)
-    obj_boxes = np.asarray([o["bbox"] for o in objects], dtype=float)
-    contained = np_iob_matrix(span_boxes, obj_boxes) >= 0.5
-    for j, obj in enumerate(list(objects)):
-        subset = [spans[i] for i in np.nonzero(contained[:, j])[0]]
-        if not assemble_text(subset, remove_integer_superscripts=True).strip():
-            objects.remove(obj)
+        ordered, packages, overlap_threshold=overlap_threshold)
+    return [o for j, (o, mine) in enumerate(zip(ordered, owned))
+            if j == 0 or mine]

@@ -1,155 +1,235 @@
 """Table-structure canonicalization: model objects → consistent cell grid.
 
-This is the deterministic per-table kernel of the pipeline — the faithful
+This is the deterministic kernel of the pipeline — the faithful
 re-expression of the reference chain ``objects_to_cells`` =
 ``objects_to_table_structures`` + ``table_structure_to_cells``
-(``src/postprocess.py:61-843``).  It runs inside
-``groupBy(doc_id, table_id).applyInPandas`` on the Spark side; inputs are
-small (≤125 structure objects per table), so the sequential greedy passes
-match the reference bit-for-bit while Spark parallelizes *across* tables.
+(``src/postprocess.py:61-843``).  The fused ``mapInPandas`` page kernel
+(``pipeline/fused.py``) runs it once per pass over a chunk of an Arrow
+batch, on all tables of the chunk at once.  A :class:`TableBatch` lays
+the tables' tokens and structure objects out as flat arrays tagged with
+each table's segment id.  Each geometric step is then one segmented
+numpy pass over the whole batch: containment slotting, the
+empty-container test, the table hull, the grid lattice, supercell
+coverage, the hull dilation and the text-extent refit.  Python loops
+remain only for greedy NMS (headers, and the rows/columns of tables
+without tokens), the supercell steps (alignment, NMS and the header
+tree, per table that has supercells — under one per table) and
+per-cell text assembly.  :func:`objects_to_cells` is the one-table call
+into the same kernel.
 
 Field conventions follow the ``postprocess.py`` twin of the chain:
 rows carry ``header`` (bool), supercells carry ``subheader`` (bool,
-True = projected row header).  All mutation quirks of the reference
-(shared-dict rewrites, in-place list removal, greedy order) are
-reproduced via explicit copies + identical operation order.
+True = projected row header).  Every tie order and fitz empty-box rule
+of the reference is kept; the kernel never mutates its inputs.
 """
 
 from __future__ import annotations
 
-import copy
+from dataclasses import dataclass
 
 import numpy as np
 
 from ..geometry import (
     Box,
-    box_area,
-    box_intersect,
-    iob,
-    np_box_area,
-    np_pairwise_intersection,
+    np_fitz_intersect,
+    np_pair_iob,
+    np_run_starts,
+    np_segment_hull,
 )
 from .slotting import (
+    best_containers,
+    containment_pairs,
     drop_containers_without_text,
-    filter_by_score,
-    greedy_nms,
-    nms_by_containment,
+    first_max,
+    greedy_nms_keep,
     order_by_score,
-    order_left_to_right,
-    order_top_to_bottom,
+    segment_pairs,
     slot_into_containers,
 )
-from .text import assemble_text
+from .text import assemble_text, span_has_text
 
 __all__ = [
+    "LABEL_CODES",
+    "TableBatch",
+    "TableCells",
     "objects_to_cells",
+    "objects_to_cells_batch",
     "build_table_structures",
     "structures_to_cells",
-    "refine_rows",
-    "refine_columns",
-    "align_rows",
-    "align_columns",
-    "align_headers",
     "align_supercells",
     "nms_supercells",
     "header_supercell_tree",
     "shrink_supercell_overlap",
+    # one-table primitive, re-exported with the chain it belongs to
+    "slot_into_containers",
 ]
 
-
-# --------------------------------------------------------------------------
-# row/column refinement (src/postprocess.py:147-180)
-# --------------------------------------------------------------------------
-
-def refine_rows(rows, tokens, score_threshold=None):
-    """Containment-NMS + empty-drop when tokens exist, plain NMS
-    otherwise; then top-to-bottom order (``src/postprocess.py:147-162``)."""
-    if len(tokens) > 0:
-        rows = nms_by_containment(rows, tokens, overlap_threshold=0.5)
-        drop_containers_without_text(tokens, rows)
-    else:
-        rows = greedy_nms(rows, match_criteria="object2_overlap",
-                          match_threshold=0.5, keep_higher=True)
-    if len(rows) > 1:
-        rows = order_top_to_bottom(rows)
-    return rows
+_LABELS = ("table", "table row", "table column", "table column header",
+           "table spanning cell", "table projected row header")
+# structure label → integer code; labels the chain ignores map to -1
+LABEL_CODES = {name: code for code, name in enumerate(_LABELS)}
+TABLE, ROW, COLUMN, HEADER, SPANNING, PROJECTED = range(len(_LABELS))
 
 
-def refine_columns(columns, tokens, score_threshold=None):
-    """Column twin of :func:`refine_rows`; bare-NMS threshold is 0.25
-    (``src/postprocess.py:165-180``)."""
-    if len(tokens) > 0:
-        columns = nms_by_containment(columns, tokens, overlap_threshold=0.5)
-        drop_containers_without_text(tokens, columns)
-    else:
-        columns = greedy_nms(columns, match_criteria="object2_overlap",
-                             match_threshold=0.25, keep_higher=True)
-    if len(columns) > 1:
-        columns = order_left_to_right(columns)
-    return columns
+def _boxes(items) -> np.ndarray:
+    return np.asarray([o["bbox"] for o in items], dtype=float).reshape(-1, 4)
 
 
-# --------------------------------------------------------------------------
-# alignment (src/postprocess.py:372-401,488-639)
-# --------------------------------------------------------------------------
-
-def align_rows(rows, table_bbox):
-    """Snap every row's x-extent to the table bbox
-    (``src/postprocess.py:388-401``)."""
-    for row in rows:
-        row["bbox"][0] = table_bbox[0]
-        row["bbox"][2] = table_bbox[2]
-    return rows
+def _starts(sizes: np.ndarray) -> np.ndarray:
+    return np.cumsum(sizes) - sizes
 
 
-def align_columns(columns, table_bbox):
-    """Snap every column's y-extent to the table bbox
-    (``src/postprocess.py:372-385``)."""
-    for col in columns:
-        col["bbox"][1] = table_bbox[1]
-        col["bbox"][3] = table_bbox[3]
-    return columns
-
-
-def align_headers(headers, rows):
-    """Header = convex hull of the maximal *prefix* run of rows that
-    overlap any header box ≥50% of the row height
-    (``src/postprocess.py:488-535``).
-
-    Quirks preserved: the run is forced to start at row 0 by prepending
-    ``range(first+1)``; duplicate row numbers (several header boxes over
-    one row) terminate the run early because the scan demands strictly
-    consecutive numbers.
-    """
-    for row in rows:
-        row["header"] = False
-
-    hit_rows = []
-    for header in headers:
-        for row_num, row in enumerate(rows):
-            row_height = row["bbox"][3] - row["bbox"][1]
-            overlap = (min(row["bbox"][3], header["bbox"][3])
-                       - max(row["bbox"][1], header["bbox"][1]))
-            if row_height > 0 and overlap / row_height >= 0.5:
-                hit_rows.append(row_num)
-
-    if not hit_rows:
+def _runs(seg: np.ndarray):
+    """(segment id, start, end) of each run of equal ids."""
+    if seg.size == 0:
         return []
+    starts = np_run_starts(seg)
+    ends = np.append(starts[1:], seg.size)
+    return zip(seg[starts].tolist(), starts.tolist(), ends.tolist())
 
-    if hit_rows[0] > 0:
-        hit_rows = list(range(hit_rows[0] + 1)) + hit_rows
 
-    hull = Box()
-    last = -1
-    for row_num in hit_rows:
-        if row_num != last + 1:
-            break  # stop at the first gap: single top header only
-        rows[row_num]["header"] = True
-        hull.include_rect(rows[row_num]["bbox"])
-        last = row_num
+@dataclass
+class TableBatch:
+    """The tables of one batch as flat arrays.  Token and object rows
+    carry the segment id (0 .. n_tables-1) of their table; each table's
+    rows are contiguous, in segment order, and keep their input order.
+    Boxes are in table-crop coordinates."""
 
-    return [{"bbox": hull.tolist()}]
+    n_tables: int
+    tok_seg: np.ndarray
+    tok_box: np.ndarray
+    tok_spans: list          # reading-order span mappings of the tokens
+    obj_seg: np.ndarray
+    obj_box: np.ndarray
+    obj_label: np.ndarray    # LABEL_CODES values
+    obj_score: np.ndarray
+    objects: list | None = None  # source dicts (one-table structures output)
 
+    @classmethod
+    def from_tables(cls, tables) -> "TableBatch":
+        """Batch from ``[(objects, tokens), ...]`` dict lists."""
+        objects = [o for objs, _ in tables for o in objs]
+        tokens = [t for _, toks in tables for t in toks]
+        seg = np.arange(len(tables))
+        return cls(
+            n_tables=len(tables),
+            tok_seg=np.repeat(seg, [len(toks) for _, toks in tables]),
+            tok_box=_boxes(tokens),
+            tok_spans=tokens,
+            obj_seg=np.repeat(seg, [len(objs) for objs, _ in tables]),
+            obj_box=_boxes(objects),
+            obj_label=np.array([LABEL_CODES.get(o["label"], -1)
+                                for o in objects], dtype=np.intp),
+            obj_score=np.array([o["score"] for o in objects], dtype=float),
+            objects=objects)
+
+
+@dataclass
+class Structures:
+    """Refined rows and columns of every table (tables in segment order,
+    rows top to bottom, columns left to right) plus the aligned
+    supercells of the tables that have any."""
+
+    rows: np.ndarray         # object index of each surviving row
+    row_seg: np.ndarray
+    row_box: np.ndarray      # snapped to the table's column extent
+    row_header: np.ndarray
+    columns: np.ndarray
+    col_seg: np.ndarray
+    col_box: np.ndarray      # snapped to the table's row extent
+    refined: np.ndarray      # per table: ≥1 row and >1 column
+    supercells: dict         # segment id → supercell dicts
+
+    def __post_init__(self):
+        n = self.refined.size
+        self.n_rows = np.bincount(self.row_seg, minlength=n)
+        self.n_cols = np.bincount(self.col_seg, minlength=n)
+        self.row_start = _starts(self.n_rows)
+        self.col_start = _starts(self.n_cols)
+
+
+@dataclass
+class TableCells:
+    """Cells of every table, each table's cells contiguous and in kernel
+    order: non-covered grid cells column-major, then merged supercells.
+    Row and column numbers are per table, ascending."""
+
+    confidence: list         # per table; 0 when it has no cells or tokens
+    start: np.ndarray        # (n_tables + 1,) cell offsets
+    bbox: np.ndarray
+    row_nums: list
+    column_nums: list
+    header: np.ndarray
+    subheader: np.ndarray
+    text: list
+    cell_tokens: list        # token indices of each cell, in token order
+    batch: TableBatch
+    structures: Structures
+    row_box: np.ndarray      # rows/columns refit to the text extents
+    col_box: np.ndarray
+
+    def packed(self) -> list:
+        """Per table: ``(cell_num, bbox, row_nums, column_nums,
+        is_column_header, is_projected_row_header, cell_text)`` tuples
+        ordered by (min row, min col) — the ``cells_to_html`` order
+        (``src/inference.py:541-542``)."""
+        first_row = [r[0] for r in self.row_nums]
+        first_col = [c[0] for c in self.column_nums]
+        seg = np.repeat(np.arange(len(self.confidence)), np.diff(self.start))
+        order = np.lexsort((first_col, first_row, seg)).tolist()
+        bbox = self.bbox.tolist()
+        header = self.header.tolist()
+        subheader = self.subheader.tolist()
+        start = self.start.tolist()
+        return [[(i, bbox[k], self.row_nums[k], self.column_nums[k],
+                  header[k], subheader[k], self.text[k])
+                 for i, k in enumerate(order[a:b])]
+                for a, b in zip(start[:-1], start[1:])]
+
+    def table_cells(self, i: int) -> list:
+        """Cell dicts of table *i* in kernel order."""
+        spans = self.batch.tok_spans
+        return [{"bbox": self.bbox[k].tolist(),
+                 "column_nums": list(self.column_nums[k]),
+                 "row_nums": list(self.row_nums[k]),
+                 "header": bool(self.header[k]),
+                 "subheader": bool(self.subheader[k]),
+                 "cell_text": self.text[k],
+                 "spans": [spans[t] for t in self.cell_tokens[k]]}
+                for k in range(self.start[i], self.start[i + 1])]
+
+    def table_structures(self, i: int) -> dict:
+        """{rows, columns, headers, supercells} of table *i*: rows and
+        columns refit to the text extents, the header as the hull of the
+        header rows (refined tables) or the raw header objects."""
+        batch, st = self.batch, self.structures
+        objects = batch.objects or [{} for _ in range(len(batch.obj_seg))]
+        in_table = np.flatnonzero(batch.obj_seg == i)
+        rows = np.flatnonzero(st.row_seg == i)
+        cols = np.flatnonzero(st.col_seg == i)
+        structures = {
+            "rows": [{**objects[st.rows[r]], "bbox": self.row_box[r].tolist(),
+                      "header": bool(st.row_header[r])} for r in rows],
+            "columns": [{**objects[st.columns[c]],
+                         "bbox": self.col_box[c].tolist()} for c in cols],
+        }
+        if st.refined[i]:
+            hull = Box()
+            for r in rows[st.row_header[rows]]:
+                hull.include_rect(st.row_box[r])
+            structures["headers"] = ([{"bbox": hull.tolist()}]
+                                     if st.row_header[rows].any() else [])
+        else:
+            structures["headers"] = [
+                dict(objects[o])
+                for o in in_table[batch.obj_label[in_table] == HEADER]]
+        structures["supercells"] = st.supercells.get(i, [])
+        return structures
+
+
+# --------------------------------------------------------------------------
+# supercell alignment, per table (src/postprocess.py:538-689)
+# --------------------------------------------------------------------------
 
 def align_supercells(supercells, rows, columns):
     """Snap each spanning cell to the rows/columns it overlaps ≥50% of,
@@ -335,311 +415,377 @@ def header_supercell_tree(supercells):
                 break
 
 
+
+
 # --------------------------------------------------------------------------
-# structure assembly (src/postprocess.py:83-144,404-440)
+# objects → structures (src/postprocess.py:83-180,372-440,488-535)
 # --------------------------------------------------------------------------
 
-def _refine_structures(table_bbox, structures, tokens, class_thresholds):
-    """Threshold + NMS + alignment over headers and supercells
-    (``src/postprocess.py:404-440``)."""
-    rows = structures["rows"]
-    columns = structures["columns"]
-
-    headers = filter_by_score(structures["headers"],
-                              class_thresholds["table column header"])
-    headers = greedy_nms(headers)
-    headers = align_headers(headers, rows)
-
-    plain = [sc for sc in structures["supercells"] if not sc["subheader"]]
-    projected = [sc for sc in structures["supercells"] if sc["subheader"]]
-    plain = filter_by_score(plain, class_thresholds["table spanning cell"])
-    projected = filter_by_score(projected,
-                                class_thresholds["table projected row header"])
-    supercells = plain + projected
-    # align before NMS: alignment snaps supercells onto the grid first,
-    # so remaining overlap is resolved on grid coordinates
-    supercells = align_supercells(supercells, rows, columns)
-    supercells = nms_supercells(supercells)
-
-    header_supercell_tree(supercells)
-
-    structures["rows"] = rows
-    structures["columns"] = columns
-    structures["headers"] = headers
-    structures["supercells"] = supercells
-    return structures
+def _greedy_nms_segments(boxes, seg, match_threshold) -> np.ndarray:
+    """Keep-mask of :func:`greedy_nms_keep` run per segment over boxes in
+    (segment, score) order, object2-overlap criterion."""
+    keep = np.ones(seg.size, dtype=bool)
+    for _, a, b in _runs(seg):
+        if b - a > 1:
+            keep[a:b] = greedy_nms_keep(boxes[a:b], "object2_overlap",
+                                        match_threshold)
+    return keep
 
 
-def build_table_structures(table_object, objects_in_table, tokens_in_table,
-                           class_thresholds):
-    """Model objects → consistent {rows, columns, headers, supercells}
-    (``src/postprocess.py:83-144``).  Labels are strings here (the
-    reference routes int labels through a class-name list).
+def _refine(batch, objs, axis, nms_threshold, has_text) -> np.ndarray:
+    """``refine_rows`` / ``refine_columns`` (``src/postprocess.py:147-180``)
+    over every table: containment NMS plus the empty-container drop on
+    tables with tokens, plain greedy NMS on the others, then a stable
+    sort by box center along *axis*.  Returns the surviving object
+    indices grouped by table."""
+    seg, box = batch.obj_seg, batch.obj_box
+    objs = objs[np.lexsort((-batch.obj_score[objs], seg[objs]))]
+    oseg = seg[objs]
+    with_tokens = np.bincount(batch.tok_seg, minlength=batch.n_tables) > 0
+    keep = np.ones(objs.size, dtype=bool)
+
+    # containment NMS: each token's best container (ties → higher
+    # score) owns it; every container but each table's first must own a
+    # token (see slotting.nms_by_containment)
+    con = np.flatnonzero(with_tokens[oseg])
+    con_seg = oseg[con]
+    ip, jc, frac = containment_pairs(batch.tok_box, batch.tok_seg,
+                                     box[objs[con]], con_seg,
+                                     batch.n_tables)
+    best_c, best_f = best_containers(ip, jc, frac, batch.tok_seg.size)
+    owns = np.bincount(best_c[best_f >= 0.5], minlength=con.size) > 0
+    first = np.zeros(con.size, dtype=bool)
+    first[np_run_starts(con_seg)] = True
+    keep[con] = (first | owns) & drop_containers_without_text(
+        ip, jc, frac, has_text, con.size)
+
+    plain = np.flatnonzero(~with_tokens[oseg])
+    keep[plain] = _greedy_nms_segments(box[objs[plain]], oseg[plain],
+                                       nms_threshold)
+
+    objs, oseg = objs[keep], oseg[keep]
+    center = box[objs, axis] + box[objs, axis + 2]
+    return objs[np.lexsort((center, oseg))]
+
+
+def _header_rows(batch, st, class_thresholds) -> np.ndarray:
+    """``align_headers`` (``src/postprocess.py:488-535``) for the refined
+    tables: header flags of their rows.
+
+    The score-filtered, NMS'd header boxes hit every row they cover
+    ≥50% of the row height; the hits, listed header by header, feed the
+    reference's scan.  Quirks preserved: the run is forced to start at
+    row 0 by prepending ``range(first+1)`` — so a first hit below row 0
+    makes rows 0..first the header — and a duplicate or skipped row
+    number ends the run.
     """
-    rows = [o for o in objects_in_table if o["label"] == "table row"]
-    columns = [o for o in objects_in_table if o["label"] == "table column"]
-    headers = [o for o in objects_in_table if o["label"] == "table column header"]
-    supercells = [o for o in objects_in_table if o["label"] == "table spanning cell"]
-    for sc in supercells:
-        sc["subheader"] = False
-    projected = [o for o in objects_in_table
-                 if o["label"] == "table projected row header"]
-    for sc in projected:
-        sc["subheader"] = True
-    supercells += projected
+    seg, box, score = batch.obj_seg, batch.obj_box, batch.obj_score
+    heads = np.flatnonzero(
+        (batch.obj_label == HEADER)
+        & (score >= class_thresholds["table column header"])
+        & st.refined[seg])
+    heads = heads[np.lexsort((-score[heads], seg[heads]))]
+    heads = heads[_greedy_nms_segments(box[heads], seg[heads], 0.05)]
 
-    for row in rows:
-        row["header"] = any(iob(row["bbox"], h["bbox"]) >= 0.5 for h in headers)
+    ih, jr = segment_pairs(seg[heads], st.row_seg, batch.n_tables)
+    rows, hb = st.row_box[jr], box[heads[ih]]
+    height = rows[:, 3] - rows[:, 1]
+    overlap = np.minimum(rows[:, 3], hb[:, 3]) - np.maximum(rows[:, 1], hb[:, 1])
+    frac = np.divide(overlap, height, out=np.zeros_like(overlap),
+                     where=height > 0)
+    hit = (height > 0) & (frac >= 0.5)
+    hit_seg = seg[heads[ih[hit]]]
+    hit_row = jr[hit] - st.row_start[hit_seg]
 
-    rows = refine_rows(rows, tokens_in_table, class_thresholds["table row"])
-    columns = refine_columns(columns, tokens_in_table,
-                             class_thresholds["table column"])
+    n_header = np.zeros(batch.n_tables, dtype=np.intp)
+    if hit_seg.size:
+        starts = np_run_starts(hit_seg)
+        counts = np.diff(starts, append=hit_seg.size)
+        rel = np.arange(hit_seg.size) - np.repeat(starts, counts)
+        run = np.minimum.reduceat(
+            np.where(hit_row != rel, rel, hit_seg.size), starts)
+        first = hit_row[starts]
+        n_header[hit_seg[starts]] = np.where(first > 0, first + 1,
+                                             np.minimum(run, counts))
+    local = np.arange(st.row_seg.size) - st.row_start[st.row_seg]
+    return local < n_header[st.row_seg]
 
-    # shrink the table bbox to the hull of the surviving rows/columns
-    row_hull = Box()
-    for row in rows:
-        row_hull.include_rect(row["bbox"])
-    col_hull = Box()
-    for col in columns:
-        col_hull.include_rect(col["bbox"])
-    table_object["row_column_bbox"] = [col_hull[0], row_hull[1],
-                                       col_hull[2], row_hull[3]]
-    table_object["bbox"] = table_object["row_column_bbox"]
 
-    columns = align_columns(columns, table_object["row_column_bbox"])
-    rows = align_rows(rows, table_object["row_column_bbox"])
+def _supercells(batch, st, class_thresholds) -> dict:
+    """Supercell dicts per table: spanning cells first, then projected
+    row headers, each in input order.  On refined tables they are
+    score-filtered, then run through ``align_supercells`` →
+    ``nms_supercells`` → ``header_supercell_tree``
+    (``src/postprocess.py:404-440``); other tables keep them raw, as
+    the reference does."""
+    label, seg, score = batch.obj_label, batch.obj_seg, batch.obj_score
+    thresholds = np.where(label == SPANNING,
+                          class_thresholds["table spanning cell"],
+                          class_thresholds["table projected row header"])
+    scs = np.flatnonzero(((label == SPANNING) | (label == PROJECTED))
+                         & (~st.refined[seg] | (score >= thresholds)))
+    scs = scs[np.lexsort((label[scs] == PROJECTED, seg[scs]))]
+    out = {}
+    for s, a, b in _runs(seg[scs]):
+        supercells = [
+            {**(batch.objects[o] if batch.objects
+                else {"label": _LABELS[label[o]]}),
+             "score": float(score[o]), "bbox": batch.obj_box[o].tolist(),
+             "subheader": bool(label[o] == PROJECTED)}
+            for o in scs[a:b].tolist()]
+        if st.refined[s]:
+            r0, c0 = st.row_start[s], st.col_start[s]
+            rows = [{"bbox": bb, "header": h} for bb, h in zip(
+                st.row_box[r0:r0 + st.n_rows[s]].tolist(),
+                st.row_header[r0:r0 + st.n_rows[s]].tolist())]
+            cols = [{"bbox": bb}
+                    for bb in st.col_box[c0:c0 + st.n_cols[s]].tolist()]
+            supercells = nms_supercells(
+                align_supercells(supercells, rows, cols))
+            header_supercell_tree(supercells)
+        if supercells:
+            out[s] = supercells
+    return out
 
-    structures = {"rows": rows, "columns": columns,
-                  "headers": headers, "supercells": supercells}
 
-    if len(rows) > 0 and len(columns) > 1:
-        structures = _refine_structures(table_object["bbox"], structures,
-                                        tokens_in_table, class_thresholds)
+def build_table_structures(batch: TableBatch, class_thresholds) -> Structures:
+    """Model objects → consistent rows, columns and supercells for every
+    table of the batch (``src/postprocess.py:83-144``).  Row and column
+    score thresholds are unused, as in the reference."""
+    n = batch.n_tables
+    seg, box, label = batch.obj_seg, batch.obj_box, batch.obj_label
+    has_text = np.fromiter(map(span_has_text, batch.tok_spans), dtype=bool,
+                           count=len(batch.tok_spans))
+    rows = _refine(batch, np.flatnonzero(label == ROW), 1, 0.5, has_text)
+    cols = _refine(batch, np.flatnonzero(label == COLUMN), 0, 0.25, has_text)
+    row_seg, col_seg = seg[rows], seg[cols]
 
-    return structures
+    # a row is a header row when ≥50% of it lies in any header box
+    heads = np.flatnonzero(label == HEADER)
+    ir, jh = segment_pairs(row_seg, seg[heads], n)
+    hit = np_pair_iob(box[rows[ir]], box[heads[jh]]) >= 0.5
+    row_header = np.bincount(ir[hit], minlength=rows.size) > 0
+
+    # shrink the table to the hull of its rows/columns, then snap the
+    # rows to its x-extent and the columns to its y-extent
+    row_hull = np_segment_hull(box[rows], row_seg, n)
+    col_hull = np_segment_hull(box[cols], col_seg, n)
+    row_box, col_box = box[rows], box[cols]
+    row_box[:, [0, 2]] = col_hull[row_seg][:, [0, 2]]
+    col_box[:, [1, 3]] = row_hull[col_seg][:, [1, 3]]
+
+    refined = ((np.bincount(row_seg, minlength=n) > 0)
+               & (np.bincount(col_seg, minlength=n) > 1))
+    st = Structures(rows, row_seg, row_box, row_header, cols, col_seg,
+                    col_box, refined, {})
+    st.row_header = np.where(refined[row_seg],
+                             _header_rows(batch, st, class_thresholds),
+                             row_header)
+    st.supercells = _supercells(batch, st, class_thresholds)
+    return st
 
 
 # --------------------------------------------------------------------------
-# cells (src/postprocess.py:692-843)
+# structures → cells (src/postprocess.py:692-843)
 # --------------------------------------------------------------------------
 
-def _hull(boxes):
-    """Hull with fitz ``include_rect`` semantics: empty members are
-    skipped; no members → the empty box (0, 0, 0, 0)."""
-    x0 = y0 = x1 = y1 = None
-    for b in boxes:
-        if b[0] >= b[2] or b[1] >= b[3]:
-            continue
-        if x0 is None:
-            x0, y0, x1, y1 = b[0], b[1], b[2], b[3]
-        else:
-            if b[0] < x0:
-                x0 = b[0]
-            if b[1] < y0:
-                y0 = b[1]
-            if b[2] > x1:
-                x1 = b[2]
-            if b[3] > y1:
-                y1 = b[3]
-    return (0.0, 0.0, 0.0, 0.0) if x0 is None else (x0, y0, x1, y1)
+def _extreme(ufunc, index, values, size):
+    """(per-slot min/max of *values* scattered to *index*, slot hit?)"""
+    out = np.full(size, np.inf if ufunc is np.minimum else -np.inf)
+    ufunc.at(out, index, values)
+    return out, np.bincount(index, minlength=size) > 0
 
 
-def _intersect_fitz(a, b):
-    """``Box(a).intersect(b)`` as tuple math: an empty *b* replaces *a*,
-    an empty *a* is kept, otherwise componentwise max/min."""
-    if b[0] >= b[2] or b[1] >= b[3]:
-        return (b[0], b[1], b[2], b[3])
-    if a[0] >= a[2] or a[1] >= a[3]:
-        return (a[0], a[1], a[2], a[3])
-    return (max(a[0], b[0]), max(a[1], b[1]),
-            min(a[2], b[2]), min(a[3], b[3]))
+def structures_to_cells(batch: TableBatch, st: Structures) -> TableCells:
+    """Canonical cell grid + confidence for every table with ≥1 row and
+    ≥1 column (``src/postprocess.py:692-843``).
 
-
-def structures_to_cells(structures, table_spans):
-    """Canonical cell grid + confidence from refined structures
-    (``src/postprocess.py:692-843``).
-
-    Cell construction order is column-major (outer loop over columns),
-    matching the reference — this order feeds the slotting tie-breaks and
-    the output cell sequence.
+    Cell order is column-major over the grid (outer loop over columns),
+    then the merged supercells, matching the reference — this order
+    feeds the slotting tie-breaks.
     """
-    columns = structures["columns"]
-    rows = structures["rows"]
-    supercells = structures["supercells"]
-    cells, subcells = [], []
+    n = batch.n_tables
+    n_rows, n_cols = st.n_rows, st.n_cols
+    row_start, col_start = st.row_start, st.col_start
 
-    # grid construction, vectorized over the (column × row) lattice.
-    # The reference builds each grid cell as Box(row).intersect(col)
-    # in column-major order; broadcasting reproduces that including the
-    # fitz empty-box rules (empty col replaces, empty row is kept).
-    n_rows, n_cols = len(rows), len(columns)
-    rb = np.asarray([r["bbox"] for r in rows],
-                    dtype=float).reshape(-1, 4)                  # (R, 4)
-    cb = np.asarray([c["bbox"] for c in columns],
-                    dtype=float).reshape(-1, 4)                  # (C, 4)
-    grid = np.empty((n_cols, n_rows, 4))
-    np.maximum(rb[None, :, :2], cb[:, None, :2], out=grid[:, :, :2])
-    np.minimum(rb[None, :, 2:], cb[:, None, 2:], out=grid[:, :, 2:])
-    col_empty = (cb[:, 0] >= cb[:, 2]) | (cb[:, 1] >= cb[:, 3])
-    row_empty = (rb[:, 0] >= rb[:, 2]) | (rb[:, 1] >= rb[:, 3])
-    if col_empty.any() or row_empty.any():
-        grid = np.where(col_empty[:, None, None], cb[:, None, :],
-                        np.where(row_empty[None, :, None],
-                                 rb[None, :, :], grid))
-    flat = grid.reshape(-1, 4)           # index c * n_rows + r (col-major)
-    grid_areas = np_box_area(flat)
+    # grid lattice, column-major per table: each grid cell is
+    # Box(row).intersect(col) with the fitz empty-box rules
+    tables = np.flatnonzero((n_rows > 0) & (n_cols > 0))
+    size = n_rows[tables] * n_cols[tables]
+    g_seg = np.repeat(tables, size)
+    k = np.arange(g_seg.size) - np.repeat(_starts(size), size)
+    g_nrows = n_rows[g_seg]
+    g_row = row_start[g_seg] + k % g_nrows
+    g_col = col_start[g_seg] + k // g_nrows
+    grid = np_fitz_intersect(st.row_box[g_row], st.col_box[g_col])
 
-    # supercell coverage: > 0.5 of a grid cell's area inside any supercell
-    if supercells:
-        sc_boxes = np.asarray([sc["bbox"] for sc in supercells], dtype=float)
-        inter = np_pairwise_intersection(flat, sc_boxes)
-        frac = np.divide(inter, grid_areas[:, None],
-                         out=np.zeros_like(inter),
-                         where=grid_areas[:, None] > 0.0)
-        covered_mask = (frac > 0.5).any(axis=1)
-    else:
-        covered_mask = np.zeros(len(flat), dtype=bool)
+    # supercell coverage: a grid cell with > 0.5 of its area inside a
+    # supercell is covered; each supercell merges the cells it covers
+    sc_list = [(s, sc) for s in sorted(st.supercells)
+               for sc in st.supercells[s]]
+    sc_seg = np.array([s for s, _ in sc_list], dtype=np.intp)
+    sc_box = _boxes([sc for _, sc in sc_list])
+    ig, js, frac = containment_pairs(grid, g_seg, sc_box, sc_seg, n)
+    inside = frac > 0.5
+    covered = np.bincount(ig[inside], minlength=g_seg.size) > 0
+    order = np.lexsort((ig[inside], js[inside]))
+    ig, js = ig[inside][order], js[inside][order]
+    merged = np.unique(js)
+    m_box = np.zeros((merged.size, 4))
+    m_header = np.zeros(merged.size, dtype=bool)
+    if js.size:
+        # the hull of the merged cells (all non-empty by the area
+        # guard) is an order-free componentwise min/max
+        starts = np_run_starts(js)
+        m_box[:, :2] = np.minimum.reduceat(grid[ig, :2], starts, axis=0)
+        m_box[:, 2:] = np.maximum.reduceat(grid[ig, 2:], starts, axis=0)
+        # a header cell only if all merged cells are (rectangular
+        # header region)
+        m_header = np.logical_and.reduceat(st.row_header[g_row[ig]], starts)
+    m_of = np.searchsorted(merged, js)  # merged-cell number of each pair
 
-    row_headers = [bool(r.get("header")) for r in rows]
-    grid_lists = flat.tolist()
-    for idx, (bbox, covered) in enumerate(zip(grid_lists, covered_mask)):
-        col_num, row_num = divmod(idx, n_rows)  # col-major flat index
-        cell = {
-            "bbox": bbox,
-            "column_nums": [col_num],
-            "row_nums": [row_num],
-            "header": row_headers[row_num],
-        }
-        if covered:
-            subcells.append(cell)
-        else:
-            cell["subheader"] = False
-            cells.append(cell)
+    # cells of each table: non-covered grid cells, then merged ones
+    grid_cells = np.flatnonzero(~covered)
+    n_grid = grid_cells.size
+    cat_seg = np.concatenate([g_seg[grid_cells], sc_seg[merged]])
+    perm = np.argsort(cat_seg, kind="stable")
+    rank = np.empty_like(perm)
+    rank[perm] = np.arange(perm.size)
+    n_cells = perm.size
+    cell_seg = cat_seg[perm]
+    cell_box = np.concatenate([grid[grid_cells], m_box])[perm]
+    header = np.concatenate([st.row_header[g_row[grid_cells]],
+                             m_header])[perm]
+    subheader = np.concatenate([
+        np.zeros(n_grid, dtype=bool),
+        np.array([sc_list[j][1]["subheader"] for j in merged.tolist()],
+                 dtype=bool)])[perm]
 
-    # supercell merge: adopt every subcell with > 0.5 of its area inside
-    # the supercell; the hull over those (all non-empty by the area
-    # guard) is an order-independent componentwise min/max, so the
-    # reference's sequential include_rect chain vectorizes exactly.
-    if supercells and subcells:
-        sub_boxes = np.asarray([s["bbox"] for s in subcells], dtype=float)
-        sub_areas = np_box_area(sub_boxes)
-        inter = np_pairwise_intersection(sub_boxes, sc_boxes)
-        frac = np.divide(inter, sub_areas[:, None],
-                         out=np.zeros_like(inter),
-                         where=sub_areas[:, None] > 0.0)
-        sel = (sub_areas[:, None] > 0.0) & (frac > 0.5)
-        for j, sc in enumerate(supercells):
-            idxs = np.nonzero(sel[:, j])[0]
-            if idxs.size == 0:
-                continue
-            chosen = sub_boxes[idxs]
-            merged_rows, merged_cols = set(), set()
-            header = True
-            for i in idxs:
-                sub = subcells[i]
-                merged_rows |= set(sub["row_nums"])
-                merged_cols |= set(sub["column_nums"])
-                # a supercell is a header cell only if *all* merged
-                # subcells are header cells (rectangular header region)
-                header = header and sub["header"]
-            cells.append({
-                "bbox": [float(chosen[:, 0].min()), float(chosen[:, 1].min()),
-                         float(chosen[:, 2].max()), float(chosen[:, 3].max())],
-                "column_nums": sorted(merged_cols),
-                "row_nums": sorted(merged_rows),
-                "header": header,
-                "subheader": bool(sc["subheader"]),
-            })
+    # (cell, row) and (cell, column) memberships, grouped by cell
+    def members(grid_index):
+        pairs = np.unique(np.stack([rank[n_grid + m_of],
+                                    grid_index[ig]], axis=1), axis=0)
+        cell = np.concatenate([rank[:n_grid], pairs[:, 0]])
+        index = np.concatenate([grid_index[grid_cells], pairs[:, 1]])
+        order = np.lexsort((index, cell))
+        return cell[order], index[order]
+    pr_cell, pr_row = members(g_row)
+    pc_cell, pc_col = members(g_col)
+    row_nums = (pr_row - row_start[st.row_seg[pr_row]]).tolist()
+    col_nums = (pc_col - col_start[st.col_seg[pc_col]]).tolist()
+    cell_rows = [[r] for r in row_nums[:n_cells]] if merged.size == 0 \
+        else _split(row_nums, pr_cell, n_cells)
+    cell_cols = [[c] for c in col_nums[:n_cells]] if merged.size == 0 \
+        else _split(col_nums, pc_cell, n_cells)
 
     # confidence = (mean + min)/2 of each token's best containment
-    # fraction (src/postprocess.py:759-767)
-    _, _, match_scores = slot_into_containers(cells, table_spans)
-    if match_scores:
-        confidence = (sum(match_scores) / len(match_scores)
-                      + min(match_scores)) / 2
-    else:
-        confidence = 0
+    # fraction (src/postprocess.py:759-767), summed in token order
+    ip, jc, frac = containment_pairs(batch.tok_box, batch.tok_seg,
+                                     cell_box, cell_seg, n)
+    scored, _, best = first_max(ip, frac)
+    confidence = [0] * n
+    scores = best.tolist()
+    for s, a, b in _runs(batch.tok_seg[scored]):
+        part = scores[a:b]
+        confidence[s] = (sum(part) / len(part) + min(part)) / 2
 
-    # dilate every cell bbox to (hull of its columns) ∩ (hull of its rows)
-    # (tuple math instead of Box objects: this and the text-fit loop below
-    # accounted for ~100k Rect constructions per page batch)
-    for cell in cells:
-        col_hull = _hull(columns[c]["bbox"] for c in cell["column_nums"])
-        row_hull = _hull(rows[r]["bbox"] for r in cell["row_nums"])
-        cell["bbox"] = list(_intersect_fitz(col_hull, row_hull))
+    # dilate every cell to (hull of its columns) ∩ (hull of its rows)
+    dilated = np_fitz_intersect(
+        np_segment_hull(st.col_box[pc_col], pc_cell, n_cells),
+        np_segment_hull(st.row_box[pr_row], pr_cell, n_cells))
 
     # final token→cell assignment at a near-zero threshold
-    spans_by_cell, _, _ = slot_into_containers(
-        cells, table_spans, overlap_threshold=0.001,
-        unique_assignment=True, forced_assignment=False)
-    for cell, span_nums in zip(cells, spans_by_cell):
-        cell_spans = [table_spans[i] for i in span_nums]
-        cell["cell_text"] = assemble_text(cell_spans,
-                                          remove_integer_superscripts=False)
-        cell["spans"] = cell_spans
+    best_c, best_f = best_containers(
+        ip, jc, np_pair_iob(batch.tok_box[ip], dilated[jc]),
+        batch.tok_seg.size)
+    tokens = np.flatnonzero(best_f >= 0.001)
+    tok_cell = best_c[tokens]
+    tokens = tokens[np.argsort(tok_cell, kind="stable")]
+    tok_cell = np.sort(tok_cell, kind="stable")
+    cell_tokens = _split(tokens.tolist(), tok_cell, n_cells)
+    spans = batch.tok_spans
+    text = [assemble_text([spans[t] for t in toks],
+                          remove_integer_superscripts=False) if toks else ""
+            for toks in cell_tokens]
 
-    # re-fit row/column/cell boxes to the extracted text extents
+    # re-fit rows/columns to the extents of their cells' text: a token
+    # widens the first column/row and the last column/row of its cell
     # (src/postprocess.py:794-841)
-    num_rows = len(rows)
-    rows = order_top_to_bottom(rows)
-    num_cols = len(columns)
-    columns = order_left_to_right(columns)
-    min_y_by_row, max_y_by_row = {}, {}
-    min_x_by_col, max_x_by_col = {}, {}
-    for cell in cells:
-        r_lo, r_hi = min(cell["row_nums"]), max(cell["row_nums"])
-        c_lo, c_hi = min(cell["column_nums"]), max(cell["column_nums"])
-        for span in cell["spans"]:
-            min_x_by_col.setdefault(c_lo, []).append(span["bbox"][0])
-            min_y_by_row.setdefault(r_lo, []).append(span["bbox"][1])
-            max_x_by_col.setdefault(c_hi, []).append(span["bbox"][2])
-            max_y_by_row.setdefault(r_hi, []).append(span["bbox"][3])
-    for row_num, row in enumerate(rows):
-        if min_x_by_col.get(0):
-            row["bbox"][0] = min(min_x_by_col[0])
-        if min_y_by_row.get(row_num):
-            row["bbox"][1] = min(min_y_by_row[row_num])
-        if max_x_by_col.get(num_cols - 1):
-            row["bbox"][2] = max(max_x_by_col[num_cols - 1])
-        if max_y_by_row.get(row_num):
-            row["bbox"][3] = max(max_y_by_row[row_num])
-    for col_num, col in enumerate(columns):
-        if min_x_by_col.get(col_num):
-            col["bbox"][0] = min(min_x_by_col[col_num])
-        if min_y_by_row.get(0):
-            col["bbox"][1] = min(min_y_by_row[0])
-        if max_x_by_col.get(col_num):
-            col["bbox"][2] = max(max_x_by_col[col_num])
-        if max_y_by_row.get(num_rows - 1):
-            col["bbox"][3] = max(max_y_by_row[num_rows - 1])
-    for cell in cells:
-        row_hull = _hull(rows[r]["bbox"] for r in cell["row_nums"])
-        col_hull = _hull(columns[c]["bbox"] for c in cell["column_nums"])
-        fitted = _intersect_fitz(row_hull, col_hull)
-        if (fitted[2] - fitted[0]) > 0 and (fitted[3] - fitted[1]) > 0:
-            cell["bbox"] = list(fitted)
+    lo_row, hi_row = _first_last(pr_row, pr_cell)
+    lo_col, hi_col = _first_last(pc_col, pc_cell)
+    tb = batch.tok_box[tokens]
+    min_x, has_min_x = _extreme(np.minimum, lo_col[tok_cell], tb[:, 0],
+                                st.col_seg.size)
+    min_y, has_min_y = _extreme(np.minimum, lo_row[tok_cell], tb[:, 1],
+                                st.row_seg.size)
+    max_x, has_max_x = _extreme(np.maximum, hi_col[tok_cell], tb[:, 2],
+                                st.col_seg.size)
+    max_y, has_max_y = _extreme(np.maximum, hi_row[tok_cell], tb[:, 3],
+                                st.row_seg.size)
+    row_box, col_box = st.row_box.copy(), st.col_box.copy()
+    rows = np.flatnonzero(n_cols[st.row_seg] > 0)
+    first_col = col_start[st.row_seg[rows]]
+    last_col = first_col + n_cols[st.row_seg[rows]] - 1
+    for axis, index, values, hit in (
+            (0, first_col, min_x, has_min_x), (1, rows, min_y, has_min_y),
+            (2, last_col, max_x, has_max_x), (3, rows, max_y, has_max_y)):
+        row_box[rows, axis] = np.where(hit[index], values[index],
+                                       row_box[rows, axis])
+    cols = np.flatnonzero(n_rows[st.col_seg] > 0)
+    first_row = row_start[st.col_seg[cols]]
+    last_row = first_row + n_rows[st.col_seg[cols]] - 1
+    for axis, index, values, hit in (
+            (0, cols, min_x, has_min_x), (1, first_row, min_y, has_min_y),
+            (2, cols, max_x, has_max_x), (3, last_row, max_y, has_max_y)):
+        col_box[cols, axis] = np.where(hit[index], values[index],
+                                       col_box[cols, axis])
+    fitted = np_fitz_intersect(
+        np_segment_hull(row_box[pr_row], pr_cell, n_cells),
+        np_segment_hull(col_box[pc_col], pc_cell, n_cells))
+    ok = ((fitted[:, 2] - fitted[:, 0]) > 0) & ((fitted[:, 3] - fitted[:, 1]) > 0)
+    bbox = np.where(ok[:, None], fitted, dilated)
 
-    return cells, confidence
+    return TableCells(
+        confidence=confidence,
+        start=np.concatenate(
+            ([0], np.cumsum(np.bincount(cell_seg, minlength=n)))),
+        bbox=bbox, row_nums=cell_rows, column_nums=cell_cols,
+        header=header, subheader=subheader, text=text,
+        cell_tokens=cell_tokens, batch=batch, structures=st,
+        row_box=row_box, col_box=col_box)
+
+
+def _first_last(values: np.ndarray, groups: np.ndarray):
+    """First and last value of each run of equal *groups*."""
+    starts = np_run_starts(groups)
+    ends = np.append(starts[1:], groups.size)[:starts.size]
+    return values[starts], values[ends - 1]
+
+
+def _split(values: list, groups: np.ndarray, n_groups: int) -> list:
+    """*values* cut into one list per group id 0..n_groups-1 (*groups*
+    non-decreasing, aligned with *values*)."""
+    bounds = np.searchsorted(groups, np.arange(n_groups + 1)).tolist()
+    return [values[a:b] for a, b in zip(bounds[:-1], bounds[1:])]
+
+
+def objects_to_cells_batch(batch: TableBatch, class_thresholds) -> TableCells:
+    """The ``objects_to_cells`` chain over every table of *batch*; a table
+    without a row or without a column gets no cells and confidence 0
+    (``src/postprocess.py:61-80``)."""
+    return structures_to_cells(batch,
+                               build_table_structures(batch, class_thresholds))
 
 
 def objects_to_cells(table, objects_in_table, tokens_in_table,
-                     class_thresholds, copy_inputs: bool = True):
-    """Entry point: model objects + tokens → (structures, cells,
-    confidence) with a ≥1-row/≥1-column validity gate
-    (``src/postprocess.py:61-80``).
-
-    The reference mutates its inputs (token bboxes, object dicts); we
-    deep-copy by default so the kernel is a pure function over Arrow
-    batches.
+                     class_thresholds):
+    """One table: model objects + tokens → (structures, cells,
+    confidence), as a one-table batch of the same kernel.  *table* is
+    accepted for the reference signature: the chain derives the table
+    box from the surviving rows and columns.  Inputs are not mutated.
     """
-    if copy_inputs:
-        table = copy.deepcopy(table)
-        objects_in_table = copy.deepcopy(objects_in_table)
-        tokens_in_table = copy.deepcopy(tokens_in_table)
-
-    structures = build_table_structures(table, objects_in_table,
-                                        tokens_in_table, class_thresholds)
-    if len(structures["columns"]) < 1 or len(structures["rows"]) < 1:
-        return structures, [], 0
-    cells, confidence = structures_to_cells(structures, tokens_in_table)
-    return structures, cells, confidence
+    result = objects_to_cells_batch(
+        TableBatch.from_tables([(objects_in_table, tokens_in_table)]),
+        class_thresholds)
+    return (result.table_structures(0), result.table_cells(0),
+            result.confidence[0])

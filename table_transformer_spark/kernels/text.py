@@ -16,7 +16,8 @@ superscript flag bit set. We implement the evidently-intended behavior
 
 from __future__ import annotations
 
-__all__ = ["assemble_text", "text_inside_bbox", "spans_inside_bbox"]
+__all__ = ["assemble_text", "span_has_text", "text_inside_bbox",
+           "spans_inside_bbox"]
 
 from ..geometry import overlaps
 
@@ -83,6 +84,20 @@ def assemble_text(spans, join_with_space: bool = True,
     lines.append(join_char.join(current))
 
     return join_char.join(lines).strip()
+
+
+def span_has_text(span) -> bool:
+    """Whether *span* puts a non-blank character into
+    ``assemble_text(spans, remove_integer_superscripts=True)``: it is not
+    blank and not an integer superscript.  The assembled text of a span
+    set is non-empty after ``strip()`` exactly when one of its spans has
+    text, since joining and stripping never drop a non-blank character.
+    """
+    text = span["text"]
+    if not text.strip():
+        return False
+    flags = span.get("flags")
+    return not (flags is not None and flags & 1 and _parses_as_int(text))
 
 
 def spans_inside_bbox(spans, bbox, threshold: float = 0.5):

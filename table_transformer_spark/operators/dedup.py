@@ -41,6 +41,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..partitioning import widen_for_cpu
+
 __all__ = [
     "normalized_fingerprint",
     "exact_dedup_groups",
@@ -55,13 +57,6 @@ __all__ = [
 ]
 
 MINHASH_SEEDS = tuple(f"mh{i}:" for i in range(8))
-
-
-def _spread(df: DataFrame, key: str) -> DataFrame:
-    """Keep the tokenize/hash pass wide on compacted inputs (shared
-    policy: :func:`..partitioning.widen_for_cpu`)."""
-    from ..partitioning import widen_for_cpu
-    return widen_for_cpu(df, key)
 
 
 def normalized_fingerprint(text: Column) -> Column:
@@ -159,7 +154,7 @@ def minhash_band_buckets(df: DataFrame, id_col: str, text_col: str,
     # minima ≡ min over the union).  With unique ids (the common case)
     # the agg is a pass-through; either way it is a slim
     # (doc, 8×hex) relation with map-side partial aggregation.
-    sigs = (_spread(df, id_col)
+    sigs = (widen_for_cpu(df, id_col)
             .select(F.col(id_col).alias("doc"),
                     F.col(text_col).alias("text"))
             .mapInPandas(sig_gen, schema=sig_schema)
@@ -260,7 +255,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     #    any task ever holds is max_df entries, and the groupBy's
     #    shuffle is the only full pass over the (already-thinned)
     #    gram stream.
-    exploded = (_spread(df, id_col)
+    exploded = (widen_for_cpu(df, id_col)
                 .select(F.col(id_col).alias("doc"),
                         F.col(block_col).alias("block"),
                         F.col(text_col).alias("text"))
@@ -415,7 +410,7 @@ def simhash_neardup_pairs(df: DataFrame, id_col: str, text_col: str,
     # kernel subtree executes once per join side (the r6 plan audit
     # found two ArrowEvalPython nodes).  Checkpointing the slim
     # (doc, block, sig) relation runs the kernel exactly once.
-    sigs = (_spread(df, id_col).select(
+    sigs = (widen_for_cpu(df, id_col).select(
         F.col(id_col).alias("doc"),
         F.col(block_col).alias("block"),
         simhash_udf(F.col(text_col)).alias("sig"))

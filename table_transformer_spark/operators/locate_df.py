@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..kernels.locate import locate_caption, locate_table
+from ..partitioning import widen_for_cpu
 
 __all__ = [
     "locate_cells_df",
@@ -90,20 +91,13 @@ def _locate_rows(batches):
         yield out
 
 
-def _widen(df: DataFrame, *keys: str) -> DataFrame:
-    """Keep the char-DP grouped kernels wide (shared policy:
-    :func:`..partitioning.widen_for_cpu`)."""
-    from ..partitioning import widen_for_cpu
-    return widen_for_cpu(df, *keys)
-
-
 def locate_cells_df(tables_with_words: DataFrame) -> DataFrame:
     """(doc_id, table_num, words, cells) → one located row per cell.
 
     *words*: ``array<struct<text,x0,y0,x1,y1>>`` in reading order;
     *cells*: ``array<struct<text,row_nums,column_nums>>``.
     """
-    return (_widen(tables_with_words, "doc_id", "table_num")
+    return (widen_for_cpu(tables_with_words, "doc_id", "table_num")
             .select("doc_id", "table_num", "words", "cells")
             .mapInPandas(_locate_rows, schema=LOCATED_SCHEMA))
 
@@ -143,7 +137,7 @@ def _caption_rows(batches):
 
 def locate_caption_df(pages_with_captions: DataFrame) -> DataFrame:
     """(doc_id, words, caption) → one hull row per doc."""
-    return (_widen(pages_with_captions, "doc_id")
+    return (widen_for_cpu(pages_with_captions, "doc_id")
             .select("doc_id", "words", "caption")
             .mapInPandas(_caption_rows, schema=CAPTION_SCHEMA))
 

@@ -44,7 +44,7 @@ def get_spark(app_name: str = "table_transformer_spark",
         # minPartitionSize floor (measured -19% on the byte-heavy
         # extraction pipeline), those operators pin their width with an
         # explicit repartition on their grouping keys, which AQE never
-        # coalesces (dedup._spread, locate_df._widen).
+        # coalesces (partitioning.widen_for_cpu).
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")

@@ -45,10 +45,6 @@ from . import schemas
 # stage 1: binary payload → page tokens + table detections
 # ---------------------------------------------------------------------------
 
-def _decode_payload(payload: bytes) -> dict:
-    return decode_zlib_json(payload)
-
-
 def page_inference_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Decode the binary page payload into tokens + detection objects.
 
@@ -63,7 +59,7 @@ def page_inference_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
         for doc_id, media_ref, page_offset, payload in zip(
                 pdf["doc_id"], pdf["media_ref"], pdf["page_offset"],
                 pdf["payload"]):
-            page = _decode_payload(payload)
+            page = decode_zlib_json(payload)
             out["doc_id"].append(doc_id)
             out["media_ref"].append(media_ref)
             out["page_offset"].append(page_offset)
@@ -241,8 +237,7 @@ def cells_kernel_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
             table = {"bbox": table_bbox, "page_num": 0}
             _, cells, confidence = objects_to_cells(
-                table, in_table, tok_in_table, STRUCTURE_CLASS_THRESHOLDS,
-                copy_inputs=False)
+                table, in_table, tok_in_table, STRUCTURE_CLASS_THRESHOLDS)
 
             cells = sorted(cells, key=lambda c: (min(c["row_nums"]),
                                                  min(c["column_nums"])))

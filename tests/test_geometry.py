@@ -14,8 +14,11 @@ from table_transformer_spark.geometry import (
     box_area,
     iob,
     iou,
+    np_fitz_intersect,
     np_iob_matrix,
     np_iou_matrix,
+    np_pair_iob,
+    np_segment_hull,
     overlaps,
 )
 
@@ -99,3 +102,23 @@ def test_np_matrices_match_scalar(bs1, bs2):
         for j, y in enumerate(bs2):
             assert iob_m[i, j] == pytest.approx(iob(x, y), abs=1e-9)
             assert iou_m[i, j] == pytest.approx(iou(x, y), abs=1e-9)
+
+
+@given(st.lists(st.tuples(st.tuples(coord, coord, coord, coord),
+                          st.tuples(coord, coord, coord, coord)),
+                min_size=1, max_size=8))
+def test_np_rowwise_ops_match_box(pairs):
+    """Row-wise intersect / iob and grouped hulls equal the Box chain,
+    inverted (empty) boxes included."""
+    a = np.asarray([p[0] for p in pairs], dtype=float)
+    b = np.asarray([p[1] for p in pairs], dtype=float)
+    assert np_fitz_intersect(a, b).tolist() == \
+        [Box(x).intersect(y).tolist() for x, y in pairs]
+    assert np_pair_iob(a, b).tolist() == \
+        pytest.approx([iob(x, y) for x, y in pairs], abs=1e-9)
+    groups = np.arange(len(pairs)) // 3
+    hulls = [Box() for _ in range(groups[-1] + 1)]
+    for g, (x, _) in zip(groups, pairs):
+        hulls[g].include_rect(x)
+    assert np_segment_hull(a, groups, len(hulls)).tolist() == \
+        [h.tolist() for h in hulls]
