@@ -25,7 +25,7 @@ of the reference is kept; the kernel never mutates its inputs.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import numpy as np
 
@@ -139,6 +139,11 @@ class Structures:
     col_box: np.ndarray      # snapped to the table's row extent
     refined: np.ndarray      # per table: ≥1 row and >1 column
     supercells: dict         # segment id → supercell dicts
+    # per table: row/column counts and offsets into the row/column arrays
+    n_rows: np.ndarray = field(init=False)
+    n_cols: np.ndarray = field(init=False)
+    row_start: np.ndarray = field(init=False)
+    col_start: np.ndarray = field(init=False)
 
     def __post_init__(self):
         n = self.refined.size

@@ -211,14 +211,11 @@ _LABELS = ["table row", "table row", "table column", "table column",
 _coord = st.integers(min_value=0, max_value=60)
 
 
-def _bbox(zero_area_ok=True):
-    def make(t):
-        x0, y0 = min(t[0], t[2]), min(t[1], t[3])
-        x1, y1 = max(t[0], t[2]), max(t[1], t[3])
-        if not zero_area_ok:
-            x1, y1 = x1 + 1, y1 + 1
-        return [float(x0), float(y0), float(x1), float(y1)]
-    return st.tuples(_coord, _coord, _coord, _coord).map(make)
+def _bbox():
+    """Normalised boxes, zero-area ones included."""
+    return st.tuples(_coord, _coord, _coord, _coord).map(
+        lambda t: [float(min(t[0], t[2])), float(min(t[1], t[3])),
+                   float(max(t[0], t[2])), float(max(t[1], t[3]))])
 
 
 _objects = st.lists(
