@@ -5,7 +5,7 @@ microsoft/table-transformer (TATR), rebuilt Spark-first.
 Layers:
 
 * :mod:`~table_transformer_spark.geometry` — box algebra (fitz.Rect
-  semantics) usable both as numpy batch kernels and column expressions.
+  semantics) as scalar functions and numpy batch kernels.
 * :mod:`~table_transformer_spark.kernels` — deterministic kernels
   (structure canonicalization, GriTS, text assembly) that run inside
   the Arrow-batched pandas stages; structure canonicalization runs once

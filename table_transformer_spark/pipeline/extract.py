@@ -6,9 +6,9 @@ One declarative plan, shuffles only where data must move:
    table on ``media_ref`` (both sides huge at 10^12 scale → shuffle
    hash/sort-merge join on the join key; at test scale AQE may pick a
    broadcast).
-2. decode + detect (mapInPandas), crop + token-assign (pure column
-   algebra), recognize (mapInPandas), cells kernel (mapInPandas) — a
-   single pipelined stage chain with **no shuffle** between them.
+2. decode → detect → crop + token-assign → recognize → cells kernel,
+   fused into one Arrow-batched ``mapInPandas`` pass per page
+   (``fused.py``) — **no shuffle** inside it.
 3. reassemble per document: original text spans ∪ cell spans, ordered by
    (page_offset, table_num, cell_num) and renumbered with one window
    partitioned by ``doc_id`` — the only other shuffle in the job.
@@ -22,8 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from . import schemas
-from .stages import crop_tables, decode_and_detect, extract_cells, recognize_structure
+from ..partitioning import widen_for_cpu
+from .fused import run_cells_fused
 
 
 def media_spans(documents: DataFrame) -> DataFrame:
@@ -38,14 +38,9 @@ def media_spans(documents: DataFrame) -> DataFrame:
 
 
 def run_cells(documents: DataFrame, media: DataFrame,
-              mode: str = "clean", fused: bool = True) -> DataFrame:
-    """documents × media → one row per extracted cell (CELL_SCHEMA).
-
-    ``fused=True`` (default, the scale path) runs decode→detect→crop→
-    recognize→cells as one Arrow pass per page; ``fused=False`` runs the
-    staged operator-algebra pipeline.  Both produce identical rows
-    (pytest-enforced).
-    """
+              mode: str = "clean") -> DataFrame:
+    """documents × media → one row per extracted cell (CELL_SCHEMA):
+    decode→detect→crop→recognize→cells as one Arrow pass per page."""
     pages = (media_spans(documents)
              .join(media.select("media_ref", "payload"), "media_ref")
              .select("doc_id", "media_ref", "page_offset", "payload"))
@@ -60,15 +55,8 @@ def run_cells(documents: DataFrame, media: DataFrame,
     # (median 3.76s vs 3.28s over 5 alternating reps at 8000 docs) —
     # reverted; at true scale the pre-partitioned join is one
     # `widen_for_cpu` on each side away.
-    from ..partitioning import widen_for_cpu
     pages = widen_for_cpu(pages, "media_ref")
-    if fused:
-        from .fused import run_cells_fused
-        return run_cells_fused(pages, mode=mode)
-    decoded = decode_and_detect(pages)
-    crops = crop_tables(decoded)
-    recognized = recognize_structure(crops, mode=mode)
-    return extract_cells(recognized)
+    return run_cells_fused(pages, mode=mode)
 
 
 def assemble_spans(documents: DataFrame, cells: DataFrame) -> DataFrame:
@@ -104,7 +92,7 @@ def assemble_spans(documents: DataFrame, cells: DataFrame) -> DataFrame:
 
 
 def extract(documents: DataFrame, media: DataFrame,
-            mode: str = "clean", fused: bool = True) -> DataFrame:
+            mode: str = "clean") -> DataFrame:
     """The flagship query: OUTPUT_SPANS_SCHEMA rows, one per output span."""
-    cells = run_cells(documents, media, mode=mode, fused=fused)
+    cells = run_cells(documents, media, mode=mode)
     return assemble_spans(documents, cells)

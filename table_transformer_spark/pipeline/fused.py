@@ -1,14 +1,11 @@
 """Fused per-page extraction stage: payload → cell rows in ONE
 Arrow-batched pass.
 
-The staged pipeline (``stages.py``) demonstrates the operator algebra —
-decode / detect / crop / recognize / cells as separate DataFrame
-transforms.  At scale, those per-page-local steps pay three extra
-Python↔JVM Arrow boundaries for data (token arrays, object arrays) that
-never leaves the page row.  This fused stage performs the identical
-operations (same semantics, same order — equality is pytest-enforced
-against the staged path) inside a single ``mapInPandas``, so a page is
-touched exactly once per executor:
+Decode, detect, crop, recognize and the cells kernel are all local to a
+page, so they run together inside a single ``mapInPandas``: run as
+separate DataFrame stages they would pay three extra Python↔JVM Arrow
+boundaries for data (token arrays, object arrays) that never leaves the
+page row.  A page is touched exactly once per executor:
 
     pages(payload) ──mapInPandas──▶ cells            [zero shuffle]
 
@@ -88,10 +85,11 @@ def _cyclic_gc_paused():
         gc.enable()
 
 
-def _page_cells(pages, mode: str, padding: int) -> pd.DataFrame:
+def _page_cells(pages, mode: str) -> pd.DataFrame:
     """Packed cell rows of one chunk of pages: *pages* holds the
     doc_id, media_ref, page_offset and payload arrays of the chunk."""
     doc_id, media_ref, page_offset, payloads = pages
+    padding = DEFAULT_CROP_PADDING
     # decode page by page, keeping only what the kernel reads: a page
     # dict also carries the designed truth and the other mode's objects
     spans, n_tokens, tok_xy = [], [], []
@@ -172,13 +170,12 @@ def _page_cells(pages, mode: str, padding: int) -> pd.DataFrame:
     }, columns=_PACKED_COLUMNS)
 
 
-def make_fused_page_fn(mode: str = "clean",
-                       padding: int = DEFAULT_CROP_PADDING):
+def make_fused_page_fn(mode: str = "clean"):
     """Factory: (doc_id, media_ref, page_offset, payload) batches →
-    packed cell batches (``_PACKED_SCHEMA``).  Same operation order as
-    the staged path: detect-threshold → crop/pad → token
-    containment-assign + rebase → structure inference (stub) →
-    objects_to_cells chain → (min row, min col) cell ordering."""
+    packed cell batches (``_PACKED_SCHEMA``).  Operation order:
+    detect-threshold → crop/pad → token containment-assign + rebase →
+    structure inference (stub) → objects_to_cells chain → (min row,
+    min col) cell ordering."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # <-- detection + structure models would be loaded once here -->
@@ -189,7 +186,7 @@ def make_fused_page_fn(mode: str = "clean",
                 with _cyclic_gc_paused():
                     out = _page_cells(
                         [c[lo:lo + _PAGES_PER_PASS] for c in columns],
-                        mode, padding)
+                        mode)
                 yield out.astype(object) if out.empty else out
 
     return run

@@ -1,5 +1,6 @@
-"""Declared schemas for every pipeline stage (schema-by-contract, unlike
-the reference's schema-by-convention dicts — SURVEY.md §1).
+"""Declared schemas of the pipeline's inputs, cell rows and output
+(schema-by-contract, unlike the reference's schema-by-convention dicts —
+SURVEY.md §1).
 
 Coordinate convention everywhere: ``bbox = [x0, y0, x1, y1]`` doubles
 (docs/INFERENCE.md:65).
@@ -8,23 +9,6 @@ Coordinate convention everywhere: ``bbox = [x0, y0, x1, y1]`` doubles
 from __future__ import annotations
 
 from pyspark.sql import types as T
-
-# token/word/span contract (docs/INFERENCE.md:52-65)
-TOKEN_TYPE = T.StructType([
-    T.StructField("bbox", T.ArrayType(T.DoubleType()), False),
-    T.StructField("text", T.StringType(), False),
-    T.StructField("block_num", T.IntegerType(), False),
-    T.StructField("line_num", T.IntegerType(), False),
-    T.StructField("span_num", T.IntegerType(), False),
-    T.StructField("flags", T.IntegerType(), False),
-])
-
-# detected object (src/inference.py:244-248)
-OBJECT_TYPE = T.StructType([
-    T.StructField("label", T.StringType(), False),
-    T.StructField("score", T.DoubleType(), False),
-    T.StructField("bbox", T.ArrayType(T.DoubleType()), False),
-])
 
 # documents input contract (BASELINE.json input_hint)
 SPAN_TYPE = T.StructType([
@@ -46,27 +30,7 @@ MEDIA_SCHEMA = T.StructType([
     T.StructField("height", T.IntegerType(), False),
 ])
 
-# decode/detect stage output: one row per page
-PAGE_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.StringType(), False),
-    T.StructField("media_ref", T.StringType(), False),
-    T.StructField("page_offset", T.IntegerType(), False),
-    T.StructField("tokens", T.ArrayType(TOKEN_TYPE), False),
-    T.StructField("detections", T.ArrayType(OBJECT_TYPE), False),
-])
-
-# recognition stage output: one row per cropped table
-CROP_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.StringType(), False),
-    T.StructField("media_ref", T.StringType(), False),
-    T.StructField("page_offset", T.IntegerType(), False),
-    T.StructField("table_num", T.IntegerType(), False),
-    T.StructField("crop_bbox", T.ArrayType(T.DoubleType()), False),
-    T.StructField("tokens", T.ArrayType(TOKEN_TYPE), False),
-    T.StructField("objects", T.ArrayType(OBJECT_TYPE), False),
-])
-
-# kernel stage output: one row per extracted cell
+# run_cells output: one row per extracted cell
 CELL_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
     T.StructField("media_ref", T.StringType(), False),

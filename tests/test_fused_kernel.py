@@ -11,6 +11,8 @@
   without tokens and detections below threshold.
 * Segment leakage: the kernel over a batch of tables (or pages) equals
   one call per table (or page).
+* Probe names: every attribute the traced benchmark probe wraps stays
+  bound.
 """
 
 import copy
@@ -201,6 +203,17 @@ def test_empty_batch_yields_empty_frame():
                         "payload": []})
     out = list(make_fused_page_fn("clean")(iter([pdf])))
     assert len(out) == 1 and out[0].empty
+
+
+def test_probe_wrapped_names_resolve():
+    """The traced benchmark probe swaps these module attributes for
+    timed wrappers; each must stay bound even where the package itself
+    never calls it (``fused.objects_to_cells``)."""
+    from perfbench.kernels import WRAPPED
+
+    for module, attr, _ in WRAPPED:
+        assert callable(getattr(module, attr, None)), \
+            f"{module.__name__}.{attr}"
 
 
 # -- fuzz: a batch of N tables ≡ N one-table calls ----------------------------

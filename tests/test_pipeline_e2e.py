@@ -8,6 +8,8 @@ Two layers of oracle:
 2. *noisy* mode: Spark output must equal a local single-threaded run of
    the same kernel chain (distribution/determinism invariance; the
    perturbations exercise thresholding + NMS + containment suppression).
+   In both modes the full cell rows (bbox, grid, header flags, text,
+   confidence) must equal that local run too, under ``CELL_SCHEMA``.
 """
 
 import pytest
@@ -17,6 +19,7 @@ from table_transformer_spark.fixtures.generate import (
     gen_corpus,
 )
 from table_transformer_spark.fixtures.spark_io import documents_df, media_df
+from table_transformer_spark.pipeline import schemas
 from table_transformer_spark.pipeline.extract import extract, run_cells
 
 N_DOCS = 12
@@ -68,29 +71,37 @@ def test_offsets_are_dense_and_zero_based(spark, corpus):
 def test_noisy_mode_matches_local_sequential_kernel(spark, corpus):
     docs, media = corpus
     got = collect_spans(extract(docs, media, mode="noisy"))
-    expected = _local_reference_run(N_DOCS)
+    expected, _ = _local_reference_run(N_DOCS, mode="noisy")
     assert set(got) == set(expected)
     for doc_id in expected:
         assert got[doc_id] == expected[doc_id], f"mismatch in {doc_id}"
 
 
-def test_fused_equals_staged_pipeline(spark, corpus):
-    """The fused single-pass page stage must produce exactly the rows of
-    the staged operator-algebra pipeline, in both modes."""
+def _cell_key(row):
+    (doc_id, media_ref, page_offset, table_num, cell_num, bbox, row_nums,
+     column_nums, is_column_header, is_projected_row_header, cell_text,
+     confidence) = row
+    return (doc_id, media_ref, page_offset, table_num, cell_num,
+            tuple(round(v, 6) for v in bbox), tuple(row_nums),
+            tuple(column_nums), is_column_header, is_projected_row_header,
+            cell_text, round(confidence, 9))
+
+
+@pytest.mark.parametrize("mode", ["clean", "noisy"])
+def test_cells_match_local_sequential_kernel(spark, corpus, mode):
+    """Every cell row (bbox, grid, header flags, text, confidence) of the
+    Spark job equals the local sequential run, under the declared
+    CELL_SCHEMA contract."""
     docs, media = corpus
-    for mode in ("clean", "noisy"):
-        fused = run_cells(docs, media, mode=mode, fused=True)
-        staged = run_cells(docs, media, mode=mode, fused=False)
+    cells = run_cells(docs, media, mode=mode)
 
-        def key(r):
-            return (r.doc_id, r.media_ref, r.page_offset, r.table_num,
-                    r.cell_num, tuple(round(v, 6) for v in r.bbox),
-                    tuple(r.row_nums), tuple(r.column_nums),
-                    r.is_column_header, r.is_projected_row_header,
-                    r.cell_text, round(r.confidence, 9))
+    assert [(f.name, f.dataType.simpleString()) for f in cells.schema] == \
+        [(f.name, f.dataType.simpleString()) for f in schemas.CELL_SCHEMA]
 
-        assert sorted(map(key, fused.collect())) == \
-            sorted(map(key, staged.collect())), f"mode={mode}"
+    _, expected = _local_reference_run(N_DOCS, mode=mode)
+    assert expected
+    assert sorted(map(_cell_key, cells.collect())) == \
+        sorted(map(_cell_key, expected))
 
 
 def test_cell_rows_carry_confidence_and_grid(spark, corpus):
@@ -104,9 +115,12 @@ def test_cell_rows_carry_confidence_and_grid(spark, corpus):
         assert c.cell_num >= 0
 
 
-def _local_reference_run(n_docs):
+def _local_reference_run(n_docs, mode):
     """Single-threaded reimplementation of the job over the same fixture
-    corpus: the sequential 'reference' the distributed run must match."""
+    corpus: the sequential 'reference' the distributed run must match.
+
+    Returns the (kind, text, media_ref) spans per doc_id and the cell
+    rows, one tuple per cell in CELL_SCHEMA column order."""
     from table_transformer_spark.config import (
         DEFAULT_CROP_PADDING,
         DETECTION_CLASS_THRESHOLDS,
@@ -117,7 +131,7 @@ def _local_reference_run(n_docs):
     from table_transformer_spark.kernels.structure import objects_to_cells
 
     pad = DEFAULT_CROP_PADDING
-    out = {}
+    spans_by_doc, cell_rows = {}, []
     for doc in gen_corpus(n_docs):
         spans = []
         for span in sorted(doc["spans"], key=lambda s: s["offset"]):
@@ -143,11 +157,14 @@ def _local_reference_run(n_docs):
                                              h - t["bbox"][1] - 1,
                                              t["bbox"][2]]}
                               for t in tokens]
+                table = page["tables"][table_num]
+                source = (table["design"]["structure"] if mode == "clean"
+                          else table["structure_noisy"])
                 objects = [
                     {"label": o["label"], "score": float(o["score"]),
                      "bbox": [o["bbox"][0] + pad, o["bbox"][1] + pad,
                               o["bbox"][2] + pad, o["bbox"][3] + pad]}
-                    for o in page["tables"][table_num]["structure_noisy"]]
+                    for o in source]
                 table_objs = sorted(
                     [o for o in objects if o["label"] == "table"],
                     key=lambda o: -o["score"])
@@ -157,14 +174,21 @@ def _local_reference_run(n_docs):
                             if iob(o["bbox"], table_bbox) >= 0.5]
                 toks = [t for t in tokens
                         if iob(t["bbox"], table_bbox) >= 0.5]
-                _, cells, _ = objects_to_cells(
+                _, cells, confidence = objects_to_cells(
                     {"bbox": table_bbox, "page_num": 0}, in_table, toks,
                     STRUCTURE_CLASS_THRESHOLDS)
                 cells = sorted(cells, key=lambda c: (min(c["row_nums"]),
                                                      min(c["column_nums"])))
-                for cell in cells:
-                    if cell["cell_text"]:
-                        spans.append(("cell", cell["cell_text"],
-                                      span["media_ref"]))
-        out[doc["doc_id"]] = spans
-    return out
+                for cell_num, cell in enumerate(cells):
+                    text = cell["cell_text"]
+                    cell_rows.append((
+                        doc["doc_id"], span["media_ref"], span["offset"],
+                        table_num, cell_num,
+                        [float(v) for v in cell["bbox"]],
+                        list(cell["row_nums"]), list(cell["column_nums"]),
+                        bool(cell["header"]), bool(cell["subheader"]),
+                        text, float(confidence)))
+                    if text:
+                        spans.append(("cell", text, span["media_ref"]))
+        spans_by_doc[doc["doc_id"]] = spans
+    return spans_by_doc, cell_rows
