@@ -628,13 +628,31 @@ def test_connected_components_star_deep_path(spark):
     assert set(labels.values()) == {0}
 
 
-def test_connected_components_star_matches_propagation(spark):
+def _reference_components(edges):
+    """Pure-Python union-find: ``{(node, component minimum)}`` over the
+    non-self edges, the labelling ``connected_components`` must give."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a == b:
+            continue
+        ra, rb = find(a), find(b)
+        # the smaller root wins, so every root is its component minimum
+        parent[max(ra, rb)] = min(ra, rb)
+    return {(n, find(n)) for n in list(parent)}
+
+
+def test_connected_components_matches_reference(spark):
     import random
 
-    from table_transformer_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from table_transformer_spark.operators.dedup import connected_components
     rng = random.Random(7)
     # 30 shallow blobs of 2-6 nodes each, ids shuffled so component
     # minima land on arbitrary positions
@@ -647,12 +665,22 @@ def test_connected_components_star_matches_propagation(spark):
         edges += [(blob[j], blob[rng.randint(0, j - 1)])
                   for j in range(1, len(blob))]
         i += size
+    # seeded random graphs in disjoint id ranges (one of them negative,
+    # as planted ids are), with self-pairs, duplicate edges and
+    # reversed duplicates mixed in
+    for base in (-5000, 10_000, 20_000, 30_000):
+        nodes = [base + k for k in range(60)]
+        rng.shuffle(nodes)
+        g = [tuple(rng.sample(nodes, 2)) for _ in range(50)]
+        g += [(n, n) for n in rng.sample(nodes, 5)]
+        g += rng.sample(g, 10)
+        g += [(b, a) for a, b in rng.sample(g, 10)]
+        rng.shuffle(g)
+        edges += g
     df = spark.createDataFrame(edges, "doc1 long, doc2 long")
-    prop = {(r.node, r.cluster_id)
-            for r in connected_components(df).collect()}
-    star = {(r.node, r.cluster_id)
-            for r in connected_components_star(df).collect()}
-    assert prop == star
+    got = {(r.node, r.cluster_id)
+           for r in connected_components(df).collect()}
+    assert got == _reference_components(edges)
 
 
 def test_connected_components_ignore_self_pairs(spark):
