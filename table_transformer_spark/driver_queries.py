@@ -587,7 +587,7 @@ def _planted_nd_doc_rows():
     chosen offline (md5-simhash search) so ADJACENT signatures sit at
     Hamming 2 while every SKIP distance is 4 — under the k=3 radius
     the pair graph contains exactly the path edges, so connected
-    components must propagate labels across 3 hops (a single-join
+    components must join a component 3 hops deep (a single-join
     "clustering" would split it).  Verified to share no <=3 edge with
     the twin docs above."""
     rows = []
@@ -715,19 +715,19 @@ WHERE bit_count(xor(a.sig, b.sig)) <= 3
 
 def q_neardup_clusters(spark, sf_dir):
     """Near-dup cluster assignment: simhash pairs → connected
-    components (min-label propagation over DataFrame joins).  The
-    planted chain (-21..-24, path edges only) forces the labels to
-    propagate across 3 hops, so the oracle is non-vacuous for the
-    multi-round path, not just isolated pair edges."""
+    components (large-star/small-star over DataFrame joins).  The
+    planted chain (-21..-24, path edges only) is a component 3 hops
+    deep, so the oracle is non-vacuous for the multi-round path, not
+    just isolated pair edges."""
     from .operators.dedup import connected_components
-    cc = connected_components(q_simhash_neardup_pairs(spark, sf_dir),
-                              "doc1", "doc2")
+    cc = connected_components(q_simhash_neardup_pairs(spark, sf_dir))
     return cc.select(F.col("node").alias("doc_id"), "cluster_id")
 
 
-# min-reachable-id per node via a recursive CTE — the declarative twin
-# of the propagation loop (DuckDB enumerates reachable labels; the
-# GROUP BY min collapses them to the component representative)
+# min-reachable-id per node via a recursive CTE — an independent
+# declarative definition of the component label (DuckDB enumerates
+# reachable labels; the GROUP BY min collapses them to the component
+# representative)
 ORACLE_NEARDUP_CLUSTERS = f"""
 WITH RECURSIVE pairs AS ({ORACLE_SIMHASH_NEARDUP_PAIRS}),
 edges AS (
@@ -750,8 +750,7 @@ def q_dedup_keep_canonical(spark, sf_dir):
     Input docs are the same multi-path scan the pair query reads, so
     every clustered id resolves."""
     from .operators.dedup import connected_components, keep_canonical
-    cc = connected_components(q_simhash_neardup_pairs(spark, sf_dir),
-                              "doc1", "doc2")
+    cc = connected_components(q_simhash_neardup_pairs(spark, sf_dir))
     docs = (spark.read.parquet(f"{sf_dir}/documents.parquet",
                                _planted_nd_docs_parquet())
             .select("doc_id", "n_chars"))
@@ -804,8 +803,7 @@ def q_dedup_survivors(spark, sf_dir):
         dedup_survivors,
         keep_canonical,
     )
-    cc = connected_components(q_simhash_neardup_pairs(spark, sf_dir),
-                              "doc1", "doc2")
+    cc = connected_components(q_simhash_neardup_pairs(spark, sf_dir))
     docs = (spark.read.parquet(f"{sf_dir}/documents.parquet",
                                _planted_nd_docs_parquet())
             .select("doc_id", "source", "n_chars"))

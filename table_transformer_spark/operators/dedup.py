@@ -17,8 +17,8 @@ Four families, all shuffle-conscious:
   Hamming distance inside blocks.
 
 Plus the resolution stage every pair-finder feeds: **connected
-components** over the pair graph (cluster ids via min-label
-propagation) and **canonical-document selection** (one keeper per
+components** over the pair graph (cluster ids via large-star/small-star
+edge rewriting) and **canonical-document selection** (one keeper per
 cluster) — together they turn "these docs look alike" into "drop
 these rows", which is the actual deliverable of corpus dedup.
 
@@ -51,7 +51,6 @@ __all__ = [
     "simhash_udf",
     "simhash_neardup_pairs",
     "connected_components",
-    "connected_components_star",
     "keep_canonical",
     "dedup_survivors",
 ]
@@ -448,105 +447,22 @@ def simhash_neardup_pairs(df: DataFrame, id_col: str, text_col: str,
             .filter(F.col("hamming") <= max_hamming))
 
 
-def connected_components(pairs: DataFrame, src: str = "doc1",
-                         dst: str = "doc2",
-                         max_iter: int = 25) -> DataFrame:
-    """Cluster assignment over a near-duplicate pair graph.
+def connected_components(pairs: DataFrame, max_iter: int = 40) -> DataFrame:
+    """Cluster assignment over a near-duplicate ``(doc1, doc2)`` pair
+    graph.
 
     Returns ``(node, cluster_id)`` for every node that appears in
     *pairs*, where ``cluster_id`` is the minimum node id reachable in
     the undirected graph — the standard canonical component label.
-    Degenerate self-pairs (a pair-finder never emits them) are
-    ignored, here and in :func:`connected_components_star`.
+    Degenerate self-pairs (a pair-finder never emits them) are ignored.
 
-    **Algorithm**: min-label propagation as a driver-side loop of
-    DataFrame joins.  Each round every node adopts
-    ``min(own label, neighbours' labels)``; labels converge in
-    O(graph diameter) rounds.  Near-dup components are shallow by
-    construction (an article and its mirrors all pair with each
-    other), so the round count is small and independent of corpus
-    size.  Each round costs two node-id equi-joins and one groupBy —
-    all over the PAIR relation, which is orders of magnitude smaller
-    than the corpus, so the loop never rescans documents.  For
-    adversarially deep graphs use
-    :func:`connected_components_star` (O(log²) rounds); the simple
-    propagation is the default because dedup graphs don't exhibit
-    long paths at any scale.
-
-    Lineage is truncated with ``localCheckpoint`` every round
-    (iterative joins otherwise stack an unbounded plan and re-execute
-    prior rounds); the input edge relation is checkpointed once so
-    upstream pair-finding (LSH joins, simhash kernels) runs a single
-    time no matter how many rounds follow.  Raises ``RuntimeError``
-    after *max_iter* rounds rather than returning partial labels.
-    """
-    e = (pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-         .filter(F.col("a") != F.col("b")))
-    # eager=False on the edge checkpoint: the eager label-init job
-    # below materializes it as a side effect, so the loop setup costs
-    # ONE driver-blocking job instead of two; every round still reads
-    # the persisted edge blocks, never the upstream pair pipeline
-    sym = (e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-           .distinct()
-           .localCheckpoint(eager=False))
-    # init fused with round 1: with every label starting as its own
-    # node id, the first propagation round computes exactly
-    # least(node, min(neighbour ids)) — so seed the loop with that
-    # aggregate directly (one groupBy over the checkpointed edges, no
-    # join) and save a full join+checkpoint round every run
-    labels = (sym.groupBy("a").agg(F.min("b").alias("nbr0"))
-              .select(F.col("a").alias("node"),
-                      F.least(F.col("a"), F.col("nbr0")).alias("label"))
-              .localCheckpoint(eager=True))
-    def _step(lbl):
-        """One min-label propagation step (same relation shape in and
-        out: (node, label) plus any carried columns)."""
-        nbr = (sym.join(lbl.select(F.col("node").alias("b"),
-                                   F.col("label").alias("b_label")), "b")
-               .groupBy("a").agg(F.min("b_label").alias("nbr_label")))
-        return (lbl
-                .join(nbr.select(F.col("a").alias("node"), "nbr_label"),
-                      "node", "left")
-                .withColumn("label",
-                            F.least(F.col("label"),
-                                    F.coalesce("nbr_label", "label")))
-                .drop("nbr_label"))
-
-    for _ in range(max_iter):
-        # TWO propagation steps per checkpointed round: the per-round
-        # fixed cost (checkpoint job + convergence scan) dominates the
-        # tiny-relation joins, so composing two steps into one job
-        # halves the round count for the same reachability growth.
-        # The original label rides along as label0, so the convergence
-        # check still compares across the whole round on materialized
-        # data — no extra join or shuffle.
-        merged = (_step(_step(
-            labels.withColumn("label0", F.col("label"))))
-            .localCheckpoint(eager=True))
-        # labels only ever decrease ⇒ strictly-less ⇔ changed
-        changed = (merged.filter(F.col("label") < F.col("label0"))
-                   .limit(1).count())
-        labels = merged.select("node", "label")
-        if changed == 0:
-            return labels.select("node", F.col("label").alias("cluster_id"))
-    raise RuntimeError(
-        f"connected_components: no convergence after {max_iter} rounds — "
-        "the pair graph has a path longer than expected for near-dup "
-        "data; raise max_iter or use connected_components_star")
-
-
-def connected_components_star(pairs: DataFrame, src: str = "doc1",
-                              dst: str = "doc2",
-                              max_iter: int = 40) -> DataFrame:
-    """:func:`connected_components` for adversarially DEEP pair
-    graphs: alternating large-star/small-star (Kiveris et al.,
-    *Connected Components in MapReduce and Beyond*, SoCC'14).
-
-    Same ``(node, cluster_id)`` contract and the same per-round cost
-    shape (one groupBy + one join over the edge relation), but
-    convergence in O(log²) rounds instead of O(diameter): a
-    million-node path labels in ~a dozen rounds where propagation
-    needs a million.  Each round REWRITES the edge set instead of
+    **Algorithm**: alternating large-star/small-star (Kiveris et al.,
+    *Connected Components in MapReduce and Beyond*, SoCC'14), which
+    converges in O(log²) rounds whatever the graph's depth: a
+    million-node path labels in ~a dozen rounds.  Each round is a
+    driver-side pair of window-min passes over the EDGE relation,
+    which is orders of magnitude smaller than the corpus, and it
+    REWRITES the edge set (every edge kept as ``u > v``) instead of
     carrying a separate label relation:
 
     - **large-star**: per node u with m = min(N(u) ∪ {u}), replace
@@ -556,66 +472,71 @@ def connected_components_star(pairs: DataFrame, src: str = "doc1",
       (directed edges u→v, v < u), replace them all with (v, m),
       m = min — the star flattens onto its minimum.
 
-    At the fixpoint every edge is (node, component-min), which is the
-    answer.  Convergence is detected on the checkpointed round result
-    via (count, hash-sum) of the edge set — a local scan, no extra
-    shuffle (the astronomically-unlikely hash-sum collision costs one
-    extra no-op round, never a wrong answer, because a fixpoint stays
-    a fixpoint).  Preferred over propagation only when depth is
-    actually expected: its constant factor is ~2× per round and it
-    shuffles edges rather than labels.
+    The loop stops in the round whose result is a set of stars: no
+    node has two out-edges and no node is both a source and a target.
+    Every edge points to a smaller node, so each such star is centred
+    on its smallest node, and both operations preserve connectivity,
+    so that centre is the component minimum — the test is exact.
+
+    The input edges and every round's result are truncated with
+    ``localCheckpoint`` (iterative joins otherwise stack an unbounded
+    plan and re-execute prior rounds), so upstream pair-finding (LSH
+    joins, simhash kernels) runs a single time.  Raises
+    ``RuntimeError`` after *max_iter* rounds rather than returning
+    partial labels.
     """
-    e = (pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    e = (pairs.select(F.col("doc1").alias("u"), F.col("doc2").alias("v"))
          .filter(F.col("u") != F.col("v")))
     # orient every edge large→small so both phases group on "u"
     e = (e.select(F.greatest("u", "v").alias("u"),
                   F.least("u", "v").alias("v"))
          .distinct()
          .localCheckpoint(eager=True))
-    prev_sig = None
+    # per-node minima as window aggregates: one shuffle per phase and
+    # no join back, and the window buffer spills, so a hub node's edge
+    # list never has to fit in memory
+    w = Window.partitionBy("u")
     for _ in range(max_iter):
         # --- large-star over the symmetrized edges -------------------
         sym = e.union(e.select(F.col("v").alias("u"),
                                F.col("u").alias("v")))
-        mins = (sym.groupBy("u")
-                .agg(F.min("v").alias("mn"))
-                .select("u", F.least("u", "mn").alias("m")))
-        large = (sym.join(mins, "u")
+        # v > u >= m, so no emitted edge is a self-loop
+        large = (sym.withColumn("m", F.least("u", F.min("v").over(w)))
                  .filter(F.col("v") > F.col("u"))
-                 .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                 .filter(F.col("u") != F.col("v"))
-                 .distinct())
+                 .select(F.col("v").alias("u"), F.col("m").alias("v")))
         # --- small-star over the large→small directed edges ----------
-        mins2 = (large.groupBy("u")
-                 .agg(F.min("v").alias("m")))   # v < u ⇒ min(N⁻(u))
-        small = (large.join(mins2, "u")
-                 .select(F.col("v").alias("node"), F.col("m"),
-                         F.col("u").alias("center"))
-                 .select(F.explode(F.array(
-                     F.struct(F.col("node").alias("u"),
-                              F.col("m").alias("v")),
-                     F.struct(F.col("center").alias("u"),
-                              F.col("m").alias("v")))).alias("s"))
-                 .select("s.u", "s.v")
-                 .filter(F.col("u") != F.col("v"))
-                 .distinct()
-                 .localCheckpoint(eager=True))
-        e = small
-        sig = small.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.hash("u", "v").cast("long")).alias("h")).collect()[0]
-        sig = (sig["n"], sig["h"])
-        if sig == prev_sig:
-            roots = e.select(F.col("v").alias("node"),
-                             F.col("v").alias("cluster_id")).distinct()
+        # (duplicate edges in `large` leave the min unchanged and are
+        # dropped by the distinct below)
+        e = (large.withColumn("m", F.min("v").over(w))   # v < u
+             .select(F.explode(F.array(
+                 F.struct(F.col("v").alias("u"), F.col("m").alias("v")),
+                 F.struct(F.col("u").alias("u"),
+                          F.col("m").alias("v")))).alias("s"))
+             .select("s.u", "s.v")
+             .filter(F.col("u") != F.col("v"))
+             .distinct()
+             .localCheckpoint(eager=True))
+        ends = (e.select(F.col("u").alias("n"), F.lit(1).alias("n_out"),
+                         F.lit(0).alias("n_in"))
+                .union(e.select(F.col("v").alias("n"), F.lit(0).alias("n_out"),
+                                F.lit(1).alias("n_in")))
+                .groupBy("n")
+                .agg(F.sum("n_out").alias("n_out"),
+                     F.sum("n_in").alias("n_in")))
+        not_star = (ends.filter((F.col("n_out") > 1)
+                                | ((F.col("n_out") > 0) & (F.col("n_in") > 0)))
+                    .limit(1).count())
+        if not_star == 0:
+            # sources and targets are disjoint and each source has one
+            # edge, so the two label sets are already distinct
             return (e.select(F.col("u").alias("node"),
                              F.col("v").alias("cluster_id"))
-                    .union(roots).distinct())
-        prev_sig = sig
+                    .union(e.select(F.col("v").alias("node"),
+                                    F.col("v").alias("cluster_id"))
+                           .distinct()))
     raise RuntimeError(
-        f"connected_components_star: no convergence after {max_iter} "
-        "rounds (O(log² n) expected — check for id-type overflow or "
-        "raise max_iter)")
+        f"connected_components: no convergence after {max_iter} rounds "
+        "(O(log² n) expected); raise max_iter")
 
 
 def keep_canonical(docs: DataFrame, clusters: DataFrame,

@@ -19,8 +19,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def widen_for_cpu(df: DataFrame, *keys: str, factor: int = 2) -> DataFrame:
-    """Hash-repartition on *keys* at ``factor × defaultParallelism``
+# partitions per core (see module docstring)
+WIDEN_FACTOR = 2
+
+
+def widen_for_cpu(df: DataFrame, *keys: str) -> DataFrame:
+    """Hash-repartition on *keys* at ``WIDEN_FACTOR × defaultParallelism``
     ahead of a CPU-bound kernel stage (see module docstring)."""
     sc = df.sparkSession.sparkContext
-    return df.repartition(sc.defaultParallelism * factor, *keys)
+    return df.repartition(sc.defaultParallelism * WIDEN_FACTOR, *keys)

@@ -561,7 +561,7 @@ def test_emit_topk_partition_selection_matches_stable_sort():
 
 
 def test_connected_components_multi_hop_path(spark):
-    # path 4-3-2-1 (min at one end: 3 propagation hops) + isolated pair
+    # path 4-3-2-1 (min at one end, 3 hops away) + isolated pair
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11)], "doc1 long, doc2 long")
     from table_transformer_spark.operators.dedup import connected_components
@@ -611,19 +611,14 @@ def test_keep_canonical_quality_then_min_id(spark):
     assert got == {(1, 2, 3), (10, 10, 2)}
 
 
-def test_connected_components_star_deep_path(spark):
-    # a 200-node path has diameter 199: propagation at its default 25
-    # rounds must refuse; the star variant labels it in O(log²) rounds
-    from table_transformer_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+def test_connected_components_deep_path(spark):
+    # a 200-node path has diameter 199; large/small-star labels it in
+    # O(log²) rounds, well inside the default max_iter
+    from table_transformer_spark.operators.dedup import connected_components
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(200)], "doc1 long, doc2 long")
-    with pytest.raises(RuntimeError, match="no convergence"):
-        connected_components(edges)
     labels = {r.node: r.cluster_id
-              for r in connected_components_star(edges).collect()}
+              for r in connected_components(edges).collect()}
     assert len(labels) == 201
     assert set(labels.values()) == {0}
 
@@ -677,28 +672,27 @@ def test_connected_components_matches_reference(spark):
         g += [(b, a) for a, b in rng.sample(g, 10)]
         rng.shuffle(g)
         edges += g
-    df = spark.createDataFrame(edges, "doc1 long, doc2 long")
-    got = {(r.node, r.cluster_id)
-           for r in connected_components(df).collect()}
-    assert got == _reference_components(edges)
+    # a 7-node path whose first round leaves node 3 with out-edges to
+    # both 1 and 2 and no in-edge: stopping there (no node is both a
+    # source and a target) would give node 3 two cluster ids
+    path = [(1, 5), (5, 10), (3, 10), (3, 11), (2, 6), (6, 11)]
+    for g in (edges, path):
+        df = spark.createDataFrame(g, "doc1 long, doc2 long")
+        rows = connected_components(df).collect()
+        got = {(r.node, r.cluster_id) for r in rows}
+        assert len(rows) == len(got)   # one row per node
+        assert got == _reference_components(g)
 
 
 def test_connected_components_ignore_self_pairs(spark):
-    # degenerate self-pairs never come from a pair-finder; both
-    # variants must ignore them identically rather than inventing
-    # singleton clusters
-    from table_transformer_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    # degenerate self-pairs never come from a pair-finder; they must be
+    # ignored rather than inventing singleton clusters
+    from table_transformer_spark.operators.dedup import connected_components
     edges = spark.createDataFrame(
         [(7, 7), (1, 2), (2, 2)], "doc1 long, doc2 long")
-    want = {(1, 1), (2, 1)}
-    got_p = {(r.node, r.cluster_id)
-             for r in connected_components(edges).collect()}
-    got_s = {(r.node, r.cluster_id)
-             for r in connected_components_star(edges).collect()}
-    assert got_p == want and got_s == want
+    got = {(r.node, r.cluster_id)
+           for r in connected_components(edges).collect()}
+    assert got == {(1, 1), (2, 1)}
 
 
 def test_dedup_survivors_keeps_keepers_and_unclustered(spark):
