@@ -1450,12 +1450,11 @@ def q_pdf_text_fixpoint(spark, sf_dir):
     tables (cell (r,c) = page words 10r+2c+1..+2, tight bboxes shrunk
     2pt) converge in exactly 2 iterations: pass 1 re-extracts the words
     and restores the full hulls, pass 2 confirms the fixpoint."""
-    import pandas as pd
-
     from pyspark.sql import types as T
 
     from .geometry import Box
     from .kernels.canonicalize import extract_pdf_text_fixpoint
+    from .partitioning import map_rows, widen_for_cpu
 
     # sanitized tokens: no '.'/',' so the dot-leader repair and
     # punctuation re-spacing are no-ops on both sides
@@ -1470,10 +1469,6 @@ def q_pdf_text_fixpoint(spark, sf_dir):
     tables = (_planted_docs(spark, sf_dir)
               .select("doc_id", words.alias("words"),
                       cells.alias("cells")))
-    # CPU-heavy Arrow kernel over few rows — keep it wide
-    from .partitioning import widen_for_cpu
-    tables = widen_for_cpu(tables, "doc_id")
-
     schema = T.StructType([
         T.StructField("doc_id", T.LongType()),
         T.StructField("cell_num", T.IntegerType()),
@@ -1485,40 +1480,35 @@ def q_pdf_text_fixpoint(spark, sf_dir):
         T.StructField("iterations", T.IntegerType()),
     ])
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                page_words = [{"text": w["text"],
-                               "bbox": [w["x0"], w["y0"], w["x1"], w["y1"]]}
-                              for w in rec.words]
-                tcells = []
-                for cell in rec.cells:
-                    a = int(cell["a"])
-                    hull = Box(page_words[a]["bbox"]).include_rect(
-                        page_words[a + 1]["bbox"]).tolist()
-                    tcells.append({
-                        "text": "", "row_nums": [int(cell["r"])],
-                        "column_nums": [int(cell["c"])],
-                        # shrink: the fixpoint must grow it back
-                        "bbox": [hull[0] + 2, hull[1] + 2,
-                                 hull[2] - 2, hull[3] - 2]})
-                table = {"cells": tcells,
-                         "rows": {r: {} for r in range(3)},
-                         "columns": {c: {} for c in range(4)},
-                         "reject": [], "fix": []}
-                iters = extract_pdf_text_fixpoint(table, page_words)
-                for i, cell in enumerate(table["cells"]):
-                    rows.append({
-                        "doc_id": rec.doc_id, "cell_num": i,
-                        "pdf_text": cell["pdf_text_content"],
-                        "x0": cell["bbox"][0], "y0": cell["bbox"][1],
-                        "x1": cell["bbox"][2], "y1": cell["bbox"][3],
-                        "iterations": iters})
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {f.name: pd.Series(dtype=object) for f in schema})
+    def fixpoint(rec):
+        page_words = [{"text": w["text"],
+                       "bbox": [w["x0"], w["y0"], w["x1"], w["y1"]]}
+                      for w in rec.words]
+        tcells = []
+        for cell in rec.cells:
+            a = int(cell["a"])
+            hull = Box(page_words[a]["bbox"]).include_rect(
+                page_words[a + 1]["bbox"]).tolist()
+            tcells.append({
+                "text": "", "row_nums": [int(cell["r"])],
+                "column_nums": [int(cell["c"])],
+                # shrink: the fixpoint must grow it back
+                "bbox": [hull[0] + 2, hull[1] + 2,
+                         hull[2] - 2, hull[3] - 2]})
+        table = {"cells": tcells,
+                 "rows": {r: {} for r in range(3)},
+                 "columns": {c: {} for c in range(4)},
+                 "reject": [], "fix": []}
+        iters = extract_pdf_text_fixpoint(table, page_words)
+        return [{"doc_id": rec.doc_id, "cell_num": i,
+                 "pdf_text": cell["pdf_text_content"],
+                 "x0": cell["bbox"][0], "y0": cell["bbox"][1],
+                 "x1": cell["bbox"][2], "y1": cell["bbox"][3],
+                 "iterations": iters}
+                for i, cell in enumerate(table["cells"])]
 
-    return tables.mapInPandas(kernel, schema=schema)
+    # CPU-heavy Arrow kernel over few rows — keep it wide
+    return map_rows(widen_for_cpu(tables, "doc_id"), fixpoint, schema)
 
 
 ORACLE_PDF_TEXT_FIXPOINT = f"""
@@ -1547,11 +1537,10 @@ def q_create_table_dict_checks(spark, sf_dir):
     pdf-cell annotations with deterministic defects — doc_id%60==0
     drops a pdf cell ("annotation mismatch"), doc_id%60==20 drops a
     grid slot ("HTML missing grid cells"), doc_id%60==40 is clean."""
-    import pandas as pd
-
     from pyspark.sql import types as T
 
     from .operators.fintabnet import create_table_dict
+    from .partitioning import map_rows
 
     schema = T.StructType([
         T.StructField("doc_id", T.LongType()),
@@ -1566,32 +1555,26 @@ def q_create_table_dict_checks(spark, sf_dir):
     missing = ("<table><tr><td>A</td><td>B</td></tr>"
                "<tr><td>C</td></tr></table>")
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                variant = doc_id % 60
-                if variant == 20:
-                    html, n_pdf = missing, 3
-                elif variant == 0:
-                    html, n_pdf = full, 3  # one annotation short
-                else:
-                    html, n_pdf = full, 4
-                pdf_cells = [{"tokens": [f"t{i}"],
-                              "bbox": [float(i), 0.0, float(i) + 1, 1.0]}
-                             for i in range(n_pdf)]
-                table = create_table_dict(html, pdf_cells)
-                rows.append({
-                    "doc_id": doc_id,
-                    "n_cells": len(table["cells"]),
-                    "n_rows": len(table["rows"]),
-                    "n_cols": len(table["columns"]),
-                    "rejects": ",".join(table["reject"])})
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {f.name: pd.Series(dtype=object) for f in schema})
+    def checks(rec):
+        variant = rec.doc_id % 60
+        if variant == 20:
+            html, n_pdf = missing, 3
+        elif variant == 0:
+            html, n_pdf = full, 3  # one annotation short
+        else:
+            html, n_pdf = full, 4
+        pdf_cells = [{"tokens": [f"t{i}"],
+                      "bbox": [float(i), 0.0, float(i) + 1, 1.0]}
+                     for i in range(n_pdf)]
+        table = create_table_dict(html, pdf_cells)
+        return [{"doc_id": rec.doc_id,
+                 "n_cells": len(table["cells"]),
+                 "n_rows": len(table["rows"]),
+                 "n_cols": len(table["columns"]),
+                 "rejects": ",".join(table["reject"])}]
 
-    return (_planted_docs(spark, sf_dir).select("doc_id")
-            .mapInPandas(kernel, schema=schema))
+    return map_rows(_planted_docs(spark, sf_dir).select("doc_id"),
+                    checks, schema)
 
 
 ORACLE_CREATE_TABLE_DICT_CHECKS = f"""
@@ -2224,25 +2207,16 @@ def q_canonicalize_tables(spark, sf_dir):
             c([2], [0], w(10)), c([2], [1, 2], w(11))],
     }
 
-    # all six variants ride one scan: every cell struct is tagged with
-    # its table_num and the whole plant explodes in a single generate.
-    # The width-pinning exchange runs BEFORE the explode — it then
-    # moves one slim doc row instead of ~120 cell structs per doc, and
-    # the doc_id hash partitioning carries through the narrow explode
-    # to satisfy the grouped kernel's distribution directly
-    # (prepartitioned=True: no second exchange).
-    from table_transformer_spark.partitioning import widen_for_cpu
-
-    tagged = [F.struct(F.lit(tnum).alias("table_num"), cell.alias("cell"))
-              for tnum, cells in variants.items() for cell in cells]
-    inp = (widen_for_cpu(
-               docs.select(F.col("doc_id").cast("string").alias("doc_id"),
-                           "text"), "doc_id")
-           .select("doc_id", F.explode(F.array(*tagged)).alias("tc"))
+    # all six variants ride one scan: one table row per (doc, variant)
+    # from a single generate
+    tables = [F.struct(F.lit(tnum).alias("table_num"),
+                       F.array(*cells).alias("cells"))
+              for tnum, cells in variants.items()]
+    inp = (docs.select(F.col("doc_id").cast("string").alias("doc_id"),
+                       F.explode(F.array(*tables)).alias("t"))
            .select("doc_id", F.lit("planted://canon").alias("media_ref"),
-                   F.col("tc.table_num").alias("table_num"),
-                   "tc.cell.*"))
-    out = canonicalize_cells_df(inp, prepartitioned=True)
+                   "t.table_num", "t.cells"))
+    out = canonicalize_cells_df(inp)
     # array columns serialized for the driver's pandas value hasher
     return out.select(
         "doc_id", "media_ref", "table_num", "cell_num",
@@ -2366,11 +2340,9 @@ def q_cells_html_export(spark, sf_dir):
         cell([1, 2], [0], w(8)), cell([1], [1], w(9)),
         cell([1], [2], w(10)),
         cell([2], [1], w(11)), cell([2], [2], w(12)))
-    inp = (docs.select(F.col("doc_id").cast("string").alias("doc_id"),
-                       F.lit("planted://html").alias("media_ref"),
-                       F.lit(0).alias("table_num"),
-                       F.explode(cells).alias("cell"))
-           .select("doc_id", "media_ref", "table_num", "cell.*"))
+    inp = docs.select(F.col("doc_id").cast("string").alias("doc_id"),
+                      F.lit("planted://html").alias("media_ref"),
+                      F.lit(0).alias("table_num"), cells.alias("cells"))
     return export_tables(inp).select("doc_id", "html")
 
 

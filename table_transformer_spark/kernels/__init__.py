@@ -1,5 +1,6 @@
 """Deterministic kernels that run inside the Arrow-batched pandas stages
-(the fused ``mapInPandas`` page kernel, grouped ``applyInPandas``)."""
+(the fused ``mapInPandas`` page kernel and the one-row-per-table
+``mapInPandas`` kernels driven by ``partitioning.map_rows``)."""
 
 from .slotting import (
     greedy_nms,

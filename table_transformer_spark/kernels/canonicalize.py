@@ -14,8 +14,9 @@ canonical cell semantics.  A *table dict* here is::
 ``pdf_text_tight_bbox`` is ``bbox``.)  ``reject``/``fix`` accumulate
 provenance exactly like the reference and feed the status table.
 
-On the Spark side these run per table inside ``applyInPandas``
-(:func:`canonicalize_cells_df`); the cumulative-renumbering step also
+On the Spark side these run once per table row inside one
+``mapInPandas`` pass (:func:`canonicalize_cells_df`,
+:func:`standardize_tables_df`); the cumulative-renumbering step also
 has an oracle-checked DataFrame twin (``cumsum_renumber`` in
 driver_queries).
 """

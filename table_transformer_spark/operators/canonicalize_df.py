@@ -2,15 +2,16 @@
 
 Runs the FinTabNet ETL chain (annotate projected row headers → remove
 empty rows/columns → merge fully-spanned rows/columns → header rules →
-blank-absorption canonicalization) per table via ``applyInPandas``,
-emitting canonical cells plus the reject/fix provenance lists that feed
-the status table (``scripts/process_fintabnet.py:1241-1249`` pipeline
-order, minus the PDF-text fixpoint which needs real PDFs).
+blank-absorption canonicalization) per table, emitting canonical cells
+plus the reject/fix provenance lists that feed the status table
+(``scripts/process_fintabnet.py:1241-1249`` pipeline order, minus the
+PDF-text fixpoint which needs real PDFs), and the PubMed standardize
+chain.  Each input row is one table with its cells as an array column,
+so both run as a single ``mapInPandas`` pass (``partitioning.map_rows``)
+with no grouping.
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
@@ -23,7 +24,9 @@ from ..kernels.canonicalize import (
     merge_rows,
     remove_empty_columns,
     remove_empty_rows,
+    standardize_and_fix_xml_annotation,
 )
+from ..partitioning import map_rows, widen_for_cpu
 
 CANONICAL_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType()),
@@ -40,15 +43,22 @@ CANONICAL_SCHEMA = T.StructType([
 ])
 
 
-def _kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+def _cell_order(c):
+    """Output cell order: (min row, min col), ties broken by the whole
+    cell so that ``cell_num`` does not depend on the input order."""
+    return (min(c["row_nums"], default=0), min(c["column_nums"], default=0),
+            sorted(c["row_nums"]), sorted(c["column_nums"]), c["text"])
+
+
+def _canonicalize_table(rec) -> list[dict]:
     cells = [{
-        "row_nums": sorted(r.row_nums),
-        "column_nums": sorted(r.column_nums),
-        "text": r.cell_text,
-        "is_column_header": bool(r.is_column_header),
-        "is_projected_row_header": bool(r.is_projected_row_header),
-        "bbox": list(r.bbox) if r.bbox is not None else [],
-    } for r in pdf.itertuples(index=False)]
+        "row_nums": sorted(c["row_nums"]),
+        "column_nums": sorted(c["column_nums"]),
+        "text": c["cell_text"],
+        "is_column_header": bool(c["is_column_header"]),
+        "is_projected_row_header": bool(c["is_projected_row_header"]),
+        "bbox": list(c["bbox"]) if c["bbox"] is not None else [],
+    } for c in rec.cells]
 
     n_rows = max((max(c["row_nums"]) for c in cells), default=-1) + 1
     n_cols = max((max(c["column_nums"]) for c in cells), default=-1) + 1
@@ -70,82 +80,41 @@ def _kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
     correct_header(table)
     canonicalize(table)
 
-    rows = []
-    ordered = sorted(table["cells"],
-                     key=lambda c: (min(c["row_nums"], default=0),
-                                    min(c["column_nums"], default=0)))
+    key = {"doc_id": rec.doc_id, "media_ref": rec.media_ref,
+           "table_num": int(rec.table_num)}
+    ordered = sorted(table["cells"], key=_cell_order)
     if not ordered and (table["reject"] or table["fix"]):
         # fully-emptied tables still owe their provenance to the status
         # table — emit one sentinel row (cell_num = -1) carrying it
-        rows.append({
-            "doc_id": key[0], "media_ref": key[1], "table_num": int(key[2]),
-            "cell_num": -1, "row_nums": [], "column_nums": [],
-            "cell_text": "", "is_column_header": False,
-            "is_projected_row_header": False,
-            "reject": list(table["reject"]), "fix": list(table["fix"]),
-        })
-    for i, c in enumerate(ordered):
-        rows.append({
-            "doc_id": key[0], "media_ref": key[1], "table_num": int(key[2]),
-            "cell_num": i,
-            "row_nums": list(c["row_nums"]),
-            "column_nums": list(c["column_nums"]),
-            "cell_text": c["text"],
-            "is_column_header": bool(c.get("is_column_header")),
-            "is_projected_row_header": bool(c.get("is_projected_row_header")),
-            "reject": list(table["reject"]),
-            "fix": list(table["fix"]),
-        })
-    out = pd.DataFrame(rows)
-    if out.empty:
-        out = pd.DataFrame(
-            {f.name: pd.Series(dtype=object) for f in CANONICAL_SCHEMA})
-    return out
+        return [dict(key, cell_num=-1, row_nums=[], column_nums=[],
+                     cell_text="", is_column_header=False,
+                     is_projected_row_header=False,
+                     reject=list(table["reject"]), fix=list(table["fix"]))]
+    return [dict(key, cell_num=i,
+                 row_nums=list(c["row_nums"]),
+                 column_nums=list(c["column_nums"]),
+                 cell_text=c["text"],
+                 is_column_header=bool(c.get("is_column_header")),
+                 is_projected_row_header=bool(
+                     c.get("is_projected_row_header")),
+                 reject=list(table["reject"]), fix=list(table["fix"]))
+            for i, c in enumerate(ordered)]
 
 
-def _kernel_doc(key, pdf: pd.DataFrame) -> pd.DataFrame:
-    """Per-document dispatch: one Arrow group carries ALL of the doc's
-    tables and the per-table chain runs unchanged on each — grouped-map
-    ships one Arrow batch per GROUP, so grouping at doc level divides
-    that per-group overhead by the tables-per-doc factor while
-    producing the identical row set."""
-    # dropna=False: Spark's groupBy keeps NULL keys as a group, so the
-    # pandas dispatch must too (no such rows in current inputs — this
-    # pins the equivalence rather than relying on the data)
-    parts = [_kernel((key[0], mr, tn), g)
-             for (mr, tn), g in pdf.groupby(["media_ref", "table_num"],
-                                            sort=True, dropna=False)]
-    return pd.concat(parts, ignore_index=True)
+def canonicalize_cells_df(tables: DataFrame) -> DataFrame:
+    """One row per table → canonicalized cells + provenance.
 
-
-def canonicalize_cells_df(cells: DataFrame,
-                          prepartitioned: bool = False) -> DataFrame:
-    """CELL_SCHEMA rows → canonicalized cells + provenance, per table.
-
-    Explicit widen before the grouped kernel: the canonicalize chain is
-    CPU-bound per group while the rows are tiny, so AQE's byte-based
-    coalescing would otherwise serialize every table into one task
-    (shared policy: ``partitioning.widen_for_cpu``).
-
-    Two grouping regimes:
-
-    * default — widen + group on the full (doc, media, table) key:
-      maximum spread, safe for table-heavy documents;
-    * ``prepartitioned=True`` — the caller has already hash-partitioned
-      the input by ``doc_id`` (e.g. by widening the slim pre-explode
-      relation so the exchange moves docs instead of cell structs) and
-      accepts doc-level grouping: one Arrow group per doc (per-group
-      overhead ÷ tables-per-doc, no second exchange because doc_id is
-      a subset of the implied clustering).  Only choose it when
-      documents are plentiful relative to cores — all of a doc's
-      tables then run in one task."""
-    if prepartitioned:
-        return (cells.groupBy("doc_id")
-                .applyInPandas(_kernel_doc, schema=CANONICAL_SCHEMA))
-    from ..partitioning import widen_for_cpu
-    return (widen_for_cpu(cells, "doc_id", "media_ref", "table_num")
-            .groupBy("doc_id", "media_ref", "table_num")
-            .applyInPandas(_kernel, schema=CANONICAL_SCHEMA))
+    Input: (doc_id, media_ref, table_num, cells
+    array<struct<row_nums, column_nums, cell_text, is_column_header,
+    is_projected_row_header, bbox>>).  Explicit widen before the row
+    kernel: the canonicalize chain is CPU-bound per table while the
+    rows are tiny, so AQE's byte-based coalescing would otherwise
+    serialize every table into one task (shared policy:
+    ``partitioning.widen_for_cpu``)."""
+    return map_rows(
+        widen_for_cpu(tables, "doc_id", "media_ref", "table_num")
+        .select("doc_id", "media_ref", "table_num", "cells"),
+        _canonicalize_table, CANONICAL_SCHEMA)
 
 
 STANDARDIZED_SCHEMA = T.StructType([
@@ -163,48 +132,31 @@ STANDARDIZED_SCHEMA = T.StructType([
 ])
 
 
-def _standardize_kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-    from ..kernels.canonicalize import standardize_and_fix_xml_annotation
-
-    rows = []
-    for rec in pdf.itertuples(index=False):
-        cells = [{"text": c["text"],
-                  "row_nums": list(c["row_nums"]),
-                  "column_nums": list(c["column_nums"]),
-                  "is_column_header": bool(c["is_column_header"]),
-                  "bbox": [c["x0"], c["y0"], c["x1"], c["y1"]]}
-                 for c in rec.cells]
-        table = {"cells": cells}
-        standardize_and_fix_xml_annotation(table)
-        ordered = sorted(table["cells"],
-                         key=lambda c: (min(c["row_nums"]),
-                                        min(c["column_nums"])))
-        for i, c in enumerate(ordered):
-            rows.append({
-                "doc_id": key[0], "cell_num": i,
-                "row_nums": ",".join(map(str, sorted(c["row_nums"]))),
-                "column_nums": ",".join(map(str, sorted(c["column_nums"]))),
-                "cell_text": c["text"],
-                "is_column_header": bool(c["is_column_header"]),
-                "is_projected_row_header":
-                    bool(c.get("is_projected_row_header")),
-                "x0": c["bbox"][0], "y0": c["bbox"][1],
-                "x1": c["bbox"][2], "y1": c["bbox"][3],
-            })
-    out = pd.DataFrame(rows)
-    if out.empty:
-        out = pd.DataFrame({f.name: pd.Series(dtype=object)
-                            for f in STANDARDIZED_SCHEMA})
-    return out
+def _standardize_table(rec) -> list[dict]:
+    cells = [{"text": c["text"],
+              "row_nums": list(c["row_nums"]),
+              "column_nums": list(c["column_nums"]),
+              "is_column_header": bool(c["is_column_header"]),
+              "bbox": [c["x0"], c["y0"], c["x1"], c["y1"]]}
+             for c in rec.cells]
+    table = {"cells": cells}
+    standardize_and_fix_xml_annotation(table)
+    return [{
+        "doc_id": rec.doc_id, "cell_num": i,
+        "row_nums": ",".join(map(str, sorted(c["row_nums"]))),
+        "column_nums": ",".join(map(str, sorted(c["column_nums"]))),
+        "cell_text": c["text"],
+        "is_column_header": bool(c["is_column_header"]),
+        "is_projected_row_header": bool(c.get("is_projected_row_header")),
+        "x0": c["bbox"][0], "y0": c["bbox"][1],
+        "x1": c["bbox"][2], "y1": c["bbox"][3],
+    } for i, c in enumerate(sorted(table["cells"], key=_cell_order))]
 
 
 def standardize_tables_df(tables: DataFrame) -> DataFrame:
     """(doc_id, cells array<struct<text,row_nums,column_nums,
-    is_column_header,x0,y0,x1,y1>>) → standardized cells, one row each
-    (``standardize_and_fix_xml_annotation``,
+    is_column_header,x0,y0,x1,y1>>), one row per table → standardized
+    cells, one row each (``standardize_and_fix_xml_annotation``,
     scripts/process_pubmed.py:768-887)."""
-    from ..partitioning import widen_for_cpu
-    return (widen_for_cpu(tables, "doc_id")
-            .groupBy("doc_id")
-            .applyInPandas(_standardize_kernel,
-                           schema=STANDARDIZED_SCHEMA))
+    return map_rows(widen_for_cpu(tables, "doc_id").select("doc_id", "cells"),
+                    _standardize_table, STANDARDIZED_SCHEMA)

@@ -10,9 +10,10 @@ reference exporters:
 * ``html_to_cells`` (``src/grits.py:409-463``) — the inverse: DFS with
   colspan/rowspan grid-occupancy tracking.
 
-The DataFrame driver ``export_tables`` runs these per table inside
-``applyInPandas`` — one row per table out, shuffle only on the table
-key.  (The pivot-algebra form of the CSV export is oracle-checked as
+The DataFrame driver ``export_tables`` takes one row per table with its
+cells as an array column and runs these in a single ``mapInPandas``
+pass (``partitioning.map_rows``) — one row per table out, no grouping.
+(The pivot-algebra form of the CSV export is oracle-checked as
 ``grid_pivot_export`` in driver_queries.)
 """
 
@@ -26,6 +27,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from ..partitioning import map_rows, widen_for_cpu
 
 __all__ = ["cells_to_html", "cells_to_csv", "html_to_cells",
            "export_tables"]
@@ -157,24 +160,27 @@ EXPORT_SCHEMA = T.StructType([
 ])
 
 
-def _export_kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+def _export_table(rec) -> list[dict]:
     cells = [{
-        "row_nums": list(r.row_nums),
-        "column_nums": list(r.column_nums),
-        "header": bool(r.is_column_header),
-        "cell_text": r.cell_text,
-    } for r in pdf.itertuples(index=False)]
-    return pd.DataFrame([{
-        "doc_id": key[0], "media_ref": key[1], "table_num": int(key[2]),
+        "row_nums": list(c["row_nums"]),
+        "column_nums": list(c["column_nums"]),
+        "header": bool(c["is_column_header"]),
+        "cell_text": c["cell_text"],
+    } for c in rec.cells]
+    return [{
+        "doc_id": rec.doc_id, "media_ref": rec.media_ref,
+        "table_num": int(rec.table_num),
         "html": cells_to_html(cells),
         "csv": cells_to_csv(cells) or "",
-    }])
+    }]
 
 
-def export_tables(cells_df: DataFrame) -> DataFrame:
-    """CELL_SCHEMA rows → one (html, csv) row per table."""
-    return (cells_df
-            .select("doc_id", "media_ref", "table_num", "row_nums",
-                    "column_nums", "is_column_header", "cell_text")
-            .groupBy("doc_id", "media_ref", "table_num")
-            .applyInPandas(_export_kernel, schema=EXPORT_SCHEMA))
+def export_tables(tables: DataFrame) -> DataFrame:
+    """One row per table, (doc_id, media_ref, table_num, cells
+    array<struct<row_nums, column_nums, is_column_header, cell_text>>)
+    → one (html, csv) row per table.  ``cells_to_html`` breaks
+    (min row, min col) ties in the array's order."""
+    return map_rows(
+        widen_for_cpu(tables, "doc_id", "media_ref", "table_num")
+        .select("doc_id", "media_ref", "table_num", "cells"),
+        _export_table, EXPORT_SCHEMA)

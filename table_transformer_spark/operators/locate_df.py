@@ -1,13 +1,13 @@
 """DataFrame drivers for the locate family.
 
 * :func:`locate_cells_df` — per-table char-alignment fan-out
-  (``locate_table``, scripts/process_pubmed.py:490-569) as an
-  ``applyInPandas`` kernel: each (doc, table) group carries the page's
-  words and the table's cells; output is one row per cell with its
-  anchored hull (nulls when nothing anchored).  The DP alignment is
-  inherently per-document sequential — Spark parallelizes across
-  documents, which is exactly how the reference's process pool used it
-  (one table per worker).
+  (``locate_table``, scripts/process_pubmed.py:490-569) as a row kernel
+  (``partitioning.map_rows``): each input row is one (doc, table) and
+  carries the page's words and the table's cells as arrays; output is
+  one row per cell with its anchored hull (nulls when nothing
+  anchored).  The DP alignment is inherently per-document sequential —
+  Spark parallelizes across documents, which is exactly how the
+  reference's process pool used it (one table per worker).
 * :func:`locate_caption_df` — same shape for captions
   (``locate_caption``, scripts/process_pubmed.py:572-620), one hull row
   per (doc, table).
@@ -23,14 +23,12 @@
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..kernels.locate import locate_caption, locate_table
-from ..partitioning import widen_for_cpu
+from ..partitioning import map_rows, widen_for_cpu
 
 __all__ = [
     "locate_cells_df",
@@ -53,42 +51,28 @@ LOCATED_SCHEMA = T.StructType([
 ])
 
 
-def _locate_rows(batches):
-    """Row-wise locate kernel: every input ROW is a complete table
-    (its words + cells ride the row as arrays), so this is a
-    ``mapInPandas`` pass — the former groupBy/applyInPandas added a
-    shuffle, a per-partition sort and one Arrow batch per table for a
-    grouping the rows already had (r6 plan audit)."""
-    for pdf in batches:
-        rows = []
-        for rec in pdf.itertuples(index=False):
-            words = [{"text": w["text"],
-                      "bbox": [w["x0"], w["y0"], w["x1"], w["y1"]]}
-                     for w in rec.words]
-            cells = [{"xml_text_content": c["text"],
-                      "row_nums": list(c["row_nums"]),
-                      "column_nums": list(c["column_nums"])}
-                     for c in rec.cells]
-            cell_bboxes, _ = locate_table(words, cells)
-            for i, c in enumerate(cells):
-                bbox = (cell_bboxes or {}).get(i)
-                rows.append({
-                    "doc_id": rec.doc_id, "table_num": int(rec.table_num),
-                    "cell_num": i,
-                    "row_lo": min(c["row_nums"]),
-                    "row_hi": max(c["row_nums"]),
-                    "col_lo": min(c["column_nums"]),
-                    "col_hi": max(c["column_nums"]),
-                    "x0": bbox[0] if bbox else None,
-                    "y0": bbox[1] if bbox else None,
-                    "x1": bbox[2] if bbox else None,
-                    "y1": bbox[3] if bbox else None,
-                })
-        out = pd.DataFrame(rows)
-        if out.empty:
-            out = pd.DataFrame({f.name: pd.Series(dtype=object)
-                                for f in LOCATED_SCHEMA})
-        yield out
+def _locate_table(rec) -> list[dict]:
+    words = [{"text": w["text"],
+              "bbox": [w["x0"], w["y0"], w["x1"], w["y1"]]}
+             for w in rec.words]
+    cells = [{"xml_text_content": c["text"],
+              "row_nums": list(c["row_nums"]),
+              "column_nums": list(c["column_nums"])}
+             for c in rec.cells]
+    cell_bboxes = locate_table(words, cells)[0] or {}
+    rows = []
+    for i, c in enumerate(cells):
+        bbox = cell_bboxes.get(i) or [None] * 4
+        rows.append({
+            "doc_id": rec.doc_id, "table_num": int(rec.table_num),
+            "cell_num": i,
+            "row_lo": min(c["row_nums"]),
+            "row_hi": max(c["row_nums"]),
+            "col_lo": min(c["column_nums"]),
+            "col_hi": max(c["column_nums"]),
+            "x0": bbox[0], "y0": bbox[1], "x1": bbox[2], "y1": bbox[3],
+        })
+    return rows
 
 
 def locate_cells_df(tables_with_words: DataFrame) -> DataFrame:
@@ -97,9 +81,9 @@ def locate_cells_df(tables_with_words: DataFrame) -> DataFrame:
     *words*: ``array<struct<text,x0,y0,x1,y1>>`` in reading order;
     *cells*: ``array<struct<text,row_nums,column_nums>>``.
     """
-    return (widen_for_cpu(tables_with_words, "doc_id", "table_num")
-            .select("doc_id", "table_num", "words", "cells")
-            .mapInPandas(_locate_rows, schema=LOCATED_SCHEMA))
+    return map_rows(widen_for_cpu(tables_with_words, "doc_id", "table_num")
+                    .select("doc_id", "table_num", "words", "cells"),
+                    _locate_table, LOCATED_SCHEMA)
 
 
 CAPTION_SCHEMA = T.StructType([
@@ -112,34 +96,25 @@ CAPTION_SCHEMA = T.StructType([
 ])
 
 
-def _caption_rows(batches):
-    """Row-wise caption kernel — same rationale as :func:`_locate_rows`."""
-    for pdf in batches:
-        rows = []
-        for rec in pdf.itertuples(index=False):
-            words = [{"text": w["text"],
-                      "bbox": [w["x0"], w["y0"], w["x1"], w["y1"]]}
-                     for w in rec.words]
-            bbox, inliers = locate_caption(words, rec.caption)
-            rows.append({
-                "doc_id": rec.doc_id, "n_inliers": len(inliers),
-                "x0": bbox[0] if bbox else None,
-                "y0": bbox[1] if bbox else None,
-                "x1": bbox[2] if bbox else None,
-                "y1": bbox[3] if bbox else None,
-            })
-        out = pd.DataFrame(rows)
-        if out.empty:
-            out = pd.DataFrame({f.name: pd.Series(dtype=object)
-                                for f in CAPTION_SCHEMA})
-        yield out
+def _locate_page_caption(rec) -> list[dict]:
+    words = [{"text": w["text"],
+              "bbox": [w["x0"], w["y0"], w["x1"], w["y1"]]}
+             for w in rec.words]
+    bbox, inliers = locate_caption(words, rec.caption)
+    return [{
+        "doc_id": rec.doc_id, "n_inliers": len(inliers),
+        "x0": bbox[0] if bbox else None,
+        "y0": bbox[1] if bbox else None,
+        "x1": bbox[2] if bbox else None,
+        "y1": bbox[3] if bbox else None,
+    }]
 
 
 def locate_caption_df(pages_with_captions: DataFrame) -> DataFrame:
     """(doc_id, words, caption) → one hull row per doc."""
-    return (widen_for_cpu(pages_with_captions, "doc_id")
-            .select("doc_id", "words", "caption")
-            .mapInPandas(_caption_rows, schema=CAPTION_SCHEMA))
+    return map_rows(widen_for_cpu(pages_with_captions, "doc_id")
+                    .select("doc_id", "words", "caption"),
+                    _locate_page_caption, CAPTION_SCHEMA)
 
 
 def _quirk_min(with_bbox: DataFrame, keys, idx_col: str,

@@ -1,4 +1,4 @@
-"""Shared partitioning policies.
+"""Shared partitioning policies and the row-kernel driver.
 
 One place for the explicit-width rule used before every CPU-heavy
 Python/Arrow kernel stage: AQE's byte-based post-shuffle coalescing
@@ -12,11 +12,20 @@ reuses the partitioning without a second shuffle.
 2× cores is the default width: it keeps every worker busy under
 per-key cost variance (skewed pages, long documents) without drowning
 the scheduler in micro-tasks.
+
+:func:`map_rows` is the one driver for kernels whose input row is a
+complete unit of work (a table with its cells as an array column, a
+page with its words): one ``mapInPandas`` pass, no grouping.
 """
 
 from __future__ import annotations
 
+from typing import Callable, Iterable
+
+import pandas as pd
+
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 
 # partitions per core (see module docstring)
@@ -28,3 +37,20 @@ def widen_for_cpu(df: DataFrame, *keys: str) -> DataFrame:
     ahead of a CPU-bound kernel stage (see module docstring)."""
     sc = df.sparkSession.sparkContext
     return df.repartition(sc.defaultParallelism * WIDEN_FACTOR, *keys)
+
+
+def map_rows(df: DataFrame, fn: Callable[[tuple], Iterable[dict]],
+             schema: T.StructType) -> DataFrame:
+    """Run ``fn(rec)`` on every row of *df* in one ``mapInPandas`` pass.
+
+    *rec* is the row as a pandas ``itertuples`` record; ``fn`` returns
+    the output rows it produces as dicts keyed by *schema*'s field
+    names.  Each Arrow batch becomes one output frame, typed-empty when
+    the batch produced no rows."""
+    def kernel(batches):
+        for pdf in batches:
+            rows = [out for rec in pdf.itertuples(index=False)
+                    for out in fn(rec)]
+            yield pd.DataFrame(rows, columns=schema.names)
+
+    return df.mapInPandas(kernel, schema=schema)

@@ -1,5 +1,8 @@
 """FinTabNet-family canonicalization kernels (§2.8)."""
 
+import random
+from types import SimpleNamespace
+
 import pytest
 
 from table_transformer_spark.kernels.canonicalize import (
@@ -172,6 +175,8 @@ def test_canonicalize_blank_header_absorption():
 
 
 def test_canonicalize_cells_df_distributed(spark):
+    from pyspark.sql import functions as F
+
     from table_transformer_spark.fixtures.spark_io import documents_df, media_df
     from table_transformer_spark.operators.canonicalize_df import (
         canonicalize_cells_df,
@@ -180,7 +185,15 @@ def test_canonicalize_cells_df_distributed(spark):
 
     docs = documents_df(spark, 6)
     media = media_df(spark, 6)
-    out = canonicalize_cells_df(run_cells(docs, media, mode="clean"))
+    # one row per table; cell_num leads the struct, so sort_array puts
+    # the cells in extraction order
+    tables = (run_cells(docs, media, mode="clean")
+              .groupBy("doc_id", "media_ref", "table_num")
+              .agg(F.sort_array(F.collect_list(F.struct(
+                  "cell_num", "row_nums", "column_nums", "cell_text",
+                  "is_column_header", "is_projected_row_header", "bbox"))
+              ).alias("cells")))
+    out = canonicalize_cells_df(tables)
     rows = out.collect()
     assert rows
     n_cols_by_table = {}
@@ -197,6 +210,75 @@ def test_canonicalize_cells_df_distributed(spark):
         # canonical invariant: no blank multi-cell header cells survive
         if r.is_column_header and not r.cell_text.strip():
             assert len(r.column_nums) == 1 and len(r.row_nums) == 1
+
+
+@pytest.fixture(scope="module")
+def fused_tables():
+    """Every table the fused page kernel emits over the corpus and
+    perturbed page samples of ``test_fused_kernel``, in both modes, as
+    (doc_id, media_ref, table_num, canonicalize-input cells)."""
+    from test_fused_kernel import _corpus_pages, _frame, _perturb_page
+
+    from table_transformer_spark.pipeline.fused import make_fused_page_fn
+
+    samples = [_corpus_pages(1000, 300),
+               [(d, r, o, _perturb_page(p))
+                for d, r, o, p in _corpus_pages(2000, 200)]]
+    tables = []
+    for pages in samples:
+        pdf = _frame(pages)
+        for mode in ("clean", "noisy"):
+            for out in make_fused_page_fn(mode)(iter([pdf])):
+                for row in out.itertuples(index=False):
+                    cells = [{"row_nums": list(c[2]),
+                              "column_nums": list(c[3]),
+                              "cell_text": c[6],
+                              "is_column_header": bool(c[4]),
+                              "is_projected_row_header": bool(c[5]),
+                              "bbox": list(c[1])} for c in row.cells]
+                    tables.append((row.doc_id, row.media_ref,
+                                   int(row.table_num), cells))
+    return tables
+
+
+def _canonicalize_rows(doc_id, media_ref, table_num, cells):
+    from table_transformer_spark.operators.canonicalize_df import (
+        _canonicalize_table,
+    )
+
+    rec = SimpleNamespace(doc_id=doc_id, media_ref=media_ref,
+                          table_num=table_num, cells=cells)
+    return _canonicalize_table(rec)
+
+
+def _standardize_rows(doc_id, media_ref, table_num, cells):
+    from table_transformer_spark.operators.canonicalize_df import (
+        _standardize_table,
+    )
+
+    rec = SimpleNamespace(doc_id=0, cells=[
+        {"text": c["cell_text"], "row_nums": c["row_nums"],
+         "column_nums": c["column_nums"],
+         "is_column_header": c["is_column_header"],
+         "x0": c["bbox"][0], "y0": c["bbox"][1],
+         "x1": c["bbox"][2], "y1": c["bbox"][3]} for c in cells])
+    return _standardize_table(rec)
+
+
+@pytest.mark.parametrize("kernel", [_canonicalize_rows, _standardize_rows],
+                         ids=["canonicalize", "standardize"])
+def test_cell_numbering_ignores_input_cell_order(fused_tables, kernel):
+    """A table's output rows, ``cell_num`` included, do not depend on
+    the order its cells arrive in.  Among these tables some cells tie on
+    (min row, min col), e.g. a header spanning three columns and one
+    spanning three rows that both start at (0, 0)."""
+    for i, (doc_id, media_ref, table_num, cells) in enumerate(fused_tables):
+        want = kernel(doc_id, media_ref, table_num, cells)
+        shuffled = list(cells)
+        random.Random(i).shuffle(shuffled)
+        for order in (cells[::-1], shuffled):
+            assert kernel(doc_id, media_ref, table_num, order) == want, \
+                (doc_id, media_ref, table_num)
 
 
 def test_canonicalize_splits_blank_spanning_header():

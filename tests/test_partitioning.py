@@ -9,9 +9,14 @@ before the kernel stage overrides AQE's byte-based coalescing (tiny
 bytes, heavy compute).
 """
 
+import os
+import re
+
 import pytest
 
 from pyspark.sql import functions as F
+
+SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 def test_multi_page_docs_spread_across_partitions(spark):
@@ -158,3 +163,35 @@ def test_planted_mega_doc_spreads_and_extracts(spark):
     want = [(s["kind"], s["text"], s["media_ref"], s["offset"])
             for s in expected_spans_clean(monster_dict)]
     assert got == want
+
+
+@pytest.mark.parametrize("name", ["canonicalize_tables",
+                                  "standardize_xml_annotation",
+                                  "cells_html_export"])
+def test_table_kernels_run_without_grouping(spark, name):
+    """Each input row of the table kernels is a whole table, so their
+    executed plans carry no grouped-map node and no sort feeding one."""
+    import table_transformer_spark.driver_queries as dq
+
+    df = dq.QUERIES[name](spark, SF_DIR)
+    assert df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    assert "FlatMapGroupsInPandas" not in plan
+    assert not re.search(r"\bSort\b", plan)
+
+
+def test_map_rows_emits_typed_empty_batches(spark):
+    """A batch whose rows produce no output still converts to the
+    declared schema, array columns included."""
+    from pyspark.sql import types as T
+
+    from table_transformer_spark.partitioning import map_rows
+
+    schema = T.StructType([T.StructField("id", T.LongType()),
+                           T.StructField("bbox", T.ArrayType(T.DoubleType()))])
+    df = spark.range(6)
+    out = map_rows(df, lambda rec: ([{"id": rec.id, "bbox": [1.0]}]
+                                    if rec.id % 3 == 0 else []), schema)
+    assert sorted(r.id for r in out.collect()) == [0, 3]
+    assert map_rows(df, lambda rec: [], schema).collect() == []
