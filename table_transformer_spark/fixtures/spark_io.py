@@ -1,21 +1,18 @@
 """Distributed fixture-corpus materialization.
 
 The corpus is generated *on executors* (``spark.range`` →
-``mapInPandas``): every document and page derives deterministically from
-its id, so generation parallelizes embarrassingly and never funnels
-through the driver — the same property the real 10^12-doc corpus would
-have (read from Iceberg instead of generated).
+:func:`~table_transformer_spark.partitioning.map_rows`): every document
+and page derives deterministically from its id, so generation
+parallelizes embarrassingly and never funnels through the driver — the
+same property the real 10^12-doc corpus would have (read from Iceberg
+instead of generated).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from ..partitioning import map_rows
 from ..pipeline import schemas
 from .generate import (
     corpus_media_refs,
@@ -25,53 +22,39 @@ from .generate import (
 )
 
 
-def _doc_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = {"doc_id": [], "spans": []}
-        for i in pdf["id"]:
-            doc = gen_document(f"DOC{int(i):07d}")
-            rows["doc_id"].append(doc["doc_id"])
-            rows["spans"].append([
-                (s["kind"], s["text"], s["media_ref"], s["offset"])
-                for s in doc["spans"]])
-        yield pd.DataFrame(rows)
+def _ids(spark: SparkSession, n_docs: int) -> DataFrame:
+    parts = max(spark.sparkContext.defaultParallelism, 4)
+    return spark.range(n_docs, numPartitions=parts)
 
 
-def _media_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = {"media_ref": [], "payload": [], "width": [], "height": []}
-        for i in pdf["id"]:
-            doc = gen_document(f"DOC{int(i):07d}")
-            for ref in corpus_media_refs(doc):
-                page = synth_page(ref)
-                rows["media_ref"].append(ref)
-                rows["payload"].append(encode_page_payload(page))
-                rows["width"].append(page["width"])
-                rows["height"].append(page["height"])
-        yield pd.DataFrame(rows)
+def _doc_row(rec):
+    doc = gen_document(f"DOC{int(rec.id):07d}")
+    yield {"doc_id": doc["doc_id"],
+           "spans": [(s["kind"], s["text"], s["media_ref"], s["offset"])
+                     for s in doc["spans"]]}
 
 
-def documents_df(spark: SparkSession, n_docs: int,
-                 partitions: int | None = None) -> DataFrame:
-    parts = partitions or max(spark.sparkContext.defaultParallelism, 4)
-    return (spark.range(n_docs, numPartitions=parts)
-            .mapInPandas(_doc_batches, schema=schemas.DOCUMENTS_SCHEMA))
+def _media_rows(rec):
+    for ref in corpus_media_refs(gen_document(f"DOC{int(rec.id):07d}")):
+        page = synth_page(ref)
+        yield {"media_ref": ref, "payload": encode_page_payload(page),
+               "width": page["width"], "height": page["height"]}
 
 
-def media_df(spark: SparkSession, n_docs: int,
-             partitions: int | None = None) -> DataFrame:
-    parts = partitions or max(spark.sparkContext.defaultParallelism, 4)
-    return (spark.range(n_docs, numPartitions=parts)
-            .mapInPandas(_media_batches, schema=schemas.MEDIA_SCHEMA))
+def documents_df(spark: SparkSession, n_docs: int) -> DataFrame:
+    return map_rows(_ids(spark, n_docs), _doc_row, schemas.DOCUMENTS_SCHEMA)
 
 
-def write_corpus(spark: SparkSession, n_docs: int, out_dir: str,
-                 partitions: int | None = None) -> None:
+def media_df(spark: SparkSession, n_docs: int) -> DataFrame:
+    return map_rows(_ids(spark, n_docs), _media_rows, schemas.MEDIA_SCHEMA)
+
+
+def write_corpus(spark: SparkSession, n_docs: int, out_dir: str) -> None:
     """Materialize documents + media as parquet (the test/bench stand-in
     for the Iceberg corpus tables)."""
-    documents_df(spark, n_docs, partitions).write.mode("overwrite") \
+    documents_df(spark, n_docs).write.mode("overwrite") \
         .parquet(f"{out_dir}/documents")
-    media_df(spark, n_docs, partitions).write.mode("overwrite") \
+    media_df(spark, n_docs).write.mode("overwrite") \
         .parquet(f"{out_dir}/media")
 
 

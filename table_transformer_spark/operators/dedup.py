@@ -176,8 +176,7 @@ def minhash_band_buckets(df: DataFrame, id_col: str, text_col: str,
 def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
                         block_col: str, n: int = 2,
                         min_intersection: int = 3,
-                        max_df: int = 50,
-                        log_dropped: bool = False) -> DataFrame:
+                        max_df: int = 50) -> DataFrame:
     """Word n-gram Jaccard candidate pairs inside a blocking key.
 
     Output: (doc1, doc2, n_common, n_union, is_neardup) with exact
@@ -192,9 +191,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     O(n_grams · max_df²) — linear in corpus size for fixed ``max_df``.
     ``n_common`` therefore counts *rare* shared grams only (standard
     candidate-generation semantics for dedup); true near-dups share
-    many rare grams and still clear ``min_intersection``.  Set
-    ``log_dropped=True`` to count and log the dropped hot grams (runs
-    one extra aggregation job — keep off in benchmarks).
+    many rare grams and still clear ``min_intersection``.
     """
     # Shingling runs as an Arrow-batched Python kernel: Spark's
     # higher-order array functions (transform/zip_with) evaluate their
@@ -263,11 +260,6 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
                  .agg(F.count(F.lit(1)).alias("df"))
                  .filter(F.col("df") > max_df)
                  .select("block", "gram"))
-    if log_dropped:
-        import logging
-        logging.getLogger(__name__).info(
-            "ngram_jaccard_pairs: dropped %d hot grams (df > %d)",
-            hot_grams.count(), max_df)
     kept = (exploded
             .join(hot_grams, ["block", "gram"], "left_anti")
             .groupBy("block", "gram")

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..partitioning import map_rows
 from ..serde import decode_zlib_json
 
 __all__ = [
@@ -93,21 +94,12 @@ _DIM_SCHEMA = T.StructType([
 
 
 def decode_dimensions(media: DataFrame) -> DataFrame:
-    """Decode stage: (media_ref, payload) → typed dimensions.  Iterator
-    mapInPandas so a real codec initializes once per task."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("media_ref", "width", "height", "mode")}
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                meta = _decode_image(payload)
-                rows["media_ref"].append(ref)
-                rows["width"].append(meta["width"])
-                rows["height"].append(meta["height"])
-                rows["mode"].append(meta["mode"])
-            yield pd.DataFrame(rows)
+    """Decode stage: (media_ref, payload) → typed dimensions."""
+    def decode(rec):
+        yield {"media_ref": rec.media_ref, **_decode_image(rec.payload)}
 
-    return media.select("media_ref", "payload").mapInPandas(
-        run, schema=_DIM_SCHEMA)
+    return map_rows(media.select("media_ref", "payload"), decode,
+                    _DIM_SCHEMA)
 
 
 def thumbnail_plan(media: DataFrame, max_dim: int = 256) -> DataFrame:
@@ -140,23 +132,18 @@ _FRAME_SCHEMA = T.StructType([
 def frame_sample(media: DataFrame, every_n: int = 2,
                  max_frames: int = 4) -> DataFrame:
     """Frame sampling shape for video-like payloads: one payload row in,
-    N frame rows out (UDTF-shaped mapInPandas).  Frames are
+    N frame rows out (one ``map_rows`` pass).  Frames are
     deterministic digests here (STUB — a real build decodes with
-    pyav/ffmpeg in the same loop)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("media_ref", "frame_idx", "frame_digest")}
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                b = bytes(payload)
-                for i in range(0, max_frames * every_n, every_n):
-                    digest = hashlib.sha256(b + i.to_bytes(4, "big"))
-                    rows["media_ref"].append(ref)
-                    rows["frame_idx"].append(i)
-                    rows["frame_digest"].append(digest.hexdigest())
-            yield pd.DataFrame(rows)
+    pyav/ffmpeg in the same per-row function)."""
+    def sample(rec):
+        b = bytes(rec.payload)
+        for i in range(0, max_frames * every_n, every_n):
+            digest = hashlib.sha256(b + i.to_bytes(4, "big"))
+            yield {"media_ref": rec.media_ref, "frame_idx": i,
+                   "frame_digest": digest.hexdigest()}
 
-    return media.select("media_ref", "payload").mapInPandas(
-        run, schema=_FRAME_SCHEMA)
+    return map_rows(media.select("media_ref", "payload"), sample,
+                    _FRAME_SCHEMA)
 
 
 _EMB_SCHEMA = T.StructType([

@@ -7,7 +7,7 @@ cells with caption / footer / label / graphic metadata and the
 indentation heuristic (leading em-space/tab/space or ``padding-left``
 style).
 
-On the Spark side the whole family runs as one Arrow-batched kernel:
+On the Spark side the whole family runs as one ``map_rows`` pass:
 one NXML document row in → one row per table out.
 """
 
@@ -16,12 +16,11 @@ from __future__ import annotations
 import re
 import xml.etree.ElementTree as ET
 from collections import defaultdict
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from ..partitioning import map_rows
 
 __all__ = ["find_table_wraps", "parse_nxml_table", "scan_nxml_tables"]
 
@@ -142,32 +141,15 @@ _SCAN_SCHEMA = T.StructType([
 
 def scan_nxml_tables(df: DataFrame, id_col: str, xml_col: str) -> DataFrame:
     """(doc id, NXML string) → one row per parsed table."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "table_idx", "num_rows",
-                                    "num_columns", "caption_text",
-                                    "footer_text", "label_text", "cells")}
-            for doc_id, xml in zip(pdf[id_col], pdf[xml_col]):
-                wraps = find_table_wraps(str(xml)) or []
-                for i, (a, b) in enumerate(wraps):
-                    parsed = parse_nxml_table(str(xml)[a:b])
-                    if parsed is None:
-                        continue
-                    rows["doc_id"].append(doc_id)
-                    rows["table_idx"].append(i)
-                    rows["num_rows"].append(parsed["num_rows"])
-                    rows["num_columns"].append(parsed["num_columns"])
-                    rows["caption_text"].append(parsed["caption_text"])
-                    rows["footer_text"].append(parsed["footer_text"])
-                    rows["label_text"].append(parsed["label_text"])
-                    rows["cells"].append([
-                        (c["row_nums"], c["column_nums"],
-                         c["is_column_header"], c["align"],
-                         c["indented"], c["text"])
-                        for c in parsed["cells"]])
-            out = pd.DataFrame(rows)
-            if out.empty:
-                out = out.astype(object)
-            yield out
+    def scan(rec):
+        doc_id, xml = rec
+        xml = str(xml)
+        for i, (a, b) in enumerate(find_table_wraps(xml) or []):
+            parsed = parse_nxml_table(xml[a:b])
+            if parsed is None:
+                continue
+            # keys outside _SCAN_SCHEMA (the wrap/table text, graphic)
+            # are dropped by map_rows
+            yield {"doc_id": doc_id, "table_idx": i, **parsed}
 
-    return df.select(id_col, xml_col).mapInPandas(run, schema=_SCAN_SCHEMA)
+    return map_rows(df.select(id_col, xml_col), scan, _SCAN_SCHEMA)

@@ -12,7 +12,7 @@ Reference: ``scripts/process_pubmed.py:1074-1155`` —
   (intersection-area tolerance 0.1), exactly like the reference.
 
 Distribution shape: :func:`pascal_voc_annotations` is a per-row string
-transform (one annotation XML per page row, Arrow-batched);
+transform (one annotation XML per page row, one ``map_rows`` pass);
 :func:`write_pascal_voc` fans the one-file-per-page write out to the
 executors with ``foreachPartition`` — the standard many-small-files
 sink pattern (no driver funnel).
@@ -22,13 +22,12 @@ from __future__ import annotations
 
 import os
 import xml.etree.ElementTree as ET
-from typing import Iterator
 from xml.dom import minidom
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from ..partitioning import map_rows
 
 __all__ = [
     "voc_annotation_xml",
@@ -71,7 +70,7 @@ def _object_element(class_name: str, bbox) -> ET.Element:
     return obj
 
 
-def _scale_bbox(bbox, page_bbox, output_image_max_dim: int = 1000):
+def _scale_bbox(bbox, page_bbox, output_image_max_dim: int):
     """The scaled-variant geometry (process_pubmed.py:1092-1131):
     validity checks, longest-side clamp with ``int()`` truncation,
     PDF→image coordinate scaling."""
@@ -121,30 +120,19 @@ VOC_SCHEMA = T.StructType([
 ])
 
 
-def pascal_voc_annotations(pages: DataFrame, database: str = "PubTables1M",
-                           scaled: bool = False,
-                           output_image_max_dim: int = 1000) -> DataFrame:
+def pascal_voc_annotations(pages: DataFrame) -> DataFrame:
     """(filename, width, height, objects[, page_bbox]) rows → one
-    (filename, xml) annotation per page.  ``scaled=True`` expects a
-    ``page_bbox`` column and converts PDF boxes to image space."""
-    cols = list(pages.columns)
+    (filename, xml) annotation per page, database ``PubTables1M``.  With
+    a ``page_bbox`` column the objects are PDF boxes, scaled to a
+    1000-pixel image (the reference's scaled variant)."""
+    scaled = "page_bbox" in pages.columns
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"filename": [], "xml": []}
-            for rec in pdf.itertuples(index=False):
-                row = dict(zip(cols, rec))
-                objs = [{"label": o["label"], "bbox": list(o["bbox"])}
-                        for o in row["objects"]]
-                out["filename"].append(row["filename"])
-                out["xml"].append(voc_annotation_xml(
-                    row["filename"], int(row["width"]), int(row["height"]),
-                    database, objs,
-                    page_bbox=(list(row["page_bbox"]) if scaled else None),
-                    output_image_max_dim=output_image_max_dim))
-            yield pd.DataFrame(out)
+    def annotate(rec):
+        yield {"filename": rec.filename, "xml": voc_annotation_xml(
+            rec.filename, int(rec.width), int(rec.height), "PubTables1M",
+            rec.objects, page_bbox=list(rec.page_bbox) if scaled else None)}
 
-    return pages.mapInPandas(run, schema=VOC_SCHEMA)
+    return map_rows(pages, annotate, VOC_SCHEMA)
 
 
 def write_pascal_voc(annotations: DataFrame, out_dir: str) -> None:

@@ -4,7 +4,7 @@
   keys (``span_num`` ← position, ``line_num``/``block_num`` ← 0;
   ``src/inference.py:900-908``) as pure column algebra;
 * PASCAL VOC XML parsing — ``<object><bndbox>`` → (label, bbox) rows via
-  an Arrow-batched kernel (``src/table_datasets.py:23-51``);
+  one ``map_rows`` pass (``src/table_datasets.py:23-51``);
 * COCO-style annotation index — ``groupBy(image_id).collect_list``
   (``src/table_datasets.py:582-611``).
 """
@@ -12,13 +12,12 @@
 from __future__ import annotations
 
 import xml.etree.ElementTree as ET
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..partitioning import map_rows
 
 __all__ = ["tokens_with_defaults", "parse_voc_annotations", "coco_index"]
 
@@ -67,40 +66,27 @@ _VOC_SCHEMA = T.StructType([
 def parse_voc_annotations(df: DataFrame, id_col: str,
                           xml_col: str) -> DataFrame:
     """(id, xml string) → one row per annotated object."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"source_id": [], "label": [], "bbox": []}
-            for sid, xml in zip(pdf[id_col], pdf[xml_col]):
-                try:
-                    root = ET.fromstring(xml)
-                except ET.ParseError:
-                    continue
-                for obj in root.findall("object"):
-                    bnd = obj.find("bndbox")
-                    if bnd is None:
-                        continue
-                    rows["source_id"].append(sid)
-                    rows["label"].append(obj.findtext("name", ""))
-                    rows["bbox"].append([
-                        float(bnd.findtext("xmin", "0")),
-                        float(bnd.findtext("ymin", "0")),
-                        float(bnd.findtext("xmax", "0")),
-                        float(bnd.findtext("ymax", "0")),
-                    ])
-            out = pd.DataFrame(rows)
-            if out.empty:
-                # empty columns default to float64, which Arrow cannot
-                # cast to list<double>
-                out = out.astype(object)
-            yield out
+    def parse(rec):
+        sid, xml = rec
+        try:
+            root = ET.fromstring(xml)
+        except ET.ParseError:
+            return
+        for obj in root.findall("object"):
+            bnd = obj.find("bndbox")
+            if bnd is None:
+                continue
+            yield {"source_id": sid, "label": obj.findtext("name", ""),
+                   "bbox": [float(bnd.findtext(k, "0"))
+                            for k in ("xmin", "ymin", "xmax", "ymax")]}
 
-    return df.select(id_col, xml_col).mapInPandas(run, schema=_VOC_SCHEMA)
+    return map_rows(df.select(id_col, xml_col), parse, _VOC_SCHEMA)
 
 
-def coco_index(annotations: DataFrame, image_col: str = "source_id")\
-        -> DataFrame:
-    """Image → list-of-annotations index (imgToAnns)."""
+def coco_index(annotations: DataFrame) -> DataFrame:
+    """Image → list-of-annotations index (imgToAnns), keyed on
+    ``source_id``."""
     return (annotations
-            .groupBy(image_col)
+            .groupBy("source_id")
             .agg(F.collect_list(F.struct("label", "bbox")).alias("anns"),
                  F.count(F.lit(1)).alias("n_anns")))

@@ -14,8 +14,17 @@ per-key cost variance (skewed pages, long documents) without drowning
 the scheduler in micro-tasks.
 
 :func:`map_rows` is the one driver for kernels whose input row is a
-complete unit of work (a table with its cells as an array column, a
-page with its words): one ``mapInPandas`` pass, no grouping.
+complete unit of work: one ``mapInPandas`` pass, no grouping.  It
+serves the table kernels (canonicalize, standardize, HTML/CSV export,
+cell location), the fixture corpus (one document or its pages per id),
+the NXML ``<table-wrap>`` and PASCAL VOC scans, the VOC annotation
+sink and the media decode / frame-sample stubs.
+
+Two kernel families keep their own batch loop on purpose: the matrix
+kernels, which work on a whole batch at once (the four in
+``similarity``, ``media_embedding`` and the fused page kernel), and
+the tokenizer kernels (``dedup`` shingling and signatures,
+``text_analysis`` signals and term frequencies).
 """
 
 from __future__ import annotations
@@ -45,8 +54,8 @@ def map_rows(df: DataFrame, fn: Callable[[tuple], Iterable[dict]],
 
     *rec* is the row as a pandas ``itertuples`` record; ``fn`` returns
     the output rows it produces as dicts keyed by *schema*'s field
-    names.  Each Arrow batch becomes one output frame, typed-empty when
-    the batch produced no rows."""
+    names (other keys are dropped).  Each Arrow batch becomes one
+    output frame, typed-empty when the batch produced no rows."""
     def kernel(batches):
         for pdf in batches:
             rows = [out for rec in pdf.itertuples(index=False)

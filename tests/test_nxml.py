@@ -70,3 +70,20 @@ def test_scan_nxml_tables_distributed(spark):
     first = next(r for r in rows if r.table_idx == 0)
     assert first.num_columns == 3
     assert len(first.cells) == 10  # 2 header + 3 + 3 + 2 body cells
+
+
+@pytest.mark.parametrize("xml", [
+    "<article><p>no tables here</p></article>",
+    NXML_DOC.replace("</table-wrap>", "", 1),   # wraps do not pair up
+])
+def test_scan_nxml_tables_typed_empty(spark, xml):
+    from table_transformer_spark.operators.nxml import (
+        _SCAN_SCHEMA,
+        scan_nxml_tables,
+    )
+
+    df = spark.createDataFrame([("d1", xml), ("d2", xml)],
+                               ["doc_id", "xml"])
+    out = scan_nxml_tables(df, "doc_id", "xml")
+    assert out.schema == _SCAN_SCHEMA
+    assert out.collect() == []

@@ -62,3 +62,31 @@ def test_voc_sink_writes_one_file_per_page(spark, tmp_path):
     files = sorted(os.listdir(tmp_path / "voc"))
     assert files == ["a.xml", "b.xml"]
     assert "<filename>a.jpg</filename>" in (tmp_path / "voc" / "a.xml").read_text()
+
+
+def test_voc_sink_scales_pages_with_page_bbox(spark):
+    """A ``page_bbox`` column switches the sink to the scaled variant."""
+    rows = [
+        ("a.jpg", 772, 1000,
+         [("table", [61.2, 79.2, 306.0, 396.0]),
+          ("table column", [70.0, 80.0, 90.5, 300.25])],
+         [0.0, 0.0, 612.0, 792.0]),
+        ("b.jpg", 1000, 500, [("table", [110.0, 60.0, 500.0, 300.0])],
+         [100.0, 50.0, 900.0, 450.0]),
+    ]
+    pages = spark.createDataFrame(
+        rows,
+        "filename string, width int, height int, "
+        "objects array<struct<label string, bbox array<double>>>, "
+        "page_bbox array<double>")
+    got = {r.filename: r.xml for r in pascal_voc_annotations(pages).collect()}
+    want = {
+        name: voc_annotation_xml(
+            name, w, h, "PubTables1M",
+            [{"label": label, "bbox": bbox} for label, bbox in objs],
+            page_bbox=page_bbox)
+        for name, w, h, objs, page_bbox in rows}
+    assert got == want
+    assert want["a.jpg"] != voc_annotation_xml(
+        "a.jpg", 772, 1000, "PubTables1M",
+        [{"label": label, "bbox": bbox} for label, bbox in rows[0][3]])

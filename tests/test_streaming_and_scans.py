@@ -74,6 +74,23 @@ def test_parse_voc_annotations(spark):
     assert idx[0].n_anns == 2
 
 
+
+def test_parse_voc_annotations_all_malformed_is_typed_empty(spark):
+    """Batches whose rows yield no object still convert to the schema."""
+    from table_transformer_spark.operators.scans import (
+        _VOC_SCHEMA,
+        parse_voc_annotations,
+    )
+
+    df = spark.createDataFrame(
+        [("img1", "<bad"), ("img2", "<annotation><object>"),
+         ("img3", "<annotation><object><name>t</name></object>"
+                  "</annotation>")],
+        ["source_id", "xml"])
+    anns = parse_voc_annotations(df, "source_id", "xml")
+    assert anns.schema == _VOC_SCHEMA
+    assert anns.collect() == []
+
 def test_locate_tables_two_phase(spark):
     """A table snippet derived from a doc must locate back to that doc
     as the top-ranked page."""
