@@ -63,13 +63,13 @@ def _grits_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         grits_table_metrics,
     )
     from table_transformer_spark.fixtures.spark_io import documents_df, media_df
-    from table_transformer_spark.pipeline.extract import run_cells
+    from table_transformer_spark.pipeline.extract import run_tables
 
     docs = documents_df(spark, _ENTRY_DOCS)
     media = media_df(spark, _ENTRY_DOCS)
-    true_cells = run_cells(docs, media, mode="clean")
-    pred_cells = run_cells(docs, media, mode="noisy")
-    return grits_summary(grits_table_metrics(true_cells, pred_cells))
+    true_tables = run_tables(docs, media, mode="clean")
+    pred_tables = run_tables(docs, media, mode="noisy")
+    return grits_summary(grits_table_metrics(true_tables, pred_tables))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -93,12 +93,29 @@ def _run(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def warmup(spark, sf_dir: str, cpus: int) -> float:
+    """Warm the Python worker pool + JIT before anything is timed: one
+    tiny mapInPandas job (worker interpreter startup) and one tiny
+    scan→agg→sort (parquet reader + codegen + shuffle machinery), so
+    neither cold start is billed to the first measured query.  Returns
+    the warmup's own wall in seconds."""
+    from pyspark.sql import functions as F
+
+    from table_transformer_spark.fixtures.spark_io import documents_df
+
+    t0 = time.perf_counter()
+    _run(documents_df(spark, 2 * cpus))
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    _run(li.limit(2048).groupBy("l_returnflag")
+         .agg(F.sum("l_quantity").alias("s")).orderBy("l_returnflag"))
+    return time.perf_counter() - t0
+
+
 def main() -> None:
     # the entry-point catalog, not driver_queries.QUERIES directly: it
     # adds the composite queries (grits_summary_noisy_vs_clean, the
     # extraction twins) that only exist at the entry-point layer
     from __spark_entry__ import queries as entry_queries
-    from table_transformer_spark.fixtures.spark_io import documents_df, media_df
     from table_transformer_spark.pipeline.extract import extract
     from table_transformer_spark.pipeline.session import get_spark
 
@@ -107,17 +124,7 @@ def main() -> None:
     spark = get_spark(app_name="ttspark-bench", cores=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
 
-    # warm the Python worker pool + JIT before measuring: one tiny
-    # mapInPandas job (worker interpreter startup) and one tiny
-    # scan→agg→sort (parquet reader + codegen + shuffle machinery), so
-    # neither cold start is billed to the first measured query
-    t0 = time.perf_counter()
-    _run(documents_df(spark, 2 * CPUS))
-    from pyspark.sql import functions as F
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    _run(li.limit(2048).groupBy("l_returnflag")
-         .agg(F.sum("l_quantity").alias("s")).orderBy("l_returnflag"))
-    print(f"[bench] warmup: {time.perf_counter() - t0:.1f}s",
+    print(f"[bench] warmup: {warmup(spark, SF_DIR, CPUS):.1f}s",
           file=sys.stderr)
 
     # flagship extraction corpus is materialized to parquet first

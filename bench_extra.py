@@ -43,7 +43,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from __spark_entry__ import queries as entry_queries
-    from bench import BENCH_QUERIES
+    from bench import BENCH_QUERIES, warmup
     from table_transformer_spark.pipeline.session import get_spark
 
     QUERIES = entry_queries()
@@ -53,17 +53,7 @@ def main() -> None:
     spark = get_spark(app_name="ttspark-bench-extra", cores=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
 
-    # same warmup as bench.py: worker pool + parquet reader + shuffle
-    from pyspark.sql import functions as F
-    from table_transformer_spark.fixtures.spark_io import documents_df
-    t0 = time.perf_counter()
-    documents_df(spark, 2 * CPUS).write.format("noop").mode(
-        "overwrite").save()
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    (li.limit(2048).groupBy("l_returnflag")
-     .agg(F.sum("l_quantity").alias("s")).orderBy("l_returnflag")
-     .write.format("noop").mode("overwrite").save())
-    print(f"[bench_extra] warmup {time.perf_counter()-t0:.1f}s",
+    print(f"[bench_extra] warmup {warmup(spark, SF_DIR, CPUS):.1f}s",
           file=sys.stderr)
 
     if args.explain:

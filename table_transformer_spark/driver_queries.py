@@ -2413,9 +2413,9 @@ def q_grits_planted_perturbation(spark, sf_dir):
             part = docs.select(
                 "doc_id", F.lit("planted://grits").alias("media_ref"),
                 F.lit(tnum).alias("table_num"),
-                F.explode(grid(texts)).alias("cell"))
+                grid(texts).alias("cells"))
             parts = part if parts is None else parts.unionByName(part)
-        return parts.select("doc_id", "media_ref", "table_num", "cell.*")
+        return parts
 
     return grits_table_metrics(side(False), side(True))
 

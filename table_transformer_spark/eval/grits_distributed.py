@@ -1,16 +1,15 @@
-"""Distributed GriTS evaluation: applyInPandas over per-table pairs.
+"""Distributed GriTS evaluation: one metric-kernel call per table pair.
 
-The reference fans eval out with a ``multiprocessing.Pool``
-(``src/eval.py:646-654``); here Spark *is* the pool: true cells and
-predicted cells are cogrouped per (doc_id, media_ref, table_num) and the
-per-table-pair metric kernel (``compute_metrics``, src/eval.py:266-331)
-runs inside the group.  The rollup (``compute_metrics_summary``,
+The reference fans eval out with a ``multiprocessing.Pool``, one table
+pair per task (``src/eval.py:646-654``); here Spark *is* the pool.
+Each side is one row per table, the two are full-outer-joined on the
+table key, and the metric kernel (``compute_metrics``,
+src/eval.py:266-331) runs once per joined row through
+``partitioning.map_rows``.  The rollup (``compute_metrics_summary``,
 src/eval.py:394-423) is a plain slice-aggregation.
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -22,6 +21,7 @@ from ..kernels.adjacency import (
     dar_con,
 )
 from ..kernels.grits import grits_con, grits_loc, grits_top
+from ..partitioning import map_rows, widen_for_cpu
 
 TABLE_KEY = ["doc_id", "media_ref", "table_num"]
 
@@ -42,22 +42,18 @@ METRICS_SCHEMA = T.StructType([
 ])
 
 
-def _rows_to_cells(pdf: pd.DataFrame):
-    cells = []
-    for row in pdf.itertuples(index=False):
-        cells.append({
-            "bbox": list(row.bbox),
-            "row_nums": list(row.row_nums),
-            "column_nums": list(row.column_nums),
-            "cell_text": row.cell_text,
-        })
-    return cells
+def _cells(cells) -> list[dict]:
+    if cells is None:  # table missing from this side of the outer join
+        return []
+    return [{"bbox": list(c["bbox"]),
+             "row_nums": list(c["row_nums"]),
+             "column_nums": list(c["column_nums"]),
+             "cell_text": c["cell_text"]} for c in cells]
 
 
-def _metrics_kernel(key, true_pdf: pd.DataFrame,
-                    pred_pdf: pd.DataFrame) -> pd.DataFrame:
-    true_cells = _rows_to_cells(true_pdf)
-    pred_cells = _rows_to_cells(pred_pdf)
+def _table_metrics(rec) -> list[dict]:
+    true_cells = _cells(rec.true_cells)
+    pred_cells = _cells(rec.pred_cells)
 
     top_f, _, _, top_ub = grits_top(true_cells, pred_cells)
     loc_f, _, _, _ = grits_loc(true_cells, pred_cells)
@@ -69,8 +65,9 @@ def _metrics_kernel(key, true_pdf: pd.DataFrame,
     n_span = sum(1 for c in true_cells
                  if len(c["row_nums"]) > 1 or len(c["column_nums"]) > 1)
 
-    return pd.DataFrame([{
-        "doc_id": key[0], "media_ref": key[1], "table_num": int(key[2]),
+    return [{
+        "doc_id": rec.doc_id, "media_ref": rec.media_ref,
+        "table_num": int(rec.table_num),
         "grits_top": float(top_f),
         "grits_top_upper_bound": float(top_ub),
         "grits_loc": float(loc_f),
@@ -81,32 +78,25 @@ def _metrics_kernel(key, true_pdf: pd.DataFrame,
         "num_true_cells": len(true_cells),
         "num_pred_cells": len(pred_cells),
         "num_spanning_true": n_span,
-    }])
+    }]
 
 
-def grits_table_metrics(true_cells: DataFrame,
-                        pred_cells: DataFrame) -> DataFrame:
-    """Per-table GriTS/DAR metrics: cogroup on the table key, metric
-    kernel per pair.  Tables present on only one side still produce a
-    row (empty-side F-score conventions apply)."""
-    from ..partitioning import widen_for_cpu
+def grits_table_metrics(true_tables: DataFrame,
+                        pred_tables: DataFrame) -> DataFrame:
+    """Per-table GriTS/DAR metrics from one row per table on each side,
+    (doc_id, media_ref, table_num, cells array<struct<bbox, row_nums,
+    column_nums, cell_text>>) as ``extract.run_tables`` emits.  Tables
+    present on only one side still produce a row (empty-side F-score
+    conventions apply).  Explicit widen on both sides: the DP kernels
+    are CPU-bound on tiny rows, and the join reuses the partitioning."""
+    def side(tables: DataFrame, cells: str) -> DataFrame:
+        return widen_for_cpu(
+            tables.select(*TABLE_KEY, F.col("cells").alias(cells)),
+            *TABLE_KEY)
 
-    cols = TABLE_KEY + ["bbox", "row_nums", "column_nums", "cell_text"]
-    # fresh aliases give each side distinct expression ids, so
-    # true==pred (self-evaluation) does not trip the ambiguous
-    # self-join analyzer check; explicit widen on both sides — the DP
-    # metric kernels are CPU-bound on tiny rows, and AQE's byte-based
-    # coalescing would otherwise run every table pair in one task
-    # (user repartition satisfies the cogroup's hash-clustered
-    # distribution, so no extra shuffle is added)
-    left = widen_for_cpu(
-        true_cells.select(*[F.col(c).alias(c) for c in cols]), *TABLE_KEY)
-    right = widen_for_cpu(
-        pred_cells.select(*[F.col(c).alias(c) for c in cols]), *TABLE_KEY)
-    grouped_true = left.groupBy(*TABLE_KEY)
-    grouped_pred = right.groupBy(*TABLE_KEY)
-    return grouped_true.cogroup(grouped_pred).applyInPandas(
-        _metrics_kernel, schema=METRICS_SCHEMA)
+    joined = side(true_tables, "true_cells").join(
+        side(pred_tables, "pred_cells"), TABLE_KEY, "full_outer")
+    return map_rows(joined, _table_metrics, METRICS_SCHEMA)
 
 
 def grits_summary(metrics: DataFrame) -> DataFrame:

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-TABLE_KEY = ["doc_id", "media_ref", "table_num"]
+from .grits_distributed import TABLE_KEY
 
 
 def _cv_agg(value_col: str):

@@ -24,7 +24,6 @@ __all__ = [
     "Box",
     "box_area",
     "box_intersect",
-    "box_union",
     "iob",
     "iou",
     "overlaps",
@@ -145,15 +144,6 @@ def box_intersect(b1, b2):
         max(b1[1], b2[1]),
         min(b1[2], b2[2]),
         min(b1[3], b2[3]),
-    )
-
-
-def box_union(b1, b2):
-    return (
-        min(b1[0], b2[0]),
-        min(b1[1], b2[1]),
-        max(b1[2], b2[2]),
-        max(b1[3], b2[3]),
     )
 
 

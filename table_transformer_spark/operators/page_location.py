@@ -5,19 +5,21 @@ The reference locates which PDF page a table lives on in two phases
 score keeps pages scoring ≥ max/2, then an *expensive* DP alignment
 reranks the survivors.  Catalyst cannot reorder through a Python
 kernel, so the staging is explicit: selective DataFrame algebra first,
-the pandas kernel only on survivors — the canonical
-cheap-filter-then-expensive-UDF topology (SURVEY.md §4).
+the Python scorer only on survivors — the canonical
+cheap-filter-then-expensive-UDF topology (SURVEY.md §4).  The rerank
+scores each pair with a containment LCS, cheaper than that DP on
+small-vocabulary corpora where the fast phase keeps many candidates.
 """
 
 from __future__ import annotations
 
 from difflib import SequenceMatcher
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..partitioning import map_rows
 
 __all__ = ["candidate_pages_fast", "rerank_candidates", "locate_tables"]
 
@@ -48,58 +50,32 @@ def candidate_pages_fast(pages: DataFrame, tables: DataFrame,
             .select(table_id, page_id, "n_common", "max_common"))
 
 
-_RERANK_SCHEMA = T.StructType([
+_SCORE_SCHEMA = T.StructType([
     T.StructField("table_id", T.LongType()),
     T.StructField("page_id", T.LongType()),
     T.StructField("sim_x1000", T.LongType()),
-    T.StructField("rank", T.IntegerType()),
 ])
 
 
-def rerank_candidates(candidates_with_text: DataFrame,
-                      scorer: str = "lcs") -> DataFrame:
+def _score_pair(rec) -> list[dict]:
+    table_text = str(rec.table_text)
+    m = SequenceMatcher(None, table_text, str(rec.page_text))
+    lcs = sum(b.size for b in m.get_matching_blocks())
+    # containment normalization: how much of the TABLE text aligns
+    # into the page
+    sim = lcs / len(table_text) if table_text else 0.0
+    return [{"table_id": rec.table_id, "page_id": rec.page_id,
+             "sim_x1000": int(sim * 1000)}]
+
+
+def rerank_candidates(candidates_with_text: DataFrame) -> DataFrame:
     """Phase 2 (get_table_page_slow, scripts/process_pubmed.py:449-472):
-    expensive character-level scoring on survivors only, best page
-    first.  Expects columns (table_id, page_id, table_text, page_text).
-
-    scorer='align' uses the gap-taxonomy DP with the reference's slow-
-    phase parameters (match 2, mismatch -2, new gap -10, continue
-    -0.0005, boundary 0.0001) — O(|page|·|table|) per pair, appropriate
-    when the fast phase is selective (real corpora).  scorer='lcs'
-    (default) is a cheaper containment-LCS approximation for corpora
-    whose small vocabulary makes the fast filter keep many candidates
-    (the synthetic testdata).
-    """
-    from ..kernels.alignment import align_chars
-
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for r in pdf.itertuples(index=False):
-            table_text = str(r.table_text)
-            page_text = str(r.page_text)
-            if scorer == "align":
-                sim = align_chars(
-                    page_text.replace("~", "^"), table_text.replace("~", "^"),
-                    match_reward=2, mismatch_penalty=-2,
-                    new_gap_penalty=-10, continue_gap_penalty=-0.0005,
-                    page_boundary_gap_reward=0.0001, score_only=True,
-                    gap_character="~")
-            else:
-                m = SequenceMatcher(None, table_text, page_text)
-                lcs = sum(b.size for b in m.get_matching_blocks())
-                # containment normalization: how much of the TABLE text
-                # aligns into the page
-                sim = lcs / len(table_text) if table_text else 0.0
-            rows.append({"table_id": r.table_id, "page_id": r.page_id,
-                         "sim_x1000": int(sim * 1000)})
-        out = pd.DataFrame(rows).sort_values(
-            ["sim_x1000", "page_id"], ascending=[False, True])
-        out["rank"] = range(1, len(out) + 1)
-        return out
-
-    return (candidates_with_text
-            .groupBy("table_id")
-            .applyInPandas(kernel, schema=_RERANK_SCHEMA))
+    character-level scoring on survivors only, best page first.
+    Expects columns (table_id, page_id, table_text, page_text)."""
+    scored = map_rows(candidates_with_text, _score_pair, _SCORE_SCHEMA)
+    w = Window.partitionBy("table_id").orderBy(F.col("sim_x1000").desc(),
+                                               F.col("page_id").asc())
+    return scored.withColumn("rank", F.row_number().over(w))
 
 
 def locate_tables(pages: DataFrame, tables: DataFrame) -> DataFrame:

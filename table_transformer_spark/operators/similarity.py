@@ -48,6 +48,10 @@ DEFAULT_SIGN_BANDS = (
 )
 DEFAULT_SIGN_DIMS = DEFAULT_SIGN_BANDS[0]
 
+# driver-collected sides stay driver-tiny
+_MAX_INDEX_ROWS = 1_000_000  # brute-force index
+_MAX_CODEBOOK = 1 << 16  # broadcast IVF codebook
+
 
 def _as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
@@ -83,8 +87,7 @@ def cosine_expr(v1: Column, v2: Column) -> Column:
 
 
 def brute_force_topk(df: DataFrame, id_col: str, vec_col: str,
-                     k: int = 3,
-                     max_index_rows: int = 1_000_000) -> DataFrame:
+                     k: int = 3) -> DataFrame:
     """Exact top-k cosine neighbors per vector: (vec_id, neighbor_id,
     rank, cos — rounded for cross-engine hashing).
 
@@ -109,11 +112,11 @@ def brute_force_topk(df: DataFrame, id_col: str, vec_col: str,
     # columnar path moves it without boxing every element (guide §6,
     # "Arrow for driver transfers").
     index_pdf = (df.select(id_col, vec_col)
-                 .limit(max_index_rows + 1).toPandas())
-    if len(index_pdf) > max_index_rows:
+                 .limit(_MAX_INDEX_ROWS + 1).toPandas())
+    if len(index_pdf) > _MAX_INDEX_ROWS:
         raise ValueError(
-            f"brute_force_topk index exceeds max_index_rows="
-            f"{max_index_rows}; use lsh_bucketed_topk for large corpora")
+            f"brute_force_topk index exceeds {_MAX_INDEX_ROWS} rows; "
+            "use lsh_bucketed_topk for large corpora")
     ids = index_pdf[id_col].to_numpy(dtype=np.int64)
     mat = _vec_matrix(index_pdf[vec_col])
     # index sorted by id ONCE so a stable argsort on -sims breaks
@@ -285,8 +288,7 @@ def _assert_unique_ids(df: DataFrame, id_col: str, caller: str) -> None:
             f"{caller}: id column {id_col!r} is not unique (e.g. "
             f"{id_col}={dup[0][0]!r} appears {dup[0][1]}×) — duplicated "
             "ids fan out candidate pairs through the vector join-back; "
-            "dropDuplicates upstream or pass assert_unique_ids=False "
-            "only if duplicates are genuinely impossible")
+            "dropDuplicates on the id column upstream")
 
 
 def _join_vecs_back(cand: DataFrame, df: DataFrame, id_col: str,
@@ -298,11 +300,8 @@ def _join_vecs_back(cand: DataFrame, df: DataFrame, id_col: str,
     is the candidate set, already orders of magnitude smaller than the
     banded relation.
 
-    Precondition: *id_col* is a key (unique per row) — enforced by
-    callers via :func:`_assert_unique_ids`.  A duplicated id fans each
-    of its candidate pairs out per duplicate row — the same semantics a
-    SQL join-back twin has, but different from a first()-style
-    collapse; dedupe upstream if ids can repeat."""
+    Precondition: *id_col* is a key (unique per row), which both
+    callers check with :func:`_assert_unique_ids` before any join."""
     va = df.select(F.col(id_col).alias("_vida"),
                    F.col(vec_col).alias("va"))
     vb = df.select(F.col(id_col).alias("_vidb"),
@@ -380,8 +379,7 @@ def lsh_bucket_stats(df: DataFrame, id_col: str, vec_col: str,
 
 def embedding_neardup_pairs(df: DataFrame, id_col: str, vec_col: str,
                             threshold: float = 0.95,
-                            bands=DEFAULT_SIGN_BANDS,
-                            assert_unique_ids: bool = True) -> DataFrame:
+                            bands=DEFAULT_SIGN_BANDS) -> DataFrame:
     """Embedding-cosine near-duplicate candidates: pairs sharing any
     sign-bit band key with cosine ≥ threshold (the dedup-family variant
     of the LSH search — near-dups agree on sign almost everywhere, so
@@ -390,10 +388,8 @@ def embedding_neardup_pairs(df: DataFrame, id_col: str, vec_col: str,
 
     ``id_col`` must be unique per row: the vectors are joined back onto
     deduped candidate pairs by id, so a duplicated id would fan pairs
-    out per duplicate.  Checked eagerly (one cheap agg + early-out)
-    unless ``assert_unique_ids=False``."""
-    if assert_unique_ids:
-        _assert_unique_ids(df, id_col, "embedding_neardup_pairs")
+    out per duplicate.  Checked eagerly (one cheap agg + early-out)."""
+    _assert_unique_ids(df, id_col, "embedding_neardup_pairs")
     banded = _banded(df, id_col, vec_col, bands)
     a, b = banded.alias("a"), banded.alias("b")
     # a pair may collide in several bands — dedupe ids-only candidates
@@ -411,18 +407,16 @@ def embedding_neardup_pairs(df: DataFrame, id_col: str, vec_col: str,
 
 
 def lsh_bucketed_topk(df: DataFrame, id_col: str, vec_col: str,
-                      k: int = 1, bands=DEFAULT_SIGN_BANDS,
-                      assert_unique_ids: bool = True) -> DataFrame:
+                      k: int = 1, bands=DEFAULT_SIGN_BANDS) -> DataFrame:
     """Approximate top-k: candidates restricted to pairs sharing at
     least one sign-bit band key; same output shape as
     :func:`brute_force_topk` (vectors in empty buckets yield no rows —
     approximate by design).
 
     ``id_col`` must be unique per row (vectors are joined back onto
-    deduped candidates by id); checked eagerly unless
-    ``assert_unique_ids=False`` — see :func:`embedding_neardup_pairs`."""
-    if assert_unique_ids:
-        _assert_unique_ids(df, id_col, "lsh_bucketed_topk")
+    deduped candidates by id); checked eagerly — see
+    :func:`embedding_neardup_pairs`."""
+    _assert_unique_ids(df, id_col, "lsh_bucketed_topk")
     banded = _banded(df, id_col, vec_col, bands)
     a, b = banded.alias("a"), banded.alias("b")
     cand = (a.join(b, (F.col("a.bi") == F.col("b.bi"))
@@ -441,9 +435,6 @@ def lsh_bucketed_topk(df: DataFrame, id_col: str, vec_col: str,
             .filter(F.col("rank") <= k)
             .select("vec_id", "neighbor_id", "rank",
                     F.round("cos", 6).alias("cos")))
-
-
-_MAX_CODEBOOK = 1 << 16  # broadcast codebooks stay driver-tiny
 
 
 def _ivf_assign(df: DataFrame, id_col: str, vec_col: str,

@@ -16,15 +16,19 @@ the scheduler in micro-tasks.
 :func:`map_rows` is the one driver for kernels whose input row is a
 complete unit of work: one ``mapInPandas`` pass, no grouping.  It
 serves the table kernels (canonicalize, standardize, HTML/CSV export,
-cell location), the fixture corpus (one document or its pages per id),
-the NXML ``<table-wrap>`` and PASCAL VOC scans, the VOC annotation
-sink and the media decode / frame-sample stubs.
+cell location, the GriTS metrics of one joined table pair), the
+page-location rerank scorer (one table/page candidate pair), the
+fixture corpus (one document or its pages per id), the NXML
+``<table-wrap>`` and PASCAL VOC scans, the VOC annotation sink and the
+media decode / frame-sample stubs.
 
 Two kernel families keep their own batch loop on purpose: the matrix
 kernels, which work on a whole batch at once (the four in
 ``similarity``, ``media_embedding`` and the fused page kernel), and
 the tokenizer kernels (``dedup`` shingling and signatures,
-``text_analysis`` signals and term frequencies).
+``text_analysis`` signals and term frequencies).  Grouped-map kernels
+are left only where the unit of work is a group: the IVF per-cell
+top-k and the streaming sessionization state function.
 """
 
 from __future__ import annotations

@@ -8,7 +8,8 @@ One declarative plan, shuffles only where data must move:
    broadcast).
 2. decode → detect → crop + token-assign → recognize → cells kernel,
    fused into one Arrow-batched ``mapInPandas`` pass per page
-   (``fused.py``) — **no shuffle** inside it.
+   (``fused.py``) — **no shuffle** inside it — emitting one row per
+   table (:func:`run_tables`); :func:`run_cells` explodes it per cell.
 3. reassemble per document: original text spans ∪ cell spans, ordered by
    (page_offset, table_num, cell_num) and renumbered with one window
    partitioned by ``doc_id`` — the only other shuffle in the job.
@@ -23,7 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..partitioning import widen_for_cpu
-from .fused import run_cells_fused
+from .fused import run_tables_fused
 
 
 def media_spans(documents: DataFrame) -> DataFrame:
@@ -37,9 +38,10 @@ def media_spans(documents: DataFrame) -> DataFrame:
                     F.col("span.offset").alias("page_offset")))
 
 
-def run_cells(documents: DataFrame, media: DataFrame,
-              mode: str = "clean") -> DataFrame:
-    """documents × media → one row per extracted cell (CELL_SCHEMA):
+def run_tables(documents: DataFrame, media: DataFrame,
+               mode: str = "clean") -> DataFrame:
+    """documents × media → one row per extracted table, its cells as an
+    array column (``fused._PACKED_SCHEMA``):
     decode→detect→crop→recognize→cells as one Arrow pass per page."""
     pages = (media_spans(documents)
              .join(media.select("media_ref", "payload"), "media_ref")
@@ -56,7 +58,27 @@ def run_cells(documents: DataFrame, media: DataFrame,
     # reverted; at true scale the pre-partitioned join is one
     # `widen_for_cpu` on each side away.
     pages = widen_for_cpu(pages, "media_ref")
-    return run_cells_fused(pages, mode=mode)
+    return run_tables_fused(pages, mode=mode)
+
+
+def run_cells(documents: DataFrame, media: DataFrame,
+              mode: str = "clean") -> DataFrame:
+    """:func:`run_tables` exploded JVM-side into one row per extracted
+    cell (CELL_SCHEMA)."""
+    cell = F.explode("cells").alias("cell")
+    return (run_tables(documents, media, mode=mode)
+            .select("doc_id", "media_ref", "page_offset", "table_num",
+                    "confidence", cell)
+            .select("doc_id", "media_ref", "page_offset", "table_num",
+                    F.col("cell.cell_num").alias("cell_num"),
+                    F.col("cell.bbox").alias("bbox"),
+                    F.col("cell.row_nums").alias("row_nums"),
+                    F.col("cell.column_nums").alias("column_nums"),
+                    F.col("cell.is_column_header").alias("is_column_header"),
+                    F.col("cell.is_projected_row_header")
+                    .alias("is_projected_row_header"),
+                    F.col("cell.cell_text").alias("cell_text"),
+                    "confidence"))
 
 
 def assemble_spans(documents: DataFrame, cells: DataFrame) -> DataFrame:

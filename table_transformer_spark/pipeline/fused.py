@@ -1,4 +1,4 @@
-"""Fused per-page extraction stage: payload → cell rows in ONE
+"""Fused per-page extraction stage: payload → packed table rows in ONE
 Arrow-batched pass.
 
 Decode, detect, crop, recognize and the cells kernel are all local to a
@@ -7,7 +7,7 @@ separate DataFrame stages they would pay three extra Python↔JVM Arrow
 boundaries for data (token arrays, object arrays) that never leaves the
 page row.  A page is touched exactly once per executor:
 
-    pages(payload) ──mapInPandas──▶ cells            [zero shuffle]
+    pages(payload) ──mapInPandas──▶ one row per table  [zero shuffle]
 
 Within a batch the work is array-shaped rather than per-table: a chunk
 of pages is decoded once into flat token and object arrays, the crop
@@ -31,8 +31,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from pyspark.sql import functions as F
-
 from ..config import (
     DEFAULT_CROP_PADDING,
     DETECTION_CLASS_THRESHOLDS,
@@ -50,8 +48,7 @@ from ..kernels.structure import (
 from ..serde import decode_zlib_json as _decode_payload
 
 # packed per-table row: cells travel as one array column through Arrow
-# (≈16× fewer Python→JVM rows than per-cell emission) and explode
-# JVM-side, inside codegen
+# (≈16× fewer Python→JVM rows than per-cell emission)
 _PACKED_SCHEMA = (
     "doc_id string, media_ref string, page_offset int, table_num int, "
     "confidence double, cells array<struct<"
@@ -192,21 +189,7 @@ def make_fused_page_fn(mode: str = "clean"):
     return run
 
 
-def run_cells_fused(pages_with_payload: DataFrame,
-                    mode: str = "clean") -> DataFrame:
-    packed = pages_with_payload.mapInPandas(make_fused_page_fn(mode=mode),
-                                            schema=_PACKED_SCHEMA)
-    cell = F.explode("cells").alias("cell")
-    return (packed
-            .select("doc_id", "media_ref", "page_offset", "table_num",
-                    "confidence", cell)
-            .select("doc_id", "media_ref", "page_offset", "table_num",
-                    F.col("cell.cell_num").alias("cell_num"),
-                    F.col("cell.bbox").alias("bbox"),
-                    F.col("cell.row_nums").alias("row_nums"),
-                    F.col("cell.column_nums").alias("column_nums"),
-                    F.col("cell.is_column_header").alias("is_column_header"),
-                    F.col("cell.is_projected_row_header")
-                    .alias("is_projected_row_header"),
-                    F.col("cell.cell_text").alias("cell_text"),
-                    "confidence"))
+def run_tables_fused(pages_with_payload: DataFrame,
+                     mode: str = "clean") -> DataFrame:
+    return pages_with_payload.mapInPandas(make_fused_page_fn(mode=mode),
+                                          schema=_PACKED_SCHEMA)

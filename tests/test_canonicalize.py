@@ -175,25 +175,15 @@ def test_canonicalize_blank_header_absorption():
 
 
 def test_canonicalize_cells_df_distributed(spark):
-    from pyspark.sql import functions as F
-
     from table_transformer_spark.fixtures.spark_io import documents_df, media_df
     from table_transformer_spark.operators.canonicalize_df import (
         canonicalize_cells_df,
     )
-    from table_transformer_spark.pipeline.extract import run_cells
+    from table_transformer_spark.pipeline.extract import run_tables
 
     docs = documents_df(spark, 6)
     media = media_df(spark, 6)
-    # one row per table; cell_num leads the struct, so sort_array puts
-    # the cells in extraction order
-    tables = (run_cells(docs, media, mode="clean")
-              .groupBy("doc_id", "media_ref", "table_num")
-              .agg(F.sort_array(F.collect_list(F.struct(
-                  "cell_num", "row_nums", "column_nums", "cell_text",
-                  "is_column_header", "is_projected_row_header", "bbox"))
-              ).alias("cells")))
-    out = canonicalize_cells_df(tables)
+    out = canonicalize_cells_df(run_tables(docs, media, mode="clean"))
     rows = out.collect()
     assert rows
     n_cols_by_table = {}

@@ -403,12 +403,6 @@ def test_join_back_rejects_duplicate_ids(spark):
         embedding_neardup_pairs(dup, "vec_id", "embedding")
     with pytest.raises(ValueError, match="not unique"):
         lsh_bucketed_topk(dup, "vec_id", "embedding", k=1)
-    # opting out restores the documented SQL-join fan-out semantics:
-    # the duplicated id 1 yields the (0, 1) pair once per duplicate row
-    out = embedding_neardup_pairs(dup, "vec_id", "embedding",
-                                  threshold=0.9,
-                                  assert_unique_ids=False).collect()
-    assert sorted((r.doc1, r.doc2) for r in out) == [(0, 1), (0, 1)]
 
 
 def test_similarity_kernels_have_no_per_row_python_loop():

@@ -91,22 +91,13 @@ def test_html_to_cells_standard_markup():
 
 
 def test_export_tables_distributed(spark):
-    from pyspark.sql import functions as F
-
     from table_transformer_spark.fixtures.spark_io import documents_df, media_df
     from table_transformer_spark.operators.export import export_tables
-    from table_transformer_spark.pipeline.extract import run_cells
+    from table_transformer_spark.pipeline.extract import run_tables
 
     docs = documents_df(spark, 4)
     media = media_df(spark, 4)
-    # one row per table; cell_num leads the struct, so sort_array puts
-    # the cells in extraction order
-    tables = (run_cells(docs, media, mode="clean")
-              .groupBy("doc_id", "media_ref", "table_num")
-              .agg(F.sort_array(F.collect_list(F.struct(
-                  "cell_num", "row_nums", "column_nums",
-                  "is_column_header", "cell_text"))).alias("cells")))
-    out = export_tables(tables).collect()
+    out = export_tables(run_tables(docs, media, mode="clean")).collect()
     assert out
     for r in out:
         assert r.html.startswith("<table>")

@@ -113,12 +113,12 @@ def test_distributed_grits_clean_vs_clean_is_one(spark):
         grits_table_metrics,
     )
     from table_transformer_spark.fixtures.spark_io import documents_df, media_df
-    from table_transformer_spark.pipeline.extract import run_cells
+    from table_transformer_spark.pipeline.extract import run_tables
 
     docs = documents_df(spark, 6)
     media = media_df(spark, 6)
-    cells = run_cells(docs, media, mode="clean").cache()
-    metrics = grits_table_metrics(cells, cells)
+    tables = run_tables(docs, media, mode="clean").cache()
+    metrics = grits_table_metrics(tables, tables)
     rows = metrics.collect()
     assert rows
     for row in rows:
@@ -136,19 +136,61 @@ def test_distributed_grits_clean_vs_clean_is_one(spark):
 def test_distributed_grits_noisy_vs_clean(spark):
     from table_transformer_spark.eval.grits_distributed import grits_table_metrics
     from table_transformer_spark.fixtures.spark_io import documents_df, media_df
-    from table_transformer_spark.pipeline.extract import run_cells
+    from table_transformer_spark.pipeline.extract import run_tables
 
     docs = documents_df(spark, 6)
     media = media_df(spark, 6)
-    true_cells = run_cells(docs, media, mode="clean")
-    pred_cells = run_cells(docs, media, mode="noisy")
-    rows = grits_table_metrics(true_cells, pred_cells).collect()
+    true_tables = run_tables(docs, media, mode="clean")
+    pred_tables = run_tables(docs, media, mode="noisy")
+    rows = grits_table_metrics(true_tables, pred_tables).collect()
     assert rows
     # noisy boxes keep the same grid/text at these perturbation levels,
     # so content should stay perfect while loc may dip below 1
     for row in rows:
         assert 0.0 <= row.grits_loc <= 1.0
         assert row.grits_con == pytest.approx(1.0)
+
+
+def test_distributed_grits_one_sided_tables(spark):
+    """A table present on only one side still gives one metrics row,
+    with the kernels' empty-side values (the join is full outer)."""
+    from table_transformer_spark.eval.grits_distributed import grits_table_metrics
+
+    schema = ("doc_id string, media_ref string, table_num int, "
+              "cells array<struct<bbox:array<double>, row_nums:array<int>, "
+              "column_nums:array<int>, cell_text:string>>")
+
+    def row(table_num, cells):
+        return ("d0", "img://d0/p0", table_num,
+                [(c["bbox"], c["row_nums"], c["column_nums"], c["cell_text"])
+                 for c in cells])
+
+    both = grid_2x2([["aa", "bb"], ["cc", "dd"]])
+    true_only = grid_2x2([["ee", "ff"], ["gg", "hh"]])
+    pred_only = grid_2x2([["ii", "jj"], ["kk", "ll"]])
+    true = spark.createDataFrame([row(0, both), row(1, true_only)], schema)
+    pred = spark.createDataFrame([row(0, both), row(2, pred_only)], schema)
+    rows = {r.table_num: r for r in grits_table_metrics(true, pred).collect()}
+    assert sorted(rows) == [0, 1, 2]
+    assert rows[0].grits_con == pytest.approx(1.0)
+    assert (rows[0].num_true_cells, rows[0].num_pred_cells) == (4, 4)
+
+    for table_num, t, p in ((1, true_only, []), (2, [], pred_only)):
+        r = rows[table_num]
+        assert (r.num_true_cells, r.num_pred_cells) == (len(t), len(p))
+        top_f, _, _, top_ub = grits_top(t, p)
+        con_f = grits_con(t, p)[0]
+        assert r.grits_top == pytest.approx(top_f)
+        assert r.grits_top_upper_bound == pytest.approx(top_ub)
+        assert r.grits_loc == pytest.approx(grits_loc(t, p)[0])
+        assert r.grits_con == pytest.approx(con_f)
+        assert r.acc_con == int(con_f == 1)
+        assert r.dar_con_original == pytest.approx(
+            dar_con(adjacency_pairs(t), adjacency_pairs(p))[2])
+        assert r.dar_con == pytest.approx(
+            dar_con(adjacency_pairs_with_blanks(t),
+                    adjacency_pairs_with_blanks(p))[2])
+        assert r.num_spanning_true == 0
 
 
 def test_grits_from_html():

@@ -181,6 +181,19 @@ def test_table_kernels_run_without_grouping(spark, name):
     assert not re.search(r"\bSort\b", plan)
 
 
+def test_grits_pairs_table_rows_without_cogroup(spark):
+    """GriTS takes one row per table on each side, so the planted
+    query's executed plan has no cogroup and no cell explode."""
+    import table_transformer_spark.driver_queries as dq
+
+    df = dq.QUERIES["grits_planted_perturbation"](spark, SF_DIR)
+    assert df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    assert "FlatMapCoGroupsInPandas" not in plan
+    assert not re.search(r"\bGenerate\b", plan)
+
+
 def test_map_rows_emits_typed_empty_batches(spark):
     """A batch whose rows produce no output still converts to the
     declared schema, array columns included."""

@@ -110,6 +110,29 @@ def test_locate_tables_two_phase(spark):
     assert n_right >= 0.6 * len(top)
 
 
+def test_rerank_candidates_breaks_ties_on_page_id(spark):
+    """Candidate pages rank per table by score, equal scores by
+    ascending page_id, numbered 1..n."""
+    from table_transformer_spark.operators.page_location import (
+        rerank_candidates,
+    )
+
+    cands = spark.createDataFrame(
+        [(1, 9, "alpha beta", "zz alpha zz"),
+         (1, 4, "alpha beta", "zz alpha zz"),
+         (1, 7, "alpha beta", "alpha beta"),
+         (1, 2, "alpha beta", "zz alpha zz"),
+         (2, 3, "gamma", "gamma"),
+         (2, 1, "gamma", "gamma")],
+        "table_id long, page_id long, table_text string, page_text string")
+    got = sorted((r.table_id, r.rank, r.page_id, r.sim_x1000)
+                 for r in rerank_candidates(cands).collect())
+    tie = got[1][3]
+    assert 0 < tie < 1000
+    assert got == [(1, 1, 7, 1000), (1, 2, 2, tie), (1, 3, 4, tie),
+                   (1, 4, 9, tie), (2, 1, 1, 1000), (2, 2, 3, 1000)]
+
+
 def test_windowed_event_stream_matches_batch(spark, tmp_path):
     """Watermark + tumbling window streaming agg == batch aggregation
     once the stream is fully drained (availableNow semantics)."""
