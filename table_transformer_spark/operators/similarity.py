@@ -273,21 +273,22 @@ def _banded(df: DataFrame, id_col: str, vec_col: str, bands) -> DataFrame:
 
 
 def _assert_unique_ids(df: DataFrame, id_col: str, caller: str) -> None:
-    """Enforce the join-back precondition that *id_col* is a key.
+    """Enforce a kernel's precondition that *id_col* is a key.
 
     One aggregation job with an early-out ``take(1)`` (map-side partial
     counts make this a narrow scan + one small shuffle of (id, count)
     pairs — cheap next to the band shuffle it protects).  A duplicated
     id would silently FAN OUT every candidate pair it touches through
-    the two equi-joins in :func:`_join_vecs_back`; failing loudly here
-    turns that silent row multiplication into a diagnosable error."""
+    the two equi-joins in :func:`_join_vecs_back`, and would emit one
+    verdict or tf row per input row from the per-document text kernels
+    (``text_analysis``); failing loudly here turns that silent row
+    multiplication into a diagnosable error."""
     dup = (df.groupBy(id_col).agg(F.count(F.lit(1)).alias("_n"))
            .filter(F.col("_n") > 1).take(1))
     if dup:
         raise ValueError(
             f"{caller}: id column {id_col!r} is not unique (e.g. "
-            f"{id_col}={dup[0][0]!r} appears {dup[0][1]}×) — duplicated "
-            "ids fan out candidate pairs through the vector join-back; "
+            f"{id_col}={dup[0][0]!r} appears {dup[0][1]}×) — "
             "dropDuplicates on the id column upstream")
 
 

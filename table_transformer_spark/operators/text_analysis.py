@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .similarity import _assert_unique_ids
+
 __all__ = [
     "token_count_expr",
     "quality_features",
@@ -94,9 +96,10 @@ def repetition_filters(df: DataFrame, id_col: str, text_col: str,
     the same float64 divisions both engines use) and emits one row per
     document directly.
 
-    Precondition: ``id_col`` is unique per row (one document per row).
-    A duplicated id yields one verdict row PER input row here, where
-    the old exploded path incidentally merged rows whose (id, n_words,
+    Precondition, checked at entry (``ValueError`` otherwise):
+    ``id_col`` is unique per row (one document per row).  A duplicated
+    id would yield one verdict row PER input row here, where the old
+    exploded path incidentally merged rows whose (id, n_words,
     n_distinct) happened to coincide — neither behavior is meaningful
     for multi-row ids; dedupe upstream.
     """
@@ -104,6 +107,7 @@ def repetition_filters(df: DataFrame, id_col: str, text_col: str,
 
     from pyspark.sql import types as T
 
+    _assert_unique_ids(df, id_col, "repetition_filters")
     out_schema = T.StructType([
         T.StructField("doc", df.schema[id_col].dataType),
         T.StructField("n_words", T.LongType()),
@@ -182,10 +186,12 @@ def tfidf_top_terms(df: DataFrame, id_col: str, text_col: str,
     exactly one shuffle (the explode).  ``N`` is a driver-side scalar
     ``count()`` — one metadata-cheap job, not a collect of rows.
 
-    Precondition: ``id_col`` is unique per row (one document per row);
-    a duplicated id would emit duplicate (doc, term) tf rows where the
-    old explode→groupBy path merged them.  Dedupe upstream.
+    Precondition, checked at entry (``ValueError`` otherwise):
+    ``id_col`` is unique per row (one document per row); a duplicated
+    id would emit duplicate (doc, term) tf rows where the old
+    explode→groupBy path merged them.  Dedupe upstream.
     """
+    _assert_unique_ids(df, id_col, "tfidf_top_terms")
     # Term frequencies computed in one narrow Arrow kernel: tf is a
     # per-doc statistic, so the explode → groupBy(doc, term) exchange
     # shuffled the whole token stream only to re-group rows that were

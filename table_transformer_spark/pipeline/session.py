@@ -3,22 +3,44 @@
 Local mode is a correctness proxy for the real cluster: shuffle
 partitions sized to cores, AQE on (post-shuffle coalescing + skew-join
 splitting — the north rule's skew handling at runtime), Arrow enabled
-for every pandas-kernel boundary.
+for every pandas-kernel boundary.  Cores and driver memory default to
+what the host has (:func:`host_defaults`).
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
+
+# the largest driver heap a default picks, however big the host
+MAX_DRIVER_MB = 24 * 1024
+
+
+def host_defaults(environ: Mapping[str, str], n_cpus: int,
+                  phys_bytes: int) -> tuple[int, str]:
+    """``(cores, spark.driver.memory)`` for a host with *n_cpus* usable
+    CPUs and *phys_bytes* of physical memory: ``SPARK_GRAFT_CPUS`` /
+    ``SPARK_GRAFT_DRIVER_MEM`` when set, else every usable CPU and half
+    of physical memory (at most ``MAX_DRIVER_MB``), since in local mode
+    the driver heap also holds every executor task."""
+    cores = int(environ.get("SPARK_GRAFT_CPUS", n_cpus))
+    memory = environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if memory is None:
+        memory = f"{min(phys_bytes // 2**21, MAX_DRIVER_MB)}m"
+    return cores, memory
 
 
 def get_spark(app_name: str = "table_transformer_spark",
               cores: int | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
+    default_cores, driver_memory = host_defaults(
+        os.environ, len(os.sched_getaffinity(0)),
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cores
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
 
@@ -51,7 +73,7 @@ def get_spark(app_name: str = "table_transformer_spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # large batches amortize Arrow transfer for the kernel stages
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

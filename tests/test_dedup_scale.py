@@ -405,6 +405,19 @@ def test_join_back_rejects_duplicate_ids(spark):
         lsh_bucketed_topk(dup, "vec_id", "embedding", k=1)
 
 
+@pytest.mark.parametrize("kernel", ["repetition_filters", "tfidf_top_terms"])
+def test_text_kernels_reject_duplicate_ids(spark, kernel):
+    """Both per-document text kernels emit a row per input row, so a
+    duplicated doc id is refused at entry rather than fanned out."""
+    from table_transformer_spark.operators import text_analysis
+
+    dup = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "gamma"), (2, "gamma delta")],
+        "doc_id long, text string")
+    with pytest.raises(ValueError, match=f"^{kernel}: .*not unique"):
+        getattr(text_analysis, kernel)(dup, "doc_id", "text")
+
+
 def test_similarity_kernels_have_no_per_row_python_loop():
     """Every similarity kernel must stay batched: a per-vector Python
     loop doing scalar work inside an Arrow kernel is the anti-pattern
