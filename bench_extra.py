@@ -6,12 +6,12 @@ and dump ``explain("formatted")`` plans without touching the frozen
 harness.
 
 Usage:
-  python bench_extra.py                        # all BENCH_QUERIES, sf1.0
+  python bench_extra.py                        # all BENCH_QUERIES
   python bench_extra.py --queries a,b --reps 3
   python bench_extra.py --explain plans/r06 --suffix before
 
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf1.0),
-     SPARK_GRAFT_CPUS (default 32).
+Env: SPARK_GRAFT_SF_DIR (default: ``bench.SF_DIR``'s, the sf0.1 testdata),
+     SPARK_GRAFT_CPUS (default: every usable CPU, as ``get_spark``).
 
 Prints one JSON line: {"queries": {name: best_sec}, "samples": {...},
 "sf_dir": ..., "loadavg": [...]}.
@@ -27,8 +27,15 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+from bench import BENCH_QUERIES, SF_DIR, _run, warmup  # noqa: E402
+from table_transformer_spark.pipeline.session import (  # noqa: E402
+    get_spark,
+    host_defaults,
+)
+
+CPUS, _ = host_defaults(
+    os.environ, len(os.sched_getaffinity(0)),
+    os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))
 
 
 def main() -> None:
@@ -43,8 +50,6 @@ def main() -> None:
     args = ap.parse_args()
 
     from __spark_entry__ import queries as entry_queries
-    from bench import BENCH_QUERIES, warmup
-    from table_transformer_spark.pipeline.session import get_spark
 
     QUERIES = entry_queries()
     names = ([q.strip() for q in args.queries.split(",") if q.strip()]
@@ -98,8 +103,7 @@ def main() -> None:
                 spark.sparkContext.setJobDescription(
                     f"bench_extra:{name}")
                 t0 = time.perf_counter()
-                QUERIES[name](spark, SF_DIR).write.format("noop").mode(
-                    "overwrite").save()
+                _run(QUERIES[name](spark, SF_DIR))
                 wall = time.perf_counter() - t0
                 spark.sparkContext.setJobDescription(None)
                 samples[name].append(round(wall, 3))

@@ -28,10 +28,14 @@ import sys
 import tempfile
 import zipfile
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from probe_gate import ProbeGate  # noqa: E402 (needs the path insert)
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+from probe_gate import ProbeGate  # noqa: E402 (needs the path insert)
+from table_transformer_spark.pipeline.session import (  # noqa: E402
+    host_defaults,
+)
+
 # Big enough that per-job fixed costs (~25s: scan setup, spans write,
 # status job, AQE planning) amortize against the kernel work at the LOW
 # level: with the round-3 kernel (~2.4ms/page), 96k docs ≈ 8min at
@@ -70,7 +74,6 @@ def materialize_corpus(tmp: str) -> str:
     """Generate the corpus parquet ONCE (untimed, full parallelism):
     the measured job *reads* its corpus, as the production job would."""
     corpus_dir = os.path.join(tmp, "corpus")
-    sys.path.insert(0, REPO)
     from table_transformer_spark.fixtures.spark_io import write_corpus
     from table_transformer_spark.pipeline.session import get_spark
 
@@ -82,10 +85,15 @@ def materialize_corpus(tmp: str) -> str:
 
 
 def submit(cores: int, zpath: str, out_dir: str, corpus_dir: str) -> dict:
+    # SPARK_GRAFT_DRIVER_MEM, else half of physical memory (capped):
+    # the rule get_spark sizes its own driver heap by
+    _cpus, driver_mem = host_defaults(
+        os.environ, len(os.sched_getaffinity(0)),
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))
     cmd = [
         "spark-submit",
         "--master", f"local[{cores}]",
-        "--driver-memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+        "--driver-memory", driver_mem,
         # honest resource accounting: each task of the Arrow-batched
         # kernel stage occupies ~2 cores (the Python worker plus its JVM
         # Arrow-serde/shuffle companion thread).  Declaring task.cpus=2

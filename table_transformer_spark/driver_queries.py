@@ -2020,11 +2020,12 @@ def q_ivf_train_codebook(spark, sf_dir):
     """Distributed spherical k-means codebook training (2 Lloyd's
     iterations, 8 cells) + a final membership pass — the "trained
     offline" IVF step as a Spark job.  Output is the trained codebook
-    with per-cell member counts; centroid components rounded to 1e-6
-    in BOTH engines so the driver's value-hash tolerates the engines'
-    differing float-summation orders (ulp-level) without weakening the
-    parity (any assignment or update divergence shifts components by
-    far more than 1e-6)."""
+    with per-cell member counts, one ``(cid, n_members, pos, val)`` row
+    per centroid component (scalar columns, so every row hashes);
+    components rounded to 1e-6 in BOTH engines so the driver's
+    value-hash tolerates the engines' differing float-summation orders
+    (ulp-level) without weakening the parity (any assignment or update
+    divergence shifts components by far more than 1e-6)."""
     from .operators.similarity import ivf_cell_stats, train_ivf_codebook
     emb = load(spark, sf_dir, "embeddings")
     cb = train_ivf_codebook(emb, "vec_id", "embedding",
@@ -2035,8 +2036,8 @@ def q_ivf_train_codebook(spark, sf_dir):
             .select("cid",
                     F.coalesce("n_vecs", F.lit(0)).cast("long")
                     .alias("n_members"),
-                    F.expr("transform(cvec, x -> round(x, 6))")
-                    .alias("cvec_r")))
+                    F.posexplode(F.expr("transform(cvec, x -> round(x, 6))"))
+                    .alias("pos", "val")))
 
 
 _KM_ASSIGN = """
@@ -2088,7 +2089,8 @@ a3 AS ({_KM_ASSIGN.format(cents='c2')}),
 members AS (SELECT cell, count(*) AS n_members FROM a3 GROUP BY cell)
 SELECT c2.cid,
        COALESCE(members.n_members, 0) AS n_members,
-       list_transform(c2.cv, x -> round(x, 6)) AS cvec_r
+       CAST(generate_subscripts(c2.cv, 1) - 1 AS INT) AS pos,
+       round(unnest(c2.cv), 6) AS val
 FROM c2 LEFT JOIN members ON members.cell = c2.cid
 """
 

@@ -1,23 +1,27 @@
 """Similarity search over embedding columns (``array<float>``).
 
-* **brute-force cosine top-k** — exact baseline: pairwise join +
-  higher-order-function dot product, all JVM-side (``zip_with`` +
-  ``aggregate``), ranked with one window.  Quadratic: fine for probe
-  sets, not the 10^12 path.
+* **brute-force cosine top-k** — exact baseline: the index is
+  broadcast once and every probe batch is scored with chunked BLAS
+  matmuls (:func:`_cos_chunks`, also the IVF kernels' cosine).
+  Quadratic: fine for probe sets, not the 10^12 path.
 * **LSH-bucketed top-k** — the scale path: sign-bit bucketing on fixed
   dimensions (a portable random-hyperplane degenerate), candidates only
   join within a bucket; **multi-band union** recovers recall (a true
   neighbor missed by one band's bits is caught by another's).
 
-**Bucket-cardinality math** (why bits are a parameter): with ``b``
-sign bits per band over near-isotropic embeddings, expected bucket
-size is N/2^b and the within-bucket candidate join costs
-Σ nᵢ² ≈ N²/2^b per band.  Keeping per-bucket work linear in N means
-choosing b ≈ log₂(N / target_bucket_size): 12 bits (4096 buckets,
-the default here) suits 10⁵–10⁷ rows; a 100 TB corpus (N ≈ 10¹⁰)
-wants b ≈ 24–28 with seeded random hyperplanes broadcast to executors
-— same plan shape, just wider keys and more bands.  A fixed 6-bit key
-(64 buckets) re-quadratics at scale; don't hard-code it.
+**Bucket-cardinality math** (why ``DEFAULT_SIGN_BANDS`` is a
+constant, and how to widen it): with ``b`` sign bits per band over
+near-isotropic embeddings, expected bucket size is N/2^b and the
+within-bucket candidate join costs Σ nᵢ² ≈ N²/2^b per band.  Keeping
+per-bucket work linear in N means b ≈ log₂(N / target_bucket_size):
+the two 12-bit bands (4096 buckets each) suit 10⁵–10⁷ rows.  The bands
+are one module constant, not an option, because the SQL oracles build
+their band keys from the same tuple (``driver_queries._lsh_keyed_sql``)
+— a per-call override could only make the operator and its oracle
+disagree.  A 100 TB corpus (N ≈ 10¹⁰) wants b ≈ 24–28 with seeded
+random hyperplanes broadcast to executors: widen the constant's dims
+per band and add bands — same plan shape, just wider keys.  A fixed
+6-bit key (64 buckets) re-quadratics at scale.
 
 All arithmetic is cast to double *before* multiplication so any SQL
 oracle (DuckDB) reproduces the floats bit-for-bit.
@@ -29,11 +33,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = [
-    "cosine_expr",
     "brute_force_topk",
     "lsh_bucket_key",
     "lsh_bucketed_topk",
-    "lsh_bucket_stats",
     "embedding_neardup_pairs",
     "ivf_topk",
     "train_ivf_codebook",
@@ -46,15 +48,10 @@ DEFAULT_SIGN_BANDS = (
     (0, 7, 19, 31, 43, 57, 3, 11, 23, 37, 47, 61),
     (1, 5, 13, 17, 29, 41, 53, 59, 2, 38, 50, 62),
 )
-DEFAULT_SIGN_DIMS = DEFAULT_SIGN_BANDS[0]
 
 # driver-collected sides stay driver-tiny
 _MAX_INDEX_ROWS = 1_000_000  # brute-force index
 _MAX_CODEBOOK = 1 << 16  # broadcast IVF codebook
-
-
-def _as_double(vec: Column) -> Column:
-    return F.transform(vec, lambda x: x.cast("double"))
 
 
 def _vec_matrix(vecs):
@@ -73,19 +70,6 @@ def _vec_matrix(vecs):
     return np.stack(rows).astype(np.float64, copy=False)
 
 
-def cosine_expr(v1: Column, v2: Column) -> Column:
-    """Cosine similarity of two array<float> columns, computed in double
-    with left-to-right summation (portable across engines)."""
-    a, b = _as_double(v1), _as_double(v2)
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    na = F.aggregate(F.transform(a, lambda x: x * x),
-                     F.lit(0.0), lambda acc, x: acc + x)
-    nb = F.aggregate(F.transform(b, lambda x: x * x),
-                     F.lit(0.0), lambda acc, x: acc + x)
-    return dot / F.sqrt(na * nb)
-
-
 def brute_force_topk(df: DataFrame, id_col: str, vec_col: str,
                      k: int = 3) -> DataFrame:
     """Exact top-k cosine neighbors per vector: (vec_id, neighbor_id,
@@ -99,7 +83,6 @@ def brute_force_topk(df: DataFrame, id_col: str, vec_col: str,
     dot product and shuffle-free.
     """
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -137,20 +120,9 @@ def brute_force_topk(df: DataFrame, id_col: str, vec_col: str,
         b_ids, b_mat, b_norms = bc.value
         for pdf in batches:
             q_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            q = _vec_matrix(pdf[vec_col])
-            q_norms = np.sqrt((q * q).sum(axis=1))
-            # chunk the probe rows so the sims matrix stays bounded
-            # regardless of index size — with the kernel now running on
-            # every core concurrently, an unchunked rows×N float64
-            # matrix per worker would scale worker memory with the
-            # CORPUS, not the batch (per-row results are independent,
-            # so chunking changes nothing)
-            for lo, hi in _sims_chunks(len(q_ids), len(b_ids)):
-                sims = q[lo:hi] @ b_mat.T
-                np.divide(sims,
-                          q_norms[lo:hi, None] * b_norms[None, :],
-                          out=sims)   # in place — same IEEE divide
-                yield _emit_topk(q_ids[lo:hi], b_ids, sims, k)
+            for lo, hi, cos in _cos_chunks(_vec_matrix(pdf[vec_col]),
+                                           b_mat, b_norms):
+                yield _emit_topk(q_ids[lo:hi], b_ids, cos, k)
 
     # The probe side must be SPREAD before the kernel: the input is one
     # compact parquet file, so without an explicit repartition the whole
@@ -168,12 +140,11 @@ def _emit_topk(q_ids, b_ids, sims, k: int, round_cos: bool = True):
     """Batched top-k emit shared by the brute-force and IVF per-cell
     kernels: order = cos desc, neighbor_id asc; self-pairs excluded.
 
-    ``b_ids`` MUST be sorted ascending — a STABLE argsort on -sims then
-    breaks cos ties toward the lower index = lower neighbor_id, so the
-    whole batch sorts in ONE numpy call (no Python-level per-query
-    loop).  Self-pairs are pushed to the tail with -inf; because -inf
-    sorts strictly last, surviving neighbors are a prefix of each row,
-    and a boolean filter drops the padding after the flatten.
+    ``b_ids`` MUST be sorted ascending, so cos ties break toward the
+    lower index = lower neighbor_id.  Self-pairs are pushed to the tail
+    with -inf; because -inf sorts strictly last, surviving neighbors
+    are a prefix of each row, and a boolean filter drops the padding
+    after the flatten.
 
     ``round_cos=False`` emits RAW cosines for callers that re-rank
     globally before rounding at the edge (the IVF nprobe>1 path, where
@@ -202,41 +173,35 @@ def _emit_topk(q_ids, b_ids, sims, k: int, round_cos: bool = True):
     for i in np.flatnonzero(hi_ix > lo_ix):
         sims[i, lo_ix[i]:hi_ix[i]] = -np.inf
     masked = sims
-    n_idx = masked.shape[1]
-    if k_eff >= n_idx:
-        # degenerate: every neighbor selected — the full stable sort is
-        # the cheapest exact answer
-        order = np.argsort(-masked, axis=1, kind="stable")[:, :k_eff]
-    else:
-        # top-k via np.partition (O(n) per row) instead of a full
-        # O(n log n) stable argsort — the sort was the kernel's hot
-        # spot once the matmul batched.  Exact tie semantics are kept
-        # by construction, not by sort stability: per row, take every
-        # index with cos STRICTLY above the k-th value (there are < k
-        # of them, ordered by cos desc then index asc), then fill the
-        # remaining slots with the LOWEST indices among the ties at
-        # the k-th value (flatnonzero returns them ascending, and
-        # ascending index = ascending neighbor_id because b_ids is
-        # sorted).  Identical output to the stable argsort for every
-        # input, including duplicated vectors and -inf self-pads.
-        neg = -masked
-        neg.partition(k_eff - 1, axis=1)   # in place — no second copy
-        kth = -neg[:, k_eff - 1]
-        order = np.empty((n_q, k_eff), dtype=np.intp)
-        for i in range(n_q):
-            row = masked[i]
-            if np.isnan(kth[i]):
-                # fewer than k_eff comparable values (NaN cos from a
-                # zero-norm vector) — the stable sort reproduces the
-                # old NaN-last emit order exactly for this rare row
-                order[i] = np.argsort(-row, kind="stable")[:k_eff]
-                continue
-            gt = np.flatnonzero(row > kth[i])
-            if len(gt) > 1:
-                gt = gt[np.lexsort((gt, -row[gt]))]
-            eq = np.flatnonzero(row == kth[i])[:k_eff - len(gt)]
-            order[i, :len(gt)] = gt
-            order[i, len(gt):] = eq
+    # top-k via np.partition (O(n) per row) instead of a full
+    # O(n log n) stable argsort — the sort was the kernel's hot spot
+    # once the matmul batched (k_eff == n_idx is a valid kth too).
+    # Exact tie semantics are kept by construction, not by sort
+    # stability: per row, take every index with cos STRICTLY above the
+    # k-th value (there are < k of them, ordered by cos desc then index
+    # asc), then fill the remaining slots with the LOWEST indices among
+    # the ties at the k-th value (flatnonzero returns them ascending,
+    # and ascending index = ascending neighbor_id because b_ids is
+    # sorted).  Identical output to the stable argsort for every input,
+    # including duplicated vectors and -inf self-pads.
+    neg = -masked
+    neg.partition(k_eff - 1, axis=1)   # in place — no second copy
+    kth = -neg[:, k_eff - 1]
+    order = np.empty((n_q, k_eff), dtype=np.intp)
+    for i in range(n_q):
+        row = masked[i]
+        if np.isnan(kth[i]):
+            # fewer than k_eff comparable values (NaN cos from a
+            # zero-norm vector) — the stable sort reproduces the old
+            # NaN-last emit order exactly for this rare row
+            order[i] = np.argsort(-row, kind="stable")[:k_eff]
+            continue
+        gt = np.flatnonzero(row > kth[i])
+        if len(gt) > 1:
+            gt = gt[np.lexsort((gt, -row[gt]))]
+        eq = np.flatnonzero(row == kth[i])[:k_eff - len(gt)]
+        order[i, :len(gt)] = gt
+        order[i, len(gt):] = eq
     sel_cos = np.take_along_axis(masked, order, axis=1).ravel()
     keep = sel_cos != -np.inf
     sel_cos = sel_cos[keep]
@@ -248,23 +213,24 @@ def _emit_topk(q_ids, b_ids, sims, k: int, round_cos: bool = True):
         "cos": np.round(sel_cos, 6) if round_cos else sel_cos})
 
 
-def lsh_bucket_key(vec: Column, dims=DEFAULT_SIGN_DIMS) -> Column:
+def lsh_bucket_key(vec: Column, dims) -> Column:
     """Sign-bit bucket key over fixed embedding dimensions."""
     bits = [F.when(vec[d] >= 0, F.lit("1")).otherwise(F.lit("0"))
             for d in dims]
     return F.concat(*bits)
 
 
-def _banded(df: DataFrame, id_col: str, vec_col: str, bands) -> DataFrame:
-    """(vec_id, bi, bkey) — one SLIM row per band.  Deliberately drops
-    the vector: the banded relation is the widest in any LSH plan
-    (n_bands × N rows) and feeds the candidate shuffle, so carrying the
-    embedding here would serialize every vector n_bands× through the
-    heaviest exchange.  Consumers join vectors back ONCE, after the
-    candidate set is deduped (see :func:`_join_vecs_back`)."""
+def _banded(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(vec_id, bi, bkey) — one SLIM row per ``DEFAULT_SIGN_BANDS``
+    band.  Deliberately drops the vector: the banded relation is the
+    widest in any LSH plan (n_bands × N rows) and feeds the candidate
+    shuffle, so carrying the embedding here would serialize every
+    vector n_bands× through the heaviest exchange.  Consumers join
+    vectors back ONCE, after the candidate set is deduped (see
+    :func:`_join_vecs_back`)."""
     structs = [F.struct(F.lit(i).alias("bi"),
                         lsh_bucket_key(F.col(vec_col), dims).alias("bkey"))
-               for i, dims in enumerate(bands)]
+               for i, dims in enumerate(DEFAULT_SIGN_BANDS)]
     return (df.select(F.col(id_col).alias("vec_id"),
                       F.explode(F.array(*structs)).alias("band"))
             .select("vec_id",
@@ -301,8 +267,9 @@ def _join_vecs_back(cand: DataFrame, df: DataFrame, id_col: str,
     is the candidate set, already orders of magnitude smaller than the
     banded relation.
 
-    Precondition: *id_col* is a key (unique per row), which both
-    callers check with :func:`_assert_unique_ids` before any join."""
+    Precondition: *id_col* is a key (unique per row), which
+    :func:`_band_pair_cos` checks with :func:`_assert_unique_ids`
+    before any join."""
     va = df.select(F.col(id_col).alias("_vida"),
                    F.col(vec_col).alias("va"))
     vb = df.select(F.col(id_col).alias("_vidb"),
@@ -327,18 +294,39 @@ def _sims_chunks(n_rows: int, n_index: int,
         yield lo, min(n_rows, lo + step)
 
 
+def _cos_chunks(q, idx, idx_norms):
+    """(lo, hi, cos): cosine of query rows ``q[lo:hi]`` against every
+    row of the index matrix *idx* (row norms *idx_norms*), one
+    :func:`_sims_chunks` slice at a time — the one query×index cosine
+    of the brute-force, IVF assignment and IVF per-cell kernels, so
+    each chunk's float64 matrix stays within ``_SIMS_CHUNK_BYTES``
+    whatever the index size.  Rows are independent: chunking changes
+    no value.  ``cos`` is a fresh array the caller may mutate."""
+    import numpy as np
+
+    q_norms = np.sqrt((q * q).sum(axis=1))
+    for lo, hi in _sims_chunks(len(q), len(idx)):
+        cos = q[lo:hi] @ idx.T
+        np.divide(cos, q_norms[lo:hi, None] * idx_norms[None, :],
+                  out=cos)   # in place — same IEEE divide
+        yield lo, hi, cos
+
+
 def _pair_cos(pairs: DataFrame, left: str, right: str) -> DataFrame:
     """(left, right, cos) from a candidate-pair relation carrying both
     vectors as ``va``/``vb``.
 
-    Bit-identical to ``cosine_expr``: products in double after the
-    cast, and the three sums folded STRICTLY left-to-right (the kernel
-    loops over the dimension axis, vectorized across pairs — the same
-    IEEE add sequence per pair as the SQL ``aggregate()`` fold), with
-    ``dot / sqrt(na * nb)`` at the end.  Exists because Spark evaluates
-    higher-order-function lambdas interpreted per element — measured as
-    the dominant cost of the LSH candidate scoring — while this kernel
-    runs ~3×dim vectorized ops per batch."""
+    Bit-identical to the SQL oracles' cosine,
+    ``list_dot_product(a, b) / sqrt(list_dot_product(a, a) *
+    list_dot_product(b, b))`` over ``DOUBLE[]``: products in double
+    after the widening, and the three sums folded STRICTLY
+    left-to-right (the kernel loops over the dimension axis, vectorized
+    across pairs), with ``dot / sqrt(na * nb)`` at the end.  Symmetric
+    bit for bit — the products commute, and so does ``na * nb`` — so a
+    pair scored as (a, b) also serves (b, a).  A Python kernel because
+    Spark evaluates higher-order-function lambdas interpreted per
+    element, which measured as the dominant cost of the LSH candidate
+    scoring; this kernel runs ~3×dim vectorized ops per batch."""
     import numpy as np
     import pandas as pd
 
@@ -368,30 +356,18 @@ def _pair_cos(pairs: DataFrame, left: str, right: str) -> DataFrame:
         kern, schema=schema)
 
 
-def lsh_bucket_stats(df: DataFrame, id_col: str, vec_col: str,
-                     bands=DEFAULT_SIGN_BANDS) -> DataFrame:
-    """Bucket-size telemetry: (bi, bkey, n_vecs) histogram — run before
-    a big LSH job to verify no bucket is large enough to re-quadratic
-    the candidate join (if one is, raise bits or add a salt band)."""
-    return (_banded(df, id_col, vec_col, bands)
-            .groupBy("bi", "bkey")
-            .agg(F.count(F.lit(1)).alias("n_vecs")))
+def _band_pair_cos(df: DataFrame, id_col: str, vec_col: str,
+                   caller: str) -> DataFrame:
+    """(doc1, doc2, cos) for every pair doc1 < doc2 that shares at
+    least one sign-bit band key — the one LSH candidate join behind
+    :func:`embedding_neardup_pairs` and :func:`lsh_bucketed_topk`.
 
-
-def embedding_neardup_pairs(df: DataFrame, id_col: str, vec_col: str,
-                            threshold: float = 0.95,
-                            bands=DEFAULT_SIGN_BANDS) -> DataFrame:
-    """Embedding-cosine near-duplicate candidates: pairs sharing any
-    sign-bit band key with cosine ≥ threshold (the dedup-family variant
-    of the LSH search — near-dups agree on sign almost everywhere, so
-    each band catches them with high probability and the band union
-    compounds the recall).
-
-    ``id_col`` must be unique per row: the vectors are joined back onto
-    deduped candidate pairs by id, so a duplicated id would fan pairs
-    out per duplicate.  Checked eagerly (one cheap agg + early-out)."""
-    _assert_unique_ids(df, id_col, "embedding_neardup_pairs")
-    banded = _banded(df, id_col, vec_col, bands)
+    ``id_col`` must be unique per row (vectors are joined back onto
+    deduped candidates by id, so a duplicated id would fan pairs out
+    per duplicate); checked eagerly (one cheap agg + early-out), with
+    *caller* named in the error."""
+    _assert_unique_ids(df, id_col, caller)
+    banded = _banded(df, id_col, vec_col)
     a, b = banded.alias("a"), banded.alias("b")
     # a pair may collide in several bands — dedupe ids-only candidates
     # BEFORE vectors enter any shuffle
@@ -401,35 +377,40 @@ def embedding_neardup_pairs(df: DataFrame, id_col: str, vec_col: str,
             .select(F.col("a.vec_id").alias("doc1"),
                     F.col("b.vec_id").alias("doc2"))
             .distinct())
-    pairs = _join_vecs_back(cand, df, id_col, vec_col, "doc1", "doc2")
-    return (_pair_cos(pairs, "doc1", "doc2")
+    return _pair_cos(
+        _join_vecs_back(cand, df, id_col, vec_col, "doc1", "doc2"),
+        "doc1", "doc2")
+
+
+def embedding_neardup_pairs(df: DataFrame, id_col: str, vec_col: str,
+                            threshold: float = 0.95) -> DataFrame:
+    """Embedding-cosine near-duplicate candidates: pairs sharing any
+    sign-bit band key with cosine ≥ threshold (the dedup-family variant
+    of the LSH search — near-dups agree on sign almost everywhere, so
+    each band catches them with high probability and the band union
+    compounds the recall).  ``id_col`` must be unique per row — see
+    :func:`_band_pair_cos`."""
+    return (_band_pair_cos(df, id_col, vec_col, "embedding_neardup_pairs")
             .filter(F.col("cos") >= threshold)
             .select("doc1", "doc2", F.round("cos", 6).alias("cos")))
 
 
 def lsh_bucketed_topk(df: DataFrame, id_col: str, vec_col: str,
-                      k: int = 1, bands=DEFAULT_SIGN_BANDS) -> DataFrame:
+                      k: int = 1) -> DataFrame:
     """Approximate top-k: candidates restricted to pairs sharing at
     least one sign-bit band key; same output shape as
     :func:`brute_force_topk` (vectors in empty buckets yield no rows —
-    approximate by design).
+    approximate by design).  ``id_col`` must be unique per row — see
+    :func:`_band_pair_cos`.
 
-    ``id_col`` must be unique per row (vectors are joined back onto
-    deduped candidates by id); checked eagerly — see
-    :func:`embedding_neardup_pairs`."""
-    _assert_unique_ids(df, id_col, "lsh_bucketed_topk")
-    banded = _banded(df, id_col, vec_col, bands)
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (a.join(b, (F.col("a.bi") == F.col("b.bi"))
-                   & (F.col("a.bkey") == F.col("b.bkey"))
-                   & (F.col("a.vec_id") != F.col("b.vec_id")))
-            .select(F.col("a.vec_id").alias("vec_id"),
-                    F.col("b.vec_id").alias("neighbor_id"))
-            .distinct())
-    pairs = _pair_cos(
-        _join_vecs_back(cand, df, id_col, vec_col,
-                        "vec_id", "neighbor_id"),
-        "vec_id", "neighbor_id")
+    Each candidate pair is scored once and emitted in both directions
+    (:func:`_pair_cos` is symmetric bit for bit)."""
+    pairs = _band_pair_cos(df, id_col, vec_col, "lsh_bucketed_topk")
+    pairs = pairs.select(F.inline(F.array(
+        F.struct(F.col("doc1").alias("vec_id"),
+                 F.col("doc2").alias("neighbor_id"), "cos"),
+        F.struct(F.col("doc2").alias("vec_id"),
+                 F.col("doc1").alias("neighbor_id"), "cos"))))
     w = Window.partitionBy("vec_id").orderBy(F.col("cos").desc(),
                                              F.col("neighbor_id").asc())
     return (pairs.withColumn("rank", F.row_number().over(w))
@@ -442,11 +423,13 @@ def _ivf_assign(df: DataFrame, id_col: str, vec_col: str,
                 n_cells: int, codebook: DataFrame | None,
                 nprobe: int = 1) -> DataFrame:
     """Shared IVF assignment stage: broadcast the codebook, rank each
-    vector's ``nprobe`` max-cosine centroids with one BLAS matmul per
-    Arrow batch (ties → lowest centroid id).  Returns (vec_id, cell,
-    probe_rank, vec): probe_rank 0 is the *home* cell (where the vector
-    is indexed); ranks 1..nprobe-1 are the extra cells the vector
-    probes as a query.
+    vector's ``nprobe`` max-cosine centroids with BLAS matmuls over
+    :func:`_cos_chunks` slices of each Arrow batch (ties → lowest
+    centroid id), so the batch × codebook cosine matrix stays within
+    ``_SIMS_CHUNK_BYTES`` even at the ``_MAX_CODEBOOK`` bound.  Returns
+    (vec_id, cell, probe_rank, vec): probe_rank 0 is the *home* cell
+    (where the vector is indexed); ranks 1..nprobe-1 are the extra
+    cells the vector probes as a query.
 
     ``codebook`` is a (cid, cvec) DataFrame — the k-means codebook a
     production run trains offline.  When omitted, the ``n_cells``
@@ -488,27 +471,21 @@ def _ivf_assign(df: DataFrame, id_col: str, vec_col: str,
     def assign(batches):
         ci, cm, cn = bc.value
         for pdf in batches:
-            q = _vec_matrix(pdf[vec_col])
-            qn = np.sqrt((q * q).sum(axis=1))
-            sims = (q @ cm.T) / (qn[:, None] * cn[None, :])
             ids = pdf[id_col].to_numpy(dtype=np.int64)
-            if n_probe == 1:
-                # argmax returns the FIRST max → lowest cid on ties
-                # (cids are collected in ascending cid order)
-                yield pd.DataFrame({
-                    "vec_id": ids,
-                    "cell": ci[sims.argmax(axis=1)],
-                    "probe_rank": np.zeros(len(ids), dtype=np.int32),
-                    "vec": pdf[vec_col]})
-                continue
+            # nprobe 1: argmax returns the FIRST max → lowest cid on
+            # ties (cids are collected in ascending cid order).  Else
             # cos desc, cid asc — same total order as the SQL twin's
-            # row_number() OVER (ORDER BY ccos DESC, cid ASC): cids are
-            # collected ascending, so a STABLE argsort on -sims breaks
-            # ties toward the lower index = lower cid.  One batched sort
-            # over the whole sims matrix + a repeat-emit; no Python-level
-            # per-row loop (a full sort beats argpartition here because
-            # boundary ties must order exactly like the SQL twin).
-            order = np.argsort(-sims, axis=1, kind="stable")[:, :n_probe]
+            # row_number() OVER (ORDER BY ccos DESC, cid ASC): a STABLE
+            # argsort on -cos breaks ties toward the lower index = lower
+            # cid.  One batched sort per chunk + a repeat-emit; no
+            # Python-level per-row loop (a full sort beats argpartition
+            # here because boundary ties must order exactly like the
+            # SQL twin).
+            order = np.concatenate([
+                cos.argmax(axis=1)[:, None] if n_probe == 1
+                else np.argsort(-cos, axis=1, kind="stable")[:, :n_probe]
+                for _, _, cos in _cos_chunks(_vec_matrix(pdf[vec_col]),
+                                             cm, cn)])
             rep = np.repeat(np.arange(len(ids)), n_probe)
             yield pd.DataFrame({
                 "vec_id": ids[rep],
@@ -529,12 +506,13 @@ def _ivf_assign(df: DataFrame, id_col: str, vec_col: str,
 def ivf_cell_stats(df: DataFrame, id_col: str, vec_col: str,
                    n_cells: int = 16,
                    codebook: DataFrame | None = None) -> DataFrame:
-    """Cell-size telemetry: (cell, n_vecs) histogram — the IVF twin of
-    :func:`lsh_bucket_stats`.  Run before a big IVF job: a cell holding
-    ``m`` vectors costs an ``m×m`` matmul in :func:`ivf_topk`, so a
-    skewed cell (hot centroid) re-quadratics the search exactly like an
-    oversized LSH bucket.  If one dominates, retrain the codebook with
-    more cells (n_cells ∝ N) or split the hot cell."""
+    """Cell-size telemetry: (cell, n_vecs) histogram.  Run before a
+    big IVF job: a cell holding ``m`` vectors costs ``m×m`` cosines in
+    :func:`ivf_topk`, so a skewed cell (hot centroid) re-quadratics the
+    search exactly like an oversized LSH bucket.  If one dominates,
+    retrain the codebook with more cells (n_cells ∝ N) or split the hot
+    cell.  The assignment's memory is bounded by ``_SIMS_CHUNK_BYTES``
+    per chunk (see :func:`_ivf_assign`)."""
     return (_ivf_assign(df, id_col, vec_col, n_cells, codebook)
             .groupBy("cell")
             .agg(F.count(F.lit(1)).alias("n_vecs")))
@@ -558,7 +536,7 @@ def ivf_topk(df: DataFrame, id_col: str, vec_col: str, k: int = 1,
     cell's index matrix.
 
     1. collect + broadcast the (tiny) codebook;
-    2. Arrow-batched assignment kernel: one BLAS matmul per batch;
+    2. Arrow-batched assignment kernel: chunked BLAS matmuls;
        per vector, the top-``nprobe`` cells by centroid cosine (ties →
        lowest centroid id); rank 0 is the *home* cell where the vector
        is indexed;
@@ -570,11 +548,13 @@ def ivf_topk(df: DataFrame, id_col: str, vec_col: str, k: int = 1,
        globally (a global top-k neighbor is always inside some probed
        cell's local top-k, so per-cell top-k candidates suffice).
 
-    No per-pair rows ever materialize — the quadratic lives inside a
-    bounded per-cell matmul; check :func:`ivf_cell_stats` first to
-    confirm no cell is hot enough to break that bound.  Output shape
-    matches :func:`brute_force_topk`; vectors alone in their cell
-    yield no rows at nprobe=1 (approximate by design)."""
+    No per-pair rows ever materialize — the quadratic lives inside
+    per-cell matmuls over :func:`_cos_chunks` slices, so both kernels'
+    memory is bounded by ``_SIMS_CHUNK_BYTES`` per chunk whatever the
+    codebook or cell size; a hot cell still costs time, so check
+    :func:`ivf_cell_stats` first.  Output shape matches
+    :func:`brute_force_topk`; vectors alone in their cell yield no rows
+    at nprobe=1 (approximate by design)."""
     import numpy as np
     import pandas as pd
 
@@ -592,30 +572,18 @@ def ivf_topk(df: DataFrame, id_col: str, vec_col: str, k: int = 1,
 
     def cell_topk(key, pdf):
         # index side: home vectors only; query side: every probe row.
-        # One batched matmul + one batched argsort via _emit_topk (raw
-        # cos — rounding happens at the edge, after the global re-rank)
-        idx = pdf[pdf["probe_rank"] == 0]
-        ids_i = idx["vec_id"].to_numpy(dtype=np.int64)
+        # Chunked batched matmuls + batched selection via _emit_topk
+        # (raw cos — rounding happens at the edge, after the global
+        # re-rank).  A cell with no home vector is an empty index, which
+        # _emit_topk answers with its typed empty frame.
         ids_q = pdf["vec_id"].to_numpy(dtype=np.int64)
-        if not len(ids_i) or not len(ids_q):
-            return pd.DataFrame(
-                {f.name: pd.Series(dtype=object) for f in out_schema})
-        by_id = np.argsort(ids_i, kind="stable")  # tie-break order
-        ids_i = ids_i[by_id]
-        mat_i = _vec_matrix(idx["vec"])[by_id]
         mat_q = _vec_matrix(pdf["vec"])
+        home = np.flatnonzero(pdf["probe_rank"].to_numpy() == 0)
+        home = home[np.argsort(ids_q[home], kind="stable")]  # tie order
+        ids_i, mat_i = ids_q[home], mat_q[home]
         norm_i = np.sqrt((mat_i * mat_i).sum(axis=1))
-        norm_q = np.sqrt((mat_q * mat_q).sum(axis=1))
-        # chunk the query rows like the brute-force kernel: a hot cell
-        # would otherwise allocate a |cell|² float64 sims matrix in one
-        # piece (per-query results are independent; identical output)
-        parts = [
-            _emit_topk(
-                ids_q[lo:hi], ids_i,
-                (mat_q[lo:hi] @ mat_i.T)
-                / (norm_q[lo:hi, None] * norm_i[None, :]),
-                k, round_cos=False)
-            for lo, hi in _sims_chunks(len(ids_q), len(ids_i))]
+        parts = [_emit_topk(ids_q[lo:hi], ids_i, cos, k, round_cos=False)
+                 for lo, hi, cos in _cos_chunks(mat_q, mat_i, norm_i)]
         return parts[0] if len(parts) == 1 else pd.concat(
             parts, ignore_index=True)
 
@@ -641,12 +609,13 @@ def train_ivf_codebook(df: DataFrame, id_col: str, vec_col: str,
 
     Each iteration is ONE narrow ``mapInPandas`` pass over the corpus:
     every partition assigns its vectors to their max-cosine centroid
-    with a single BLAS matmul and emits PARTIAL ``(cell, count,
-    sum-of-unit-vectors)`` rows — the map-side combine — and the
-    driver reduces the ≤ ``n_partitions × n_cells`` tiny partials into
-    the next centroid matrix.  The corpus never crosses a shuffle; the
-    only data movement per iteration is ``O(partitions × n_cells ×
-    dim)`` floats.  This is the textbook scalable k-means shape (the
+    with BLAS matmuls over ``_sims_chunks`` row slices (each chunk's
+    float64 matrix within ``_SIMS_CHUNK_BYTES``) and emits PARTIAL
+    ``(cell, count, sum-of-unit-vectors)`` rows — the map-side combine
+    — and the driver reduces the ≤ ``n_partitions × n_cells`` tiny
+    partials into the next centroid matrix.  The corpus never crosses a
+    shuffle; the only data movement per iteration is ``O(partitions ×
+    n_cells × dim)`` floats.  This is the textbook scalable k-means shape (the
     same partial-sum pattern MLlib uses), kept dependency-free and
     cosine-metric to match the assignment kernel.
 
@@ -704,8 +673,11 @@ def train_ivf_codebook(df: DataFrame, id_col: str, vec_col: str,
                 pid = int(pdf["pid"].iloc[0])
                 q = _vec_matrix(pdf["v"])
                 q = q / np.sqrt((q * q).sum(axis=1))[:, None]
-                # stable first-max → lowest cid on ties (ascending cids)
-                cell = (q @ cm.T).argmax(axis=1)
+                # stable first-max → lowest cid on ties (ascending
+                # cids); unit rows, so the matmul is the cosine
+                cell = np.concatenate([
+                    (q[lo:hi] @ cm.T).argmax(axis=1)
+                    for lo, hi in _sims_chunks(len(q), k)])
                 np.add.at(sums, cell, q)
                 cnts += np.bincount(cell, minlength=k)
             nz = np.flatnonzero(cnts)

@@ -5,7 +5,8 @@
   band keys, never a block-wide cross product.
 * n-gram df-cap drops hot grams from candidate generation (pairs that
   rely only on a hot gram disappear; rare-gram pairs survive).
-* LSH band keys are parameterized (bits/bands) with bucket telemetry.
+* LSH top-k under the default sign bands pairs vectors that share
+  their sign pattern.
 """
 
 import itertools
@@ -20,10 +21,7 @@ from table_transformer_spark.operators.dedup import (
     simhash_neardup_pairs,
     simhash_udf,
 )
-from table_transformer_spark.operators.similarity import (
-    lsh_bucket_stats,
-    lsh_bucketed_topk,
-)
+from table_transformer_spark.operators.similarity import lsh_bucketed_topk
 
 
 @pytest.fixture(scope="module")
@@ -114,21 +112,22 @@ def test_ngram_jaccard_counts_exact(spark):
         (1, 2, 2, 4, 1)
 
 
-def test_lsh_bands_parameterized_and_telemetry(spark):
-    rows = [(i, [float(1 if (i + j) % 3 else -1) for j in range(8)])
+def test_lsh_topk_default_bands_ranks_sign_pattern_twins(spark):
+    # three sign patterns (i % 3) over 64 dims: the vectors of one
+    # pattern are identical, so they share every band key of
+    # DEFAULT_SIGN_BANDS and only each other's
+    rows = [(i, [float(1 if (i + j) % 3 else -1) for j in range(64)])
             for i in range(40)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    bands = ((0, 1), (2, 3))  # tiny 2-bit bands → guaranteed collisions
-    stats = lsh_bucket_stats(df, "vec_id", "embedding", bands=bands)
-    pdf = stats.toPandas()
-    assert set(pdf["bi"]) == {0, 1}
-    assert pdf["n_vecs"].sum() == 80  # 40 vecs × 2 bands
-    assert (pdf.groupby("bi")["n_vecs"].sum() == 40).all()
-    topk = lsh_bucketed_topk(df, "vec_id", "embedding", k=1, bands=bands)
-    out = topk.toPandas()
-    # 2-bit buckets over 40 vectors: everyone has a candidate
+    out = lsh_bucketed_topk(df, "vec_id", "embedding", k=1).toPandas()
+    # everyone has a candidate; ties at cos 1.0 go to the lowest id
     assert len(out) == 40
     assert (out["rank"] == 1).all()
+    assert (out["cos"] == 1.0).all()
+    for r in out.itertuples():
+        twins = [j for j in range(40) if j % 3 == r.vec_id % 3
+                 and j != r.vec_id]
+        assert r.neighbor_id == min(twins)
 
 
 def test_salted_join_exact_and_salted_plan(spark):
@@ -338,7 +337,6 @@ def test_lsh_band_relation_is_slim(spark):
     candidate shuffle; vectors are joined back once per deduped pair
     (round-3 verdict, 'What's wrong #3')."""
     from table_transformer_spark.operators.similarity import (
-        DEFAULT_SIGN_BANDS,
         _banded,
         embedding_neardup_pairs,
     )
@@ -346,7 +344,7 @@ def test_lsh_band_relation_is_slim(spark):
     df = spark.createDataFrame(
         [(0, [0.5] * 64), (1, [0.5] * 64), (2, [-0.5] * 64)],
         "vec_id long, embedding array<float>")
-    banded = _banded(df, "vec_id", "embedding", DEFAULT_SIGN_BANDS)
+    banded = _banded(df, "vec_id", "embedding")
     assert banded.columns == ["vec_id", "bi", "bkey"]
     # end-to-end semantics unchanged: identical vectors pair at cos 1.0
     got = {(r.doc1, r.doc2, r.cos)
@@ -478,20 +476,29 @@ def test_minhash_merges_duplicate_doc_ids_like_exploded_path(spark):
     assert out == expected
 
 
-def test_sims_chunking_is_value_identical():
+def test_sims_chunking_is_value_identical(monkeypatch):
     """The memory-bounded probe-row chunking in the brute-force / IVF
     scoring kernels must produce exactly the rows of the unchunked
     matrix path (per-probe-row independence), and chunk bounds must
-    tile [0, n) without gap or overlap."""
+    tile [0, n) without gap or overlap.  The shared ``_cos_chunks``
+    takes the same input: with ``_sims_chunks`` patched to a budget
+    that forces several chunks, its emitted top-k rows and its
+    per-chunk argmax cells equal the unchunked ones, and no chunk's
+    cosine matrix exceeds the budget."""
+    import functools
+
     import numpy as np
     import pandas as pd
 
+    from table_transformer_spark.operators import similarity
     from table_transformer_spark.operators.similarity import (
+        _cos_chunks,
         _emit_topk,
         _sims_chunks,
     )
 
-    spans = list(_sims_chunks(37, 29, budget=8 * 29 * 5))  # 5-row chunks
+    budget = 8 * 29 * 5  # 5-row chunks against a 29-row index
+    spans = list(_sims_chunks(37, 29, budget=budget))
     assert spans[0][0] == 0 and spans[-1][1] == 37
     assert all(a[1] == b[0] for a, b in zip(spans, spans[1:]))
 
@@ -499,17 +506,33 @@ def test_sims_chunking_is_value_identical():
     q = rng.standard_normal((37, 8))
     b = rng.standard_normal((29, 8))
     q_ids = np.arange(100, 137, dtype=np.int64)
-    b_ids = np.arange(110, 139, dtype=np.int64)  # overlaps q → self-pairs
+    # overlaps q → self-pairs; 120 ×3 and 131 ×2 → duplicated index ids
+    b_ids = np.sort(np.concatenate(
+        [np.arange(110, 136), [120, 120, 131]])).astype(np.int64)
     qn = np.sqrt((q * q).sum(axis=1))
     bn = np.sqrt((b * b).sum(axis=1))
     sims = (q @ b.T) / (qn[:, None] * bn[None, :])
-    whole = _emit_topk(q_ids, b_ids, sims, 3)
+    whole = _emit_topk(q_ids, b_ids, sims.copy(), 3)
     parts = [
         _emit_topk(q_ids[lo:hi], b_ids,
                    (q[lo:hi] @ b.T) / (qn[lo:hi, None] * bn[None, :]), 3)
-        for lo, hi in _sims_chunks(37, 29, budget=8 * 29 * 5)]
+        for lo, hi in _sims_chunks(37, 29, budget=budget)]
     chunked = pd.concat(parts, ignore_index=True)
     pd.testing.assert_frame_equal(whole.reset_index(drop=True), chunked)
+
+    monkeypatch.setattr(similarity, "_sims_chunks",
+                        functools.partial(_sims_chunks, budget=budget))
+    chunks = list(_cos_chunks(q, b, bn))
+    assert [(lo, hi) for lo, hi, _ in chunks] == spans
+    assert len(chunks) >= 3
+    assert all(cos.nbytes <= budget for _, _, cos in chunks)
+    np.testing.assert_array_equal(
+        np.concatenate([cos.argmax(axis=1) for _, _, cos in chunks]),
+        sims.argmax(axis=1))
+    via_cos = pd.concat([_emit_topk(q_ids[lo:hi], b_ids, cos, 3)
+                         for lo, hi, cos in chunks], ignore_index=True)
+    pd.testing.assert_frame_equal(whole.reset_index(drop=True), via_cos,
+                                  check_exact=True)
 
 
 def test_emit_topk_partition_selection_matches_stable_sort():
