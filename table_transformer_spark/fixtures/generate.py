@@ -312,12 +312,6 @@ def gen_document(doc_id: str) -> dict:
     return {"doc_id": doc_id, "spans": spans}
 
 
-def gen_corpus(n_docs: int):
-    """Yield n_docs deterministic documents."""
-    for i in range(n_docs):
-        yield gen_document(f"DOC{i:07d}")
-
-
 def corpus_media_refs(doc: dict) -> list[str]:
     return [s["media_ref"] for s in doc["spans"] if s["kind"] == "media"]
 

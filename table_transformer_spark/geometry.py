@@ -29,8 +29,6 @@ __all__ = [
     "overlaps",
     "np_box_area",
     "np_pairwise_intersection",
-    "np_iob_matrix",
-    "np_iou_matrix",
     "np_pair_iob",
     "np_fitz_intersect",
     "np_segment_hull",
@@ -203,16 +201,6 @@ def np_pairwise_intersection(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return np.maximum(x1 - x0, 0.0) * np.maximum(y1 - y0, 0.0)
 
 
-def np_iob_matrix(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """(N, M) matrix of iob(a_i, b_j) — intersection over area of a_i."""
-    inter = np_pairwise_intersection(a, b)
-    areas = np_box_area(a)
-    out = np.zeros_like(inter)
-    nz = areas > 0.0
-    out[nz, :] = inter[nz, :] / areas[nz, None]
-    return out
-
-
 def np_pair_iob(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """iob(a_i, b_i) for two aligned (N, 4) arrays — intersection over
     the area of a_i, 0 where a_i has no area."""
@@ -260,37 +248,4 @@ def np_segment_hull(boxes: np.ndarray, groups: np.ndarray,
         ids = groups[starts]
         out[ids, :2] = np.minimum.reduceat(boxes[:, :2], starts, axis=0)
         out[ids, 2:] = np.maximum.reduceat(boxes[:, 2:], starts, axis=0)
-    return out
-
-
-def np_iou_matrix(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """(N, M) matrix of iou(a_i, b_j) with hull-union semantics."""
-    inter = np_pairwise_intersection(a, b)
-    # hull union (include_rect semantics): skip empty boxes
-    area_a = np_box_area(a)
-    area_b = np_box_area(b)
-    x0 = np.where(
-        area_b[None, :] == 0.0,
-        a[:, None, 0],
-        np.where(area_a[:, None] == 0.0, b[None, :, 0], np.minimum(a[:, None, 0], b[None, :, 0])),
-    )
-    y0 = np.where(
-        area_b[None, :] == 0.0,
-        a[:, None, 1],
-        np.where(area_a[:, None] == 0.0, b[None, :, 1], np.minimum(a[:, None, 1], b[None, :, 1])),
-    )
-    x1 = np.where(
-        area_b[None, :] == 0.0,
-        a[:, None, 2],
-        np.where(area_a[:, None] == 0.0, b[None, :, 2], np.maximum(a[:, None, 2], b[None, :, 2])),
-    )
-    y1 = np.where(
-        area_b[None, :] == 0.0,
-        a[:, None, 3],
-        np.where(area_a[:, None] == 0.0, b[None, :, 3], np.maximum(a[:, None, 3], b[None, :, 3])),
-    )
-    union = np.maximum(x1 - x0, 0.0) * np.maximum(y1 - y0, 0.0)
-    out = np.zeros_like(inter)
-    nz = union > 0.0
-    out[nz] = inter[nz] / union[nz]
     return out

@@ -4,8 +4,9 @@ Re-expresses the reference's ``align`` (``scripts/process_pubmed.py:
 348-429``): a Needleman-Wunsch variant whose gap costs distinguish
 opening vs continuing a gap, gaps after non-space characters, and free
 "page boundary" gaps (page text before/after the table should cost
-almost nothing).  Used by the slow phase of table→page location and by
-``locate_table``-style char anchoring.
+almost nothing).  Used by :mod:`.locate` (the ``locate_table`` and
+``locate_caption`` ports) to anchor page words to table and caption
+text.
 
 Pointer conventions match the reference exactly (0 diag, -1 up/page,
 1 left/table; tie preference diag ≻ up ≻ left) because the traceback
@@ -17,7 +18,7 @@ from __future__ import annotations
 
 import numpy as np
 
-__all__ = ["align_chars", "align_chars_slow", "anchor_words"]
+__all__ = ["align_chars", "align_chars_slow"]
 
 
 def align_chars_slow(page_text: str, table_text: str,
@@ -202,51 +203,3 @@ def align_chars(page_text: str, table_text: str,
             a_page.append(page_text[i])
             a_table.append(table_text[j])
     return ["".join(reversed(a_page)), "".join(reversed(a_table))], score
-
-
-def _aligned_page_positions(page_text: str, table_text: str, **align_kw):
-    """Page-character indices that diagonal-align (match) to table
-    characters, via the traceback of :func:`align_chars`."""
-    (a_page, a_table), _ = align_chars(page_text, table_text, **align_kw)
-    positions = []
-    pi = 0
-    for cp, ct in zip(a_page, a_table):
-        if cp != "_":
-            if ct != "_" and cp == ct:
-                positions.append(pi)
-            pi += 1
-    return positions
-
-
-def anchor_words(page_words, table_text: str, min_char_fraction: float = 0.5,
-                 **align_kw):
-    """Locate the page words whose characters align to *table_text* —
-    the core primitive of ``locate_table``
-    (``scripts/process_pubmed.py:490-569``): char-level alignment →
-    per-word matched-character fraction → words above the fraction are
-    anchored; returns (word indices, hull bbox or None).
-
-    *page_words* are ``{"text": str, "bbox": [...]}`` in reading order;
-    the page string is their space-join (the reference's
-    ``" ".join(word[4] …)`` construction).
-    """
-    from ..geometry import Box
-
-    page_text = " ".join(w["text"] for w in page_words)
-    matched = set(_aligned_page_positions(page_text, table_text, **align_kw))
-
-    picked = []
-    cursor = 0
-    for idx, w in enumerate(page_words):
-        span = range(cursor, cursor + len(w["text"]))
-        hits = sum(1 for c in span if c in matched)
-        if len(w["text"]) > 0 and hits / len(w["text"]) >= min_char_fraction:
-            picked.append(idx)
-        cursor += len(w["text"]) + 1  # the joining space
-
-    if not picked:
-        return [], None
-    hull = Box()
-    for idx in picked:
-        hull.include_rect(page_words[idx]["bbox"])
-    return picked, hull.tolist()

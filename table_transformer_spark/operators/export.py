@@ -19,7 +19,6 @@ pass (``partitioning.map_rows``) — one row per table out, no grouping.
 
 from __future__ import annotations
 
-import io
 import xml.etree.ElementTree as ET
 from collections import OrderedDict, defaultdict
 

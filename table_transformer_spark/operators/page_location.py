@@ -21,7 +21,7 @@ from pyspark.sql import types as T
 
 from ..partitioning import map_rows
 
-__all__ = ["candidate_pages_fast", "rerank_candidates", "locate_tables"]
+__all__ = ["candidate_pages_fast", "rerank_candidates"]
 
 
 def _word_sets(df: DataFrame, id_cols: list[str], text_col: str,
@@ -76,17 +76,3 @@ def rerank_candidates(candidates_with_text: DataFrame) -> DataFrame:
     w = Window.partitionBy("table_id").orderBy(F.col("sim_x1000").desc(),
                                                F.col("page_id").asc())
     return scored.withColumn("rank", F.row_number().over(w))
-
-
-def locate_tables(pages: DataFrame, tables: DataFrame) -> DataFrame:
-    """Full two-phase location: fast filter → slow rerank → top page."""
-    cand = candidate_pages_fast(pages, tables)
-    enriched = (cand
-                .join(tables.select(F.col("table_id"),
-                                    F.col("text").alias("table_text")),
-                      "table_id")
-                .join(pages.select(F.col("page_id"),
-                                   F.col("text").alias("page_text")),
-                      "page_id"))
-    ranked = rerank_candidates(enriched)
-    return ranked.filter(F.col("rank") == 1).drop("rank")

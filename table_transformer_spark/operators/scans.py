@@ -4,9 +4,7 @@
   keys (``span_num`` ← position, ``line_num``/``block_num`` ← 0;
   ``src/inference.py:900-908``) as pure column algebra;
 * PASCAL VOC XML parsing — ``<object><bndbox>`` → (label, bbox) rows via
-  one ``map_rows`` pass (``src/table_datasets.py:23-51``);
-* COCO-style annotation index — ``groupBy(image_id).collect_list``
-  (``src/table_datasets.py:582-611``).
+  one ``map_rows`` pass (``src/table_datasets.py:23-51``).
 """
 
 from __future__ import annotations
@@ -19,7 +17,7 @@ from pyspark.sql import types as T
 
 from ..partitioning import map_rows
 
-__all__ = ["tokens_with_defaults", "parse_voc_annotations", "coco_index"]
+__all__ = ["tokens_with_defaults", "parse_voc_annotations"]
 
 
 def tokens_with_defaults(tokens: DataFrame, order_col: Column | None = None)\
@@ -81,12 +79,3 @@ def parse_voc_annotations(df: DataFrame, id_col: str,
                             for k in ("xmin", "ymin", "xmax", "ymax")]}
 
     return map_rows(df.select(id_col, xml_col), parse, _VOC_SCHEMA)
-
-
-def coco_index(annotations: DataFrame) -> DataFrame:
-    """Image → list-of-annotations index (imgToAnns), keyed on
-    ``source_id``."""
-    return (annotations
-            .groupBy("source_id")
-            .agg(F.collect_list(F.struct("label", "bbox")).alias("anns"),
-                 F.count(F.lit(1)).alias("n_anns")))

@@ -19,12 +19,11 @@ serves the table kernels (canonicalize, standardize, HTML/CSV export,
 cell location, the GriTS metrics of one joined table pair), the
 page-location rerank scorer (one table/page candidate pair), the
 fixture corpus (one document or its pages per id), the NXML
-``<table-wrap>`` and PASCAL VOC scans, the VOC annotation sink and the
-media decode / frame-sample stubs.
+``<table-wrap>`` and PASCAL VOC scans and the VOC annotation sink.
 
 Two kernel families keep their own batch loop on purpose: the matrix
 kernels, which work on a whole batch at once (the four in
-``similarity``, ``media_embedding`` and the fused page kernel), and
+``similarity`` and the fused page kernel), and
 the tokenizer kernels (``dedup`` shingling and signatures,
 ``text_analysis`` signals and term frequencies).  Grouped-map kernels
 are left only where the unit of work is a group: the IVF per-cell

@@ -19,8 +19,6 @@ from __future__ import annotations
 
 import numpy as np
 
-from ..config import DETECTION_LABELS, STRUCTURE_LABELS
-
 __all__ = [
     "box_cxcywh_to_xyxy",
     "rescale_boxes",
@@ -76,34 +74,6 @@ def outputs_to_objects(pred_logits: np.ndarray, pred_boxes: np.ndarray,
             objects.append({"label": name, "score": float(score),
                             "bbox": [float(v) for v in bbox]})
     return objects
-
-
-def post_process(pred_logits: np.ndarray, pred_boxes: np.ndarray,
-                 target_sizes: np.ndarray) -> list[dict]:
-    """Batched COCO-format conversion (``detr/models/detr.py:260-288``
-    ``PostProcess.forward``), vectorized numpy over a whole batch.
-
-    Semantics differ from :func:`outputs_to_objects` deliberately,
-    matching the reference pair: the max is over the REAL classes only
-    (``prob[..., :-1]`` — 'no object' excluded), every query is kept
-    (no thresholding, no dropping), and boxes scale by the per-image
-    (height, width) target size.  Inputs: ``pred_logits`` (B, Q, C+1),
-    ``pred_boxes`` (B, Q, 4) cxcywh, ``target_sizes`` (B, 2) as
-    (height, width) rows.  Returns one {scores, labels, boxes} dict
-    per image, arrays of length Q."""
-    assert len(pred_logits) == len(target_sizes)
-    assert target_sizes.shape[1] == 2
-    prob = _softmax(pred_logits)[..., :-1]      # (B, Q, C)
-    labels = prob.argmax(axis=-1)               # (B, Q)
-    scores = prob.max(axis=-1)
-    results = []
-    for logits_i, boxes_i, scores_i, labels_i, (h, w) in zip(
-            pred_logits, pred_boxes, scores, labels, target_sizes):
-        xyxy = box_cxcywh_to_xyxy(boxes_i) * np.array(
-            [w, h, w, h], dtype=np.float64)
-        results.append({"scores": scores_i, "labels": labels_i,
-                        "boxes": xyxy})
-    return results
 
 
 def fake_forward(objects: list[dict], img_size: tuple[float, float],

@@ -21,26 +21,6 @@ from . import schemas
 from .extract import extract
 
 
-def windowed_event_stream(spark: SparkSession, events_dir: str,
-                          event_schema, window: str = "5 minutes",
-                          watermark: str = "10 minutes"):
-    """Watermarked tumbling-window aggregation over an event stream —
-    the Structured-Streaming twin of the batch ``windowed_event_counts``
-    query (late data beyond the watermark is dropped; append mode emits
-    a window once it can no longer change).
-    """
-    from pyspark.sql import functions as F
-
-    stream = (spark.readStream.schema(event_schema).parquet(events_dir))
-    # watermarks require a zoned timestamp; parquet NTZ timestamps cast
-    return (stream
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .withWatermark("ts", watermark)
-            .groupBy(F.window("ts", window), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.round(F.sum("value"), 2).alias("sum_value")))
-
-
 SESSION_OUTPUT_SCHEMA = ("user_id long, session_start long, "
                          "session_end long, n_events long")
 SESSION_STATE_SCHEMA = "session_start long, last_ts long, n_events long"

@@ -56,30 +56,6 @@ def test_empty_sides():
     assert ap == "abc"
 
 
-def word(text, x):
-    return {"text": text, "bbox": [x, 0.0, x + len(text) * 5.0, 10.0]}
-
-
-def test_anchor_words_locates_table_region():
-    from table_transformer_spark.kernels.alignment import anchor_words
-
-    words = [word("intro", 0), word("prose", 40),
-             word("alpha", 100), word("beta", 140), word("gamma", 180),
-             word("trailing", 300)]
-    picked, hull = anchor_words(words, "alpha beta gamma")
-    assert picked == [2, 3, 4]
-    assert hull == [100.0, 0.0, 205.0, 10.0]
-
-
-def test_anchor_words_no_match():
-    from table_transformer_spark.kernels.alignment import anchor_words
-
-    words = [word("xxxx", 0), word("yyyy", 40)]
-    picked, hull = anchor_words(words, "zzzzzzzz qqqqqq")
-    assert picked == []
-    assert hull is None
-
-
 def test_align_chars_fast_equals_slow_hypothesis():
     from hypothesis import given, settings
     from hypothesis import strategies as st

@@ -8,6 +8,7 @@ import os
 
 import duckdb
 import pytest
+from pyspark.sql import Row
 
 import table_transformer_spark.driver_queries as dq
 
@@ -28,6 +29,12 @@ def ddb():
 
 
 def canon(value):
+    # the driver's checker sorts rows with pandas, which fails on
+    # unhashable or nested cells; refuse them here so an array, struct,
+    # map or binary output column fails locally too
+    if isinstance(value, (list, tuple, dict, bytes, bytearray)):
+        raise TypeError(
+            f"non-scalar cell of type {type(value).__name__}: {value!r}")
     if value is None:
         return "<null>"
     if isinstance(value, float):
@@ -51,6 +58,13 @@ def duck_rows(con, sql):
     rows = res.fetchall()
     return sorted(names), sorted(
         tuple(canon(row[i]) for i in order) for row in rows)
+
+
+@pytest.mark.parametrize("value", [[1], (1,), Row(a=1), {"a": 1},
+                                   b"\x00", bytearray(b"\x00")])
+def test_canon_refuses_non_scalar_cells(value):
+    with pytest.raises(TypeError, match=type(value).__name__):
+        canon(value)
 
 
 @pytest.mark.parametrize("name", sorted(dq.QUERIES))

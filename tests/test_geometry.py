@@ -15,8 +15,6 @@ from table_transformer_spark.geometry import (
     iob,
     iou,
     np_fitz_intersect,
-    np_iob_matrix,
-    np_iou_matrix,
     np_pair_iob,
     np_segment_hull,
     overlaps,
@@ -89,19 +87,6 @@ def test_iob_bounds_and_containment(b1, b2):
 @given(boxes(), boxes())
 def test_iou_symmetry(b1, b2):
     assert iou(b1, b2) == pytest.approx(iou(b2, b1), abs=1e-9)
-
-
-@given(st.lists(boxes(), min_size=1, max_size=8),
-       st.lists(boxes(), min_size=1, max_size=8))
-def test_np_matrices_match_scalar(bs1, bs2):
-    a = np.asarray(bs1, dtype=float)
-    b = np.asarray(bs2, dtype=float)
-    iob_m = np_iob_matrix(a, b)
-    iou_m = np_iou_matrix(a, b)
-    for i, x in enumerate(bs1):
-        for j, y in enumerate(bs2):
-            assert iob_m[i, j] == pytest.approx(iob(x, y), abs=1e-9)
-            assert iou_m[i, j] == pytest.approx(iou(x, y), abs=1e-9)
 
 
 @given(st.lists(st.tuples(st.tuples(coord, coord, coord, coord),

@@ -16,7 +16,7 @@ import pytest
 
 from table_transformer_spark.fixtures.generate import (
     expected_spans_clean,
-    gen_corpus,
+    gen_document,
 )
 from table_transformer_spark.fixtures.spark_io import documents_df, media_df
 from table_transformer_spark.pipeline import schemas
@@ -48,7 +48,7 @@ def test_clean_mode_matches_designed_truth(spark, corpus):
     got = collect_spans(extract(docs, media, mode="clean"))
 
     expected = {}
-    for doc in gen_corpus(N_DOCS):
+    for doc in (gen_document(f"DOC{i:07d}") for i in range(N_DOCS)):
         spans = expected_spans_clean(doc)
         expected[doc["doc_id"]] = [(s["kind"], s["text"], s["media_ref"])
                                    for s in spans]
@@ -132,7 +132,7 @@ def _local_reference_run(n_docs, mode):
 
     pad = DEFAULT_CROP_PADDING
     spans_by_doc, cell_rows = {}, []
-    for doc in gen_corpus(n_docs):
+    for doc in (gen_document(f"DOC{i:07d}") for i in range(n_docs)):
         spans = []
         for span in sorted(doc["spans"], key=lambda s: s["offset"]):
             if span["kind"] == "text":

@@ -1,7 +1,5 @@
 """Structured Streaming ingestion + scan-side operators."""
 
-import pytest
-
 from pyspark.sql import functions as F
 
 
@@ -56,10 +54,7 @@ VOC = """<annotation><filename>p1.jpg</filename>
 
 
 def test_parse_voc_annotations(spark):
-    from table_transformer_spark.operators.scans import (
-        coco_index,
-        parse_voc_annotations,
-    )
+    from table_transformer_spark.operators.scans import parse_voc_annotations
 
     df = spark.createDataFrame([("img1", VOC), ("img2", "<bad")],
                                ["source_id", "xml"])
@@ -69,10 +64,6 @@ def test_parse_voc_annotations(spark):
     assert {r.label for r in rows} == {"table", "table rotated"}
     assert [r.bbox for r in rows if r.label == "table"][0] == \
         [10.0, 20.0, 110.0, 220.0]
-
-    idx = coco_index(anns).collect()
-    assert idx[0].n_anns == 2
-
 
 
 def test_parse_voc_annotations_all_malformed_is_typed_empty(spark):
@@ -90,24 +81,6 @@ def test_parse_voc_annotations_all_malformed_is_typed_empty(spark):
     anns = parse_voc_annotations(df, "source_id", "xml")
     assert anns.schema == _VOC_SCHEMA
     assert anns.collect() == []
-
-def test_locate_tables_two_phase(spark):
-    """A table snippet derived from a doc must locate back to that doc
-    as the top-ranked page."""
-    from pyspark.sql import functions as F
-
-    from table_transformer_spark.operators.page_location import locate_tables
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    pages = docs.select(F.col("doc_id").alias("page_id"), "text")
-    tables = (docs.filter(F.col("doc_id") % 100 == 0)
-              .select(F.col("doc_id").alias("table_id"),
-                      F.array_join(F.slice(F.split("text", " "), 1, 20), " ")
-                      .alias("text")))
-    top = {r.table_id: r.page_id for r in locate_tables(pages, tables).collect()}
-    n_right = sum(1 for t, p in top.items() if t == p)
-    # tiny synthetic vocabulary → occasional full-subsequence collisions
-    assert n_right >= 0.6 * len(top)
 
 
 def test_rerank_candidates_breaks_ties_on_page_id(spark):
@@ -131,38 +104,6 @@ def test_rerank_candidates_breaks_ties_on_page_id(spark):
     assert 0 < tie < 1000
     assert got == [(1, 1, 7, 1000), (1, 2, 2, tie), (1, 3, 4, tie),
                    (1, 4, 9, tie), (2, 1, 1, 1000), (2, 2, 3, 1000)]
-
-
-def test_windowed_event_stream_matches_batch(spark, tmp_path):
-    """Watermark + tumbling window streaming agg == batch aggregation
-    once the stream is fully drained (availableNow semantics)."""
-    from pyspark.sql import functions as F
-
-    from table_transformer_spark.pipeline.streaming import (
-        windowed_event_stream,
-    )
-
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    events_dir = str(tmp_path / "events")
-    events.write.parquet(events_dir)
-
-    agg = windowed_event_stream(spark, events_dir, events.schema)
-    q = (agg.writeStream.outputMode("complete")
-         .format("memory").queryName("win_out")
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    got = sorted((r["window"]["start"], r["event_type"], r["n"],
-                  r["sum_value"])
-                 for r in spark.sql("SELECT * FROM win_out").collect())
-    want = sorted((r["window"]["start"], r["event_type"], r["n"],
-                   r["sum_value"])
-                  for r in (events.groupBy(F.window("ts", "5 minutes"),
-                                           "event_type")
-                            .agg(F.count(F.lit(1)).alias("n"),
-                                 F.round(F.sum("value"), 2)
-                                 .alias("sum_value"))).collect())
-    assert got == want
 
 
 class FakeState:
